@@ -18,7 +18,9 @@ through :func:`materialize`, which picks the mechanism per deployment:
   truncation, so executor loss RECOMPUTES instead of failing; right when
   the upstream plan is cheap-to-replay and deterministic. (Unpersisting is
   left to session teardown / ``clearCache``, matching the operators'
-  existing ``.cache()`` lifecycle contract.)
+  existing ``.cache()`` lifecycle contract.) A recompute is not the same
+  relation when the plan samples (``repartitionByRange`` boundaries), so
+  ``eager=True`` — the pin request — still uses ``localCheckpoint``.
 
 Profile selection is an env var rather than a per-call argument because the
 choice is a property of the DEPLOYMENT, not of any one operator:
@@ -46,11 +48,11 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     iterative rounds) stop re-executing its plan; the mechanism follows
     the ``OLAKE_MATERIALIZE`` deployment profile (default ``local``).
 
-    ``eager=True`` forces materialization NOW (only meaningful for the
-    checkpoint-based profiles — callers that must pin a physical
-    partitioning before reading it, e.g. ``ids.with_sequential_ids``).
-    Under ``persist`` the storage level is registered lazily either way;
-    the first action populates it.
+    ``eager=True`` PINS the result now, under every profile: callers
+    that must read one physical partitioning from several consumers
+    (``ids.dense_ids``, ``packing.length_buckets``) get a checkpoint,
+    never a persist whose evicted blocks would recompute with fresh
+    range boundaries.
     """
     mode = os.environ.get(_MODE_ENV, "local").strip().lower() or "local"
     if mode not in _VALID:
@@ -68,6 +70,6 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
                 )
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
-    if mode == "persist":
+    if mode == "persist" and not eager:
         return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df.localCheckpoint(eager=eager)

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from olake_spark import hybrid
+from olake_spark.exact import round_half_up6, spark_median_np
 from olake_spark.materialize import materialize
 
 __all__ = [
@@ -159,96 +161,36 @@ def corpus_diff_summary(diff: DataFrame) -> DataFrame:
     return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
 
 
-def _spark_median_np(sorted_vals) -> float:
-    """Spark's exact Percentile(0.5) interpolation over a SORTED array,
-    op for op: position = 0.5·(n−1), result = (higher−position)·v[lower]
-    + (position−lower)·v[higher] — NOT (a+b)/2, whose single rounding
-    can differ in the last bit."""
-    n = len(sorted_vals)
-    position = 0.5 * (n - 1)
-    lower = math.floor(position)
-    higher = math.ceil(position)
-    if lower == higher:
-        return float(sorted_vals[lower])
-    return (higher - position) * float(sorted_vals[lower]) + (
-        position - lower
-    ) * float(sorted_vals[higher])
-
-
-def _outlier_stats_driver(
-    df: DataFrame, group_col: str, value_col: str, k: float, cap: int
-):
-    """Hybrid fast path (the graph/median_mad precedent): when the
-    (group, value) projection fits the driver (``cap`` rows), one Arrow
-    collect + numpy replaces the two grouped exact-median aggregates,
-    the deviation re-join and the counting aggregate — each a separate
-    shuffle of tiny relations at bench scale. Exactness: the median
-    mirrors Spark's Percentile interpolation op-for-op
-    (``_spark_median_np``), the deviation/cut/flag comparisons are the
-    same IEEE sequence ((k·1.4826)·mad, abs(v−med) >), and the output
-    rounds via the HALF_UP round-6 mirror. NULL values ride an explicit
-    isnull flag (Arrow folds NULL and NaN together otherwise); rows with
-    REAL NaN values fall back to the dataflow, whose NaN ordering
-    semantics (NaN greater than everything) numpy does not share."""
+def _outlier_stats_driver(got, k: float) -> list:
+    """Driver mirror of the outlier dataflow below: the median follows
+    Spark's Percentile interpolation op for op (``spark_median_np``), the
+    deviation/cut/flag comparisons are the same IEEE sequence
+    ((k·1.4826)·mad, abs(v−med) >), and the output rounds via the HALF_UP
+    round-6 mirror. NULL values ride an explicit ``_isnull`` flag (Arrow
+    folds NULL and NaN together in pandas); a REAL NaN value falls back to
+    the dataflow, whose NaN ordering (greater than everything) numpy does
+    not share."""
     import numpy as np
 
-    from olake_spark.operators.correlation import _round_half_up6
-
-    v = F.col(value_col).cast("double")
-    proj = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(group_col).isNull().cast("int").alias("_gisnull"),
-        v.alias("_v"),
-        v.isNull().cast("int").alias("_isnull"),
-    )
-    pdf = proj.limit(cap + 1).toPandas()
-    if len(pdf) > cap:
-        return None
-    vals_mask = pdf["_isnull"].to_numpy() == 0
-    vv = pdf["_v"].to_numpy(dtype=np.float64)
-    if np.isnan(vv[vals_mask]).any():
-        return None
-    gtype = proj.schema["_g"].dataType.simpleString()
+    valid = got.pdf["_isnull"].to_numpy() == 0
+    if np.isnan(got.pdf["_v"].to_numpy(dtype=np.float64)[valid]).any():
+        raise hybrid.Fallback("NaN value")
     rows = []
-    kc = k * 1.4826
-    for kv, g in pdf.groupby(["_g", "_gisnull"], dropna=False, sort=False):
-        key, gisnull = kv
-        key = key.item() if hasattr(key, "item") else key
-        if gisnull:
-            key = None  # NULL group key (Arrow may surface it as NaN)
-        elif key is not None and key != key:
-            # a REAL NaN group key: the dataflow's string sentinel keeps
-            # it a distinct "NaN" group — numpy grouping can't; fall back
-            return None
-        gm = g["_isnull"].to_numpy() == 0
-        x = g["_v"].to_numpy(dtype=np.float64)[gm]
-        n = int(gm.sum())
-        n_nulls = int(len(g) - n)
+    for (key,), g in got.groups(["_g"]):
+        x = np.sort(g["_v"].to_numpy(dtype=np.float64)[g["_isnull"].to_numpy() == 0])
+        n = len(x)
         if n == 0:
-            rows.append([key, 0, n_nulls, None, None, 0, None])
+            rows.append([key, 0, len(g), None, None, 0, None])
             continue
-        x.sort()
-        med = _spark_median_np(x)
+        med = spark_median_np(x)
         ad = np.abs(x - med)
-        mad = _spark_median_np(np.sort(ad))
-        n_out = int((ad > kc * mad).sum())
-        rows.append(
-            [
-                key,
-                n,
-                n_nulls,
-                _round_half_up6(med),
-                _round_half_up6(mad),
-                n_out,
-                _round_half_up6(n_out / float(n)),
-            ]
-        )
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        rows,
-        f"{group_col} {gtype}, n long, n_nulls long, median double, "
-        "mad double, n_outliers long, outlier_frac double",
-    )
+        mad = spark_median_np(np.sort(ad))
+        n_out = int((ad > k * 1.4826 * mad).sum())
+        rows.append([
+            key, n, len(g) - n, round_half_up6(med), round_half_up6(mad),
+            n_out, round_half_up6(n_out / float(n)),
+        ])
+    return rows
 
 
 def numeric_outlier_stats(
@@ -289,15 +231,23 @@ def numeric_outlier_stats(
     independently so skew is bounded by the largest group) + one counting
     aggregate, joined on the (few) group keys. Internal columns are
     ``_``-prefixed so input frames carrying columns named n/median/mad
-    cannot collide.
+    cannot collide. Hybrid execution: README "Hybrid execution".
     """
-    if driver_collect_max > 0:
-        fast = _outlier_stats_driver(
-            df, group_col, value_col, k, driver_collect_max
-        )
-        if fast is not None:
-            return fast
     v = F.col(value_col).cast("double")
+    proj = df.select(
+        F.col(group_col).alias("_g"),
+        v.alias("_v"),
+        v.isNull().cast("int").alias("_isnull"),
+    )
+    gtype = proj.schema["_g"].dataType.simpleString()
+    fast = hybrid.run(
+        "audit.numeric_outlier_stats", proj, driver_collect_max,
+        lambda got: _outlier_stats_driver(got, k),
+        f"{group_col} {gtype}, n long, n_nulls long, median double, "
+        "mad double, n_outliers long, outlier_frac double",
+    )
+    if fast is not None:
+        return fast
     # null-safe join key: NULL group → sentinel (\x00-prefixed so no real
     # value collides); every internal join runs on this, never the raw key
     gk = F.coalesce(F.col(group_col).cast("string"), F.lit("\x00<null>"))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from olake_spark.operators.quality import BPE_PRETOKEN_RE
 
+from olake_spark import hybrid
 from olake_spark.materialize import materialize
 
 __all__ = [
@@ -138,7 +139,7 @@ def encode_distinct_pretokens(
     return pretokens.mapInPandas(kernel, "pt string, n_toks long, tok_str string")
 
 
-def _bpe_train_driver(spark, pdf, n_merges: int) -> DataFrame:
+def _bpe_train_driver(pdf, n_merges: int) -> list:
     """Driver-side mirror of the unrolled training plan: the SAME
     recurrence on the collected (pretoken, weight) vocabulary — per round
     a weighted adjacent-pair count over the separator-wrapped state
@@ -175,7 +176,7 @@ def _bpe_train_driver(spark, pdf, n_merges: int) -> DataFrame:
         rep = SEP + a + b + SEP
         for it in items:
             it[0] = it[0].replace(pat, rep)
-    return spark.createDataFrame(rows, "rank int, a string, b string, cnt long")
+    return rows
 
 
 def bpe_train_merges(
@@ -186,10 +187,11 @@ def bpe_train_merges(
     driver_collect_max: int = 1_000_000,
 ) -> DataFrame:
     """DISTRIBUTED BPE TRAINING: learn the top ``n_merges`` merges from the
-    corpus (Sennrich et al. 2016). Hybrid execution: a vocabulary that
-    fits the driver (``driver_collect_max`` rows, 0 disables) trains via
-    one Arrow collect + the exact Python mirror (``_bpe_train_driver``);
-    past the cap it runs as ONE lazy plan — no driver-side argmax.
+    corpus (Sennrich et al. 2016). Hybrid execution (README "Hybrid
+    execution"): a vocabulary of at most ``driver_collect_max`` distinct
+    pretokens (0 disables) trains via the exact Python mirror
+    (``_bpe_train_driver``); past the cap it runs as ONE lazy plan — no
+    driver-side argmax.
 
     Classic BPE training is a loop of "count adjacent symbol pairs, merge
     the most frequent everywhere"; the data-dependent step (which pair won)
@@ -228,18 +230,13 @@ def bpe_train_merges(
         .groupBy("pt")
         .agg(F.count(F.lit(1)).alias("wt"))
     )
-    if driver_collect_max > 0:
-        # Hybrid execution (the graph/median_mad precedent): training
-        # state is VOCABULARY-sized (distinct pretokens, Zipf-bounded),
-        # orders of magnitude smaller than the corpus — when it fits the
-        # driver (row cap; 0 disables), one Arrow collect + the exact
-        # Python mirror replaces 6 rounds × (explode + 2 aggregations +
-        # crossJoin + 2 materializations) of tiny-relation stage latency.
-        # Vocabularies past the cap take the lazy unrolled plan below —
-        # that path is the at-scale story.
-        pdf = pts.limit(driver_collect_max + 1).toPandas()
-        if len(pdf) <= driver_collect_max:
-            return _bpe_train_driver(df.sparkSession, pdf, int(n_merges))
+    fast = hybrid.run(
+        "bpe.bpe_train_merges", pts, driver_collect_max,
+        lambda got: _bpe_train_driver(got.pdf, int(n_merges)),
+        "rank int, a string, b string, cnt long",
+    )
+    if fast is not None:
+        return fast
     # (?s): Java '.' skips Unicode line terminators (U+2028/29, U+0085)
     # without DOTALL, while RE2's matches them — such chars are legal
     # inside symbol-run pretokens, and an unwrapped one would fuse into a

@@ -25,80 +25,46 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from olake_spark import hybrid
+from olake_spark.exact import round_half_up6
+
 __all__ = ["corr_matrix", "kendall_tau_b", "ols2", "spearman_matrix"]
 
 _D38 = "decimal(38,0)"
 
 # driver-path headroom: with |x| < 2^42 and n <= 2^20 rows, every hi/lo
 # partial sum (hh<<42, hl/lh<<21, ll) stays under 2^63 — see
-# _pearson_driver. The row cap AND this value bound gate the fast path.
+# _pearson_driver. Both bounds gate the fast path, whatever the row cap.
 _DRIVER_ABS_MAX = 1 << 42
+_DRIVER_MAX_ROWS = 1 << 20
 
 
-def _round_half_up6(val: float) -> float:
-    """Spark's Round(double, 6): java BigDecimal.valueOf(d) parses the
-    SHORTEST round-trip decimal string (same string repr() yields), then
-    setScale(6, HALF_UP) — replicated digit-for-digit via the decimal
-    module."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(val)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
-    )
-
-
-def _pearson_driver(
-    df: DataFrame,
-    x: dict,
-    cols: list,
-    by: list,
-    out_col: str,
-    driver_collect_max: int,
-):
-    """Hybrid fast path (the graph/median_mad/bpe precedent): collect the
-    SPARK-quantized long values (the ``x`` expressions cast to long — the
-    input quantization never leaves Spark) and accumulate the exact
-    k(k+3)/2 moments in numpy int64 via hi/lo splitting:
+def _pearson_driver(got, cols: list, xnames: list, by: list) -> list:
+    """Driver mirror of the exact-moment dataflow over the SPARK-quantized
+    long values (the ``x`` expressions cast to long — the input
+    quantization never leaves Spark), accumulated in numpy int64 via
+    hi/lo splitting:
 
         x = h·2^21 + l  (floor split, negatives included) →
         Σ x·y = (Σ h_x h_y)·2^42 + (Σ h_x l_y + Σ l_x h_y)·2^21 + Σ l_x l_y
 
-    with every partial sum provably < 2^63 under the row cap (≤ 2^20)
-    and the |x| < 2^42 bound; the three partials recombine in arbitrary-
+    with every partial sum < 2^63 under the n ≤ 2^20 row bound and the
+    |x| < 2^42 value bound; the three partials recombine in arbitrary-
     precision Python ints, so the moments are IDENTICAL to the
     DECIMAL(38,0) dataflow's. The finish replicates the dataflow's float
     sequence exactly: one decimal→double cast (float(int): same
     round-to-nearest), IEEE sqrt/multiply/divide, and the HALF_UP
-    round-6 (``_round_half_up6``). Returns None (→ distributed decimal
-    dataflow, the at-scale path) when the relation exceeds the cap,
-    holds NULLs, or exceeds the value headroom."""
+    round-6."""
     import numpy as np
-    from itertools import combinations as _comb
 
-    spark = df.sparkSession
-    xnames = [f"_x_{i}" for i in range(len(cols))]
-    proj = df.select(
-        *by, *[x[c].cast("long").alias(nm) for c, nm in zip(cols, xnames)]
-    )
-    pdf = proj.limit(driver_collect_max + 1).toPandas()
-    if len(pdf) > driver_collect_max:
-        return None
-    if pdf[xnames].isna().any().any():
-        return None  # NULL moments: keep the dataflow's skip-null sums
-    if by and pdf[by].isna().any().any():
-        return None
-    by_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in proj.select(*by).schema.fields
-    )
-    out_schema = (by_schema + ", " if by_schema else "") + (
-        f"col_a string, col_b string, n long, {out_col} double"
-    )
-    pair_list = list(_comb(range(len(cols)), 2))
-
-    def _emit(kt: tuple, g) -> list:
-        X = g[list(xnames)].to_numpy(dtype=np.int64)
-        if len(X) and int(np.abs(X).max()) >= _DRIVER_ABS_MAX:
-            return None  # headroom exceeded → whole call falls back
+    X_all = got.pdf[xnames].to_numpy(dtype=np.int64)
+    if ((X_all >= _DRIVER_ABS_MAX) | (X_all <= -_DRIVER_ABS_MAX)).any():
+        raise hybrid.Fallback("|x| >= 2^42 micro-units")
+    rows = []
+    # an empty keyless input still aggregates to one row (n=0, NULL sums →
+    # NULL stats), which the explode fans into one row per pair
+    for kt, g in got.groups(by):
+        X = g[xnames].to_numpy(dtype=np.int64)
         n = len(X)
         H = X >> 21  # arithmetic shift == floor division for negatives
         L = X - (H << 21)
@@ -110,36 +76,17 @@ def _pearson_driver(
             ll = int(L[:, i] @ L[:, j])
             return (hh << 42) + (hl << 21) + ll
 
-        rows = []
-        for i, j in pair_list:
+        for i, j in combinations(range(len(cols)), 2):
             num = n * moment(i, j) - s[i] * s[j]
             ra = n * moment(i, i) - s[i] * s[i]
             rb = n * moment(j, j) - s[j] * s[j]
             val = None
             if ra > 0 and rb > 0:
-                val = _round_half_up6(
+                val = round_half_up6(
                     float(num) / (math.sqrt(float(ra)) * math.sqrt(float(rb)))
                 )
             rows.append([*kt, cols[i], cols[j], n, val])
-        return rows
-
-    rows = []
-    if by:
-        for kv, g in pdf.groupby(by, dropna=False, sort=False):
-            kt = kv if isinstance(kv, tuple) else (kv,)
-            kt = tuple(k.item() if hasattr(k, "item") else k for k in kt)
-            part = _emit(kt, g)
-            if part is None:
-                return None
-            rows.extend(part)
-    else:
-        # an empty keyless input still aggregates to one row (n=0, NULL
-        # sums → NULL stats), which the explode fans into one row per pair
-        part = _emit((), pdf)
-        if part is None:
-            return None
-        rows.extend(part)
-    return spark.createDataFrame(rows, out_schema)
+    return rows
 
 
 def _pairwise_pearson(
@@ -158,10 +105,25 @@ def _pairwise_pearson(
     combinable, still one scan."""
     cols = list(x)
     by = list(by or [])
-    if driver_collect_max > 0:
-        fast = _pearson_driver(df, x, cols, by, out_col, driver_collect_max)
-        if fast is not None:
-            return fast
+    xnames = [f"_x_{i}" for i in range(len(cols))]
+    proj = df.select(
+        *by, *[x[c].cast("long").alias(nm) for c, nm in zip(cols, xnames)]
+    )
+    by_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in proj.select(*by).schema.fields
+    )
+    out_schema = (by_schema + ", " if by_schema else "") + (
+        f"col_a string, col_b string, n long, {out_col} double"
+    )
+    fast = hybrid.run(
+        f"correlation.{out_col}", proj, driver_collect_max,
+        lambda got: _pearson_driver(got, cols, xnames, by), out_schema,
+        # a NULL moment input keeps the dataflow's skip-null sums
+        non_null=xnames, integer=xnames, max_rows=_DRIVER_MAX_ROWS,
+    )
+    if fast is not None:
+        return fast
     aggs = [F.count(F.lit(1)).cast(_D38).alias("_n")]
     for c in cols:
         aggs.append(F.sum(x[c]).alias(f"_s_{c}"))
@@ -210,7 +172,8 @@ def corr_matrix(
     skip NULLs — so a column with NULLs biases its pairs (the standard
     one-pass trade-off; pairwise-complete would need a pass per pair).
     Callers with NULLs should filter first; the audit family's
-    completeness checks exist to catch exactly this upstream."""
+    completeness checks exist to catch exactly this upstream. Hybrid
+    execution: README "Hybrid execution"."""
     if len(cols) < 2:
         raise ValueError(f"need at least 2 columns, got {cols!r}")
     x = {

@@ -75,6 +75,7 @@ def hash60(col: Column) -> Column:
 
 from olake_spark.sources.files import spread  # noqa: E402  (re-export for operators)
 
+from olake_spark import hybrid
 from olake_spark.materialize import materialize
 
 
@@ -329,15 +330,12 @@ def connected_components(
     the per-round count() is a cheap driver sync on an aggregated frame.
     ``max_iters`` bounds pathological chains. Output: (id_col, cluster_id).
 
-    **Hybrid execution.** The edge set after banding + threshold
-    verification is orders of magnitude smaller than the corpus (it holds
-    only confirmed near-dup pairs). When it fits the driver
-    (``driver_collect_max`` edges, ~32 MB at the default — raise/lower to
-    taste, 0 disables), a single collect + union-find replaces the
-    iterative loop: one job instead of 2-4 rounds of shuffles, identical
-    labels. Corpora whose duplicate subgraph is genuinely huge take the
-    distributed loop. The edge count that picks the path is an action
-    the loop's first convergence sync would have paid anyway.
+    **Hybrid execution** (README "Hybrid execution"): the verified edge
+    set holds only confirmed near-dup pairs. Up to ``driver_collect_max``
+    edges (0 disables) with integer ids, a union-find on the driver
+    replaces the iterative loop: one job instead of 2-4 rounds of
+    shuffles, identical labels. Larger duplicate subgraphs and other id
+    types take the distributed loop.
 
     ``checkpoint_dir`` selects RELIABLE checkpointing (files under the given
     fault-tolerant dir — survives executor loss; set it on any real
@@ -356,49 +354,28 @@ def connected_components(
     edges = _ck(
         pairs.select(F.col(pair_a).alias("src"), F.col(pair_b).alias("dst"))
         .unionByName(pairs.select(F.col(pair_b).alias("src"), F.col(pair_a).alias("dst")))
-        # a NULL endpoint is no edge — and on the driver fast path a single
-        # NULL would promote the pandas int64 columns to float64, where
-        # int(nan) raises and ids above 2^53 silently lose precision
+        # a NULL endpoint is no edge
         .na.drop()
         .distinct()
     )
-    spark = ids.sparkSession
-    if driver_collect_max > 0:
-        # materializes the checkpoint; the loop's first convergence sync
-        # would have paid this same job. Arrow-batched toPandas, not
-        # collect(): two int64 columns transfer as ~16 B/edge (~16 MB at
-        # the 1M default) where a list of Row objects costs ~10× that in
-        # Python object overhead. Driver footprint is then dominated by
-        # the union-find dict (~100-200 MB worst-case at 2M distinct
-        # nodes) — acceptable for a driver, and the cap bounds it.
-        pdf = edges.limit(driver_collect_max + 1).toPandas()
-        if len(pdf) <= driver_collect_max:
-            import numpy as _np
-
-            if len(pdf) and not all(
-                _np.issubdtype(pdf[c].dtype, _np.integer) for c in ("src", "dst")
-            ):
-                # belt-and-braces after na.drop(): a FLOAT dtype here would
-                # mean a lossy >2^53 id path into the union-find — fail,
-                # don't corrupt. Any integer width (int32 ids are common)
-                # is lossless and fine; the guard only applies when the
-                # driver fast path is actually taken.
-                raise TypeError(
-                    f"connected_components edge ids collected as "
-                    f"{dict(pdf.dtypes)} — expected integer dtypes"
-                )
-            # tolist(): plain Python ints — numpy scalars of any width
-            # (int32 ids included) would trip createDataFrame's LongType
-            labels_rows = _union_find_labels(
-                zip(pdf["src"].to_numpy().tolist(), pdf["dst"].to_numpy().tolist())
-            )
-            labels = spark.createDataFrame(labels_rows, "node long, label long")
-            return ids.join(
-                labels.withColumnRenamed("node", id_col), id_col, "left"
-            ).select(
-                F.col(id_col),
-                F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
-            )
+    # collecting materializes the checkpoint, a job the loop's first
+    # convergence sync would have paid anyway; int ids keep the union-find
+    # exact (a float id would lose precision above 2^53)
+    labels = hybrid.run(
+        "dedup.connected_components", edges, driver_collect_max,
+        lambda got: _union_find_labels(
+            zip(got.pdf["src"].tolist(), got.pdf["dst"].tolist())
+        ),
+        "node {0}, label {0}".format(edges.schema["src"].dataType.simpleString()),
+        integer=("src", "dst"),
+    )
+    if labels is not None:
+        return ids.join(
+            labels.withColumnRenamed("node", id_col), id_col, "left"
+        ).select(
+            F.col(id_col),
+            F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
+        )
     # only nodes that appear in a pair iterate — singletons (the vast
     # majority of any real corpus) label themselves without touching the
     # loop, so every per-round shuffle carries just the duplicate subgraph

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from olake_spark import hybrid
 from olake_spark.materialize import materialize
 
 __all__ = [
@@ -38,71 +39,44 @@ TOTAL_MASS = 10**12
 DAMP_NUM = 85  # damping 0.85 as the exact rational 85/100
 
 
-def _pagerank_edges_np(e: DataFrame, driver_collect_max: int):
-    """Arrow-collect the distinct (src, dst) relation and index it:
-    returns (src_idx, dst_idx, node ids) or None when the relation
-    exceeds ``driver_collect_max`` rows or holds NULL endpoints (NULL join
-    semantics differ from numpy's — fall back to the dataflow). Node ids
-    carry no order contract: the PageRank recurrence does no arithmetic
-    or comparison on ids (unlike connected_components_fixed's hash-MIN
-    labels, which must keep id order), so indexing uses hash-based
-    ``pd.factorize`` instead of the sort-based ``np.unique`` +
-    ``searchsorted`` — measured 1.26 → 0.12 s on the 587k-edge /
-    16k-node bench graph, where sorting 1.2M strings dominated the
-    whole fast path."""
+def _pagerank_hybrid(op, e_raw, col, iters, cap, r0_of):
+    """Driver mirror of the Pregel dataflow over the RAW projected edges
+    (not the distinct/repartitioned loop relation, whose shuffles and
+    checkpoint the fast path exists to skip; the cap applies to raw rows,
+    the true transfer cost): ``iters`` rounds of floor-div mass split,
+    integer contribution sum and damped base add on int64 arrays — the
+    SAME exact-integer recurrence, bit-identical by construction (sums
+    stay far under int64: total mass 10^12, ×85 ≤ 8.5·10^13).
+    ``r0_of(node_ids)`` gives the initial mass. ``drop_duplicates`` is the
+    dataflow's ``distinct()``. Ids carry no order contract here (unlike
+    the CC hash-MIN labels), so hash-based ``pd.factorize`` indexes them:
+    1.26 → 0.12 s against a sort-based ``np.unique`` on the 587k-edge /
+    16k-node bench graph."""
     import numpy as np
     import pandas as pd
 
-    # RAW projected edges, not the distinct/repartitioned loop relation:
-    # the driver path replaces the loop, so paying the distinct's full
-    # shuffle + the src repartition + the checkpoint write just to collect
-    # would waste the exact stages the fast path exists to skip. The
-    # row cap applies to raw rows — the true transfer cost — and pandas
-    # drop_duplicates is the same exact equality as distinct().
-    pdf = e.limit(driver_collect_max + 1).toPandas()
-    if len(pdf) > driver_collect_max:
-        return None
-    if pdf["src"].isna().any() or pdf["dst"].isna().any():
-        return None
-    pdf = pdf.drop_duplicates()
-    codes, uniques = pd.factorize(
-        pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
-    )
-    n_edges = len(pdf)
-    return (
-        codes[:n_edges].astype(np.int64),
-        codes[n_edges:].astype(np.int64),
-        uniques.to_numpy(),
-    )
+    def driver(got):
+        e = got.pdf.drop_duplicates()
+        codes, node_ids = pd.factorize(
+            pd.concat([e["src"], e["dst"]], ignore_index=True)
+        )
+        src_idx, dst_idx = np.split(codes.astype(np.int64), [len(e)])
+        n = len(node_ids)
+        r0 = r0_of(node_ids)
+        base = (15 * r0) // 100
+        outdeg = np.bincount(src_idx, minlength=n).astype(np.int64)
+        pr = r0
+        for _ in range(iters):
+            sums = np.zeros(n, dtype=np.int64)
+            np.add.at(sums, dst_idx, pr[src_idx] // outdeg[src_idx])
+            pr = base + (DAMP_NUM * sums) // 100
+        return pd.DataFrame({"node": node_ids, col: pr})
 
-
-def _pagerank_rounds_np(src_idx, dst_idx, r0, base, iters: int):
-    """Driver-side mirror of the Pregel dataflow: ``iters`` rounds of
-    (floor-div mass split, integer contribution sum, damped base add) on
-    int64 arrays — the SAME exact-integer recurrence, so the result is
-    bit-identical by construction. Sums stay far under int64 (total mass
-    10^12, ×85 ≤ 8.5·10^13)."""
-    import numpy as np
-
-    n = len(r0)
-    outdeg = np.bincount(src_idx, minlength=n).astype(np.int64)
-    pr = r0
-    for _ in range(iters):
-        contrib = pr[src_idx] // outdeg[src_idx]
-        sums = np.zeros(n, dtype=np.int64)
-        np.add.at(sums, dst_idx, contrib)
-        pr = base + (DAMP_NUM * sums) // 100
-    return pr
-
-
-def _pagerank_result_df(e: DataFrame, node_ids, pr, col: str) -> DataFrame:
-    import pandas as pd
-
-    ntype = e.schema["src"].dataType.simpleString()
-    spark = e.sparkSession
-    return spark.createDataFrame(
-        pd.DataFrame({"node": node_ids.tolist(), col: pr}),
-        schema=f"node {ntype}, {col} bigint",
+    ntype = e_raw.schema["src"].dataType.simpleString()
+    # NULL endpoints never join in the dataflow; numpy would index them
+    return hybrid.run(
+        op, e_raw, cap, driver, f"node {ntype}, {col} bigint",
+        non_null=("src", "dst"),
     )
 
 
@@ -116,18 +90,14 @@ def pagerank(
 ) -> DataFrame:
     """(node, pr) after ``iters`` exact-integer PageRank rounds.
 
-    **Hybrid execution** (the connected_components_fixed / k_core
-    precedent): when the distinct edge relation fits the driver
-    (``driver_collect_max`` rows; 0 disables), one Arrow collect plus
-    ``iters`` numpy passes replace the unrolled join+agg dataflow — each
-    distributed round costs ~3 tiny-relation stages of pure latency at
-    bench scale (the rank/node relations are orders of magnitude smaller
-    than the corpus), while the numpy mirror computes the identical
-    exact-integer recurrence in microseconds. Graphs past the cap take
-    the dataflow below, whose construction issues no driver-side
-    collects (the node count enters via a 1-row broadcast, never an
-    eager .count()); its lazy local checkpoints still materialize their
-    upstream AQE shuffle stages when the plan is first built.
+    **Hybrid execution** (README "Hybrid execution"): up to
+    ``driver_collect_max`` raw edges (0 disables) with non-null endpoints
+    run the identical exact-integer recurrence in numpy on the driver.
+    Larger graphs take the dataflow below, whose construction issues no
+    driver-side collects (the node count enters via a 1-row broadcast,
+    never an eager .count()); its lazy local checkpoints still
+    materialize their upstream AQE shuffle stages when the plan is first
+    built.
     """
     # Loop-invariant relations (edges, node set, outdegrees) materialize
     # ONCE via lazy local checkpoints: without them every unrolled round
@@ -139,21 +109,18 @@ def pagerank(
     # aggregation reuse that partitioning instead of re-shuffling the edge
     # relation (guide §2.4: establish the partitioning once).
     e_raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if driver_collect_max > 0:
+
+    def uniform_mass(node_ids):
         import numpy as np
 
-        idx = _pagerank_edges_np(e_raw, driver_collect_max)
-        if idx is not None:
-            src_idx, dst_idx, node_ids = idx
-            n = len(node_ids)
-            if n == 0:
-                return _pagerank_result_df(
-                    e_raw, node_ids, np.zeros(0, dtype=np.int64), "pr"
-                )
-            r0 = np.full(n, TOTAL_MASS // n, dtype=np.int64)
-            base = (15 * r0) // 100
-            pr = _pagerank_rounds_np(src_idx, dst_idx, r0, base, iters)
-            return _pagerank_result_df(e_raw, node_ids, pr, "pr")
+        n = len(node_ids)
+        return np.full(n, TOTAL_MASS // n if n else 0, dtype=np.int64)
+
+    fast = _pagerank_hybrid(
+        "graph.pagerank", e_raw, "pr", iters, driver_collect_max, uniform_mass
+    )
+    if fast is not None:
+        return fast
     e = (
         e_raw.distinct()
         .repartition(F.col("src"))
@@ -273,12 +240,39 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
+def _undirected_hybrid(op, und, cap, mirror, schema):
+    """Driver path for the fixed-round peel/label loops over the
+    undirected (a, b) relation: integer ids (the loops compare and min
+    them; any other id type takes the dataflow) indexed into the sorted
+    node array. ``mirror(a_idx, b_idx, node_ids)`` returns the output
+    columns by name; ``{t}`` in ``schema`` is the caller's id type."""
+    import numpy as np
+    import pandas as pd
+
+    def driver(got):
+        av = got.pdf["a"].to_numpy(dtype=np.int64)
+        bv = got.pdf["b"].to_numpy(dtype=np.int64)
+        node_ids = np.unique(np.concatenate([av, bv]))
+        return pd.DataFrame(
+            mirror(
+                np.searchsorted(node_ids, av),
+                np.searchsorted(node_ids, bv),
+                node_ids,
+            )
+        )
+
+    t = und.schema["a"].dataType.simpleString()
+    return hybrid.run(
+        op, und, cap, driver, schema.format(t=t), integer=("a", "b")
+    )
+
+
 def _kcore_rounds_np(a_idx, b_idx, node_ids, k: int, rounds: int):
     """Driver-side mirror of the distributed peel: exactly ``rounds``
     fixed peels over index arrays — the same recurrence (full degree
     count, then per-round subtraction of just-removed neighbors), exact
     int64 arithmetic, bit-identical by construction. Returns the
-    (ids, degrees) of the survivors."""
+    survivors' (node, degree) columns."""
     import numpy as np
 
     n = len(node_ids)
@@ -291,7 +285,7 @@ def _kcore_rounds_np(a_idx, b_idx, node_ids, k: int, rounds: int):
         if m.any():
             deg = deg - np.bincount(a_idx[m], minlength=n)
     keep = present & (deg >= k)
-    return node_ids[keep], deg[keep]
+    return {"node": node_ids[keep], "degree": deg[keep]}
 
 
 def k_core(
@@ -343,41 +337,13 @@ def k_core(
         .repartition(F.col("a"))
         .transform(materialize)
     )
-    if driver_collect_max > 0:
-        import numpy as np
-        import pandas as pd
-
-        # hybrid execution (the connected_components_fixed /
-        # dedup.connected_components precedent): a peel graph that fits
-        # the driver replays the fixed rounds in numpy — one Arrow
-        # collect instead of rounds-1 tiny-relation join stages whose
-        # cost is pure stage latency. Distributed loop below for graphs
-        # past the cap or with non-integer node ids.
-        pdf = und.limit(driver_collect_max + 1).toPandas()
-        if len(pdf) <= driver_collect_max and all(
-            np.issubdtype(pdf[c].dtype, np.integer) for c in ("a", "b")
-        ):
-            av = pdf["a"].to_numpy(dtype=np.int64, copy=False)
-            bv = pdf["b"].to_numpy(dtype=np.int64, copy=False)
-            node_ids = np.unique(np.concatenate([av, bv]))
-            ids, degs = _kcore_rounds_np(
-                np.searchsorted(node_ids, av),
-                np.searchsorted(node_ids, bv),
-                node_ids,
-                k,
-                rounds,
-            )
-            spark = edges.sparkSession
-            out = spark.createDataFrame(
-                pd.DataFrame({"node": ids, "degree": degs}),
-                schema="node long, degree long",
-            )
-            ntype = und.schema["a"].dataType.simpleString()
-            if ntype != "bigint":
-                out = out.select(
-                    F.col("node").cast(ntype).alias("node"), "degree"
-                )
-            return out
+    fast = _undirected_hybrid(
+        "graph.k_core", und, driver_collect_max,
+        lambda a_idx, b_idx, ids: _kcore_rounds_np(a_idx, b_idx, ids, k, rounds),
+        "node {t}, degree bigint",
+    )
+    if fast is not None:
+        return fast
     # round 1: alive_0 = every endpoint, so the recount form's two
     # semi-joins are identities — one full degree count suffices
     deg = (
@@ -438,34 +404,29 @@ def personalized_pagerank(
     # checkpoint lazily once instead of re-executing per unrolled round
     e_raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    if driver_collect_max > 0:
+
+    def seed_mass(node_ids):
         import numpy as np
 
-        idx = _pagerank_edges_np(e_raw, driver_collect_max)
-        seed_pdf = s.limit(driver_collect_max + 1).toPandas()
-        if idx is not None and len(seed_pdf) <= driver_collect_max:
-            src_idx, dst_idx, node_ids = idx
-            n = len(node_ids)
-            if n == 0:
-                return _pagerank_result_df(
-                    e_raw, node_ids, np.zeros(0, dtype=np.int64), "ppr"
-                )
-            # _k counts DISTINCT seed rows (NULL included, matching the
-            # dataflow's count(1) over the distinct seed relation); a NULL
-            # seed never joins a node, which the set-membership test mirrors
-            seed_vals = seed_pdf["node"].tolist()
-            k = len(seed_vals)
-            mass = TOTAL_MASS // k if k else 0
-            # v == v also drops a float-NaN NULL (Arrow may surface a
-            # numeric NULL seed as NaN rather than None)
-            seed_set = {v for v in seed_vals if v is not None and v == v}
-            in_seeds = np.fromiter(
-                (v in seed_set for v in node_ids.tolist()), bool, n
-            )
-            r0 = np.where(in_seeds, np.int64(mass), np.int64(0))
-            base = (15 * r0) // 100
-            ppr = _pagerank_rounds_np(src_idx, dst_idx, r0, base, iters)
-            return _pagerank_result_df(e_raw, node_ids, ppr, "ppr")
+        # _k counts DISTINCT seed rows (NULL included, matching the
+        # dataflow's count(1) over the distinct seed relation); a NULL
+        # seed never joins a node, which the set-membership test mirrors
+        seed_vals = hybrid.collect(s, driver_collect_max).pdf["node"].tolist()
+        mass = TOTAL_MASS // len(seed_vals) if seed_vals else 0
+        # v == v also drops a float NULL/NaN seed (Arrow surfaces a numeric
+        # NULL as NaN)
+        seed_set = {v for v in seed_vals if v is not None and v == v}
+        in_seeds = np.fromiter(
+            (v in seed_set for v in node_ids.tolist()), bool, len(node_ids)
+        )
+        return np.where(in_seeds, np.int64(mass), np.int64(0))
+
+    fast = _pagerank_hybrid(
+        "graph.personalized_pagerank", e_raw, "ppr", iters,
+        driver_collect_max, seed_mass,
+    )
+    if fast is not None:
+        return fast
     e = (
         e_raw.distinct()
         .repartition(F.col("src"))
@@ -543,17 +504,11 @@ def connected_components_fixed(
     pairs, like pagerank/k_core (the convergence-loop + driver-DSU
     hybrid lives in operators/dedup.connected_components).
 
-    **Hybrid execution** (the dedup.connected_components precedent): the
-    label graph is orders of magnitude smaller than the corpus that
-    produced it. When the undirected edge relation fits the driver
-    (``driver_collect_max`` rows, ~16 MB at the default — 0 disables),
-    ONE Arrow collect + ``rounds`` numpy passes replace the iterative
-    dataflow: each distributed round costs ~7 tiny-relation exchanges of
-    pure stage latency (measured ~0.5 s/round at bench scale), while the
-    numpy recurrence is microseconds and — unlike a union-find — computes
-    the IDENTICAL fixed-round function, so no convergence contract is
-    assumed. Corpora whose label graph is genuinely huge (or with
-    non-integer node ids) take the distributed frontier loop below.
+    **Hybrid execution** (README "Hybrid execution"): up to
+    ``driver_collect_max`` undirected edges (0 disables) with integer ids
+    run the IDENTICAL fixed-round recurrence in numpy — unlike a
+    union-find, no convergence contract is assumed. Larger graphs and
+    other id types take the distributed frontier loop below.
 
     Per round: (1) hash-min propagation — every node adopts
     min(own label, labels of neighbors) via one join + one map-side-
@@ -591,40 +546,16 @@ def connected_components_fixed(
         .repartition(F.col("a"))
         .transform(materialize)
     )
-    if driver_collect_max > 0:
-        import numpy as np
-        import pandas as pd
-
-        # materializes the checkpoint; the loop's first action would have
-        # paid this same job. Arrow-batched toPandas: two int64 columns
-        # transfer as ~16 B/edge (dedup.connected_components precedent).
-        pdf = und.limit(driver_collect_max + 1).toPandas()
-        if len(pdf) <= driver_collect_max and all(
-            np.issubdtype(pdf[c].dtype, np.integer) for c in ("a", "b")
-        ):
-            av = pdf["a"].to_numpy(dtype=np.int64, copy=False)
-            bv = pdf["b"].to_numpy(dtype=np.int64, copy=False)
-            node_ids = np.unique(np.concatenate([av, bv]))
-            lab_arr = _fixed_round_labels_np(
-                np.searchsorted(node_ids, av),
-                np.searchsorted(node_ids, bv),
-                node_ids,
-                rounds,
-            )
-            spark = edges.sparkSession
-            out = spark.createDataFrame(
-                pd.DataFrame({"node": node_ids, "component": lab_arr}),
-                schema="node long, component long",
-            )
-            # preserve the caller's id type (schema must match the
-            # distributed form, e.g. int32 ids stay int32)
-            ntype = und.schema["a"].dataType.simpleString()
-            if ntype != "bigint":
-                out = out.select(
-                    F.col("node").cast(ntype).alias("node"),
-                    F.col("component").cast(ntype).alias("component"),
-                )
-            return out
+    fast = _undirected_hybrid(
+        "graph.connected_components_fixed", und, driver_collect_max,
+        lambda a_idx, b_idx, ids: {
+            "node": ids,
+            "component": _fixed_round_labels_np(a_idx, b_idx, ids, rounds),
+        },
+        "node {t}, component {t}",
+    )
+    if fast is not None:
+        return fast
     lab = (
         und.select(F.col("a").alias("node"))
         .distinct()

@@ -149,8 +149,9 @@ def length_buckets(
     # per-partition size aggregate and the ranked join, and the offsets are
     # only correct if both consumers see the SAME physical partitioning —
     # re-executing the range exchange per consumer re-samples boundaries
-    # (and pays the shuffle twice; guide §2.1)
-    part = part.transform(materialize)
+    # (and pays the shuffle twice; guide §2.1) — so pin it (eager), as
+    # ids.dense_ids does
+    part = materialize(part, eager=True)
     sizes = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     # windows over the sizes frame touch one row per PARTITION — tiny by
     # construction, the documented k-row single-partition pattern

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from olake_spark import hybrid
+
 __all__ = [
     "exact_quantiles",
     "trimmed_mean",
@@ -303,6 +305,10 @@ def median_mad(
     rank = ceil(0.5·n), bit-equal to a rank-based oracle. Same
     few-groups driver-state contract; the result materializes
     driver-side (createDataFrame), releasing the cache before return.
+
+    **Hybrid execution** (README "Hybrid execution"): up to
+    ``driver_collect_max`` projected rows (0 disables) with non-null keys
+    select the identical ranks in numpy instead of ~9 bisection jobs.
     """
     spark: SparkSession = df.sparkSession
     v = F.round(F.col(value_col) * MICROS).cast("long")
@@ -314,50 +320,36 @@ def median_mad(
     out_schema = _ddl(state_schema, "n long, med_micros long, mad_micros long")
     if report_k is not None:
         out_schema += ", n_outliers long"
-    if driver_collect_max > 0:
-        # Hybrid execution (the graph-operator precedent): this operator
-        # is a driver-sequenced multi-round search — fused seed, ~2 median
-        # bisection rounds, ~6 MAD rounds, outlier report: each a separate
-        # tiny-result job whose cost at bench scale is pure stage latency.
-        # When the (keys, _vm) projection fits the driver
-        # (``driver_collect_max`` rows, ~16 B/row; 0 disables), ONE Arrow
-        # collect + np.partition per group computes the IDENTICAL exact
-        # integer (median, MAD, outlier count) — rank-k selection over the
-        # same micro-unit longs, and the outlier comparison promotes
-        # int64 > float64 exactly as Spark's long > double. Projections
-        # past the cap take the distributed bisection below — that path,
-        # not this one, is the 100 TB story.
-        pdf = proj.limit(driver_collect_max + 1).toPandas()
-        if len(pdf) <= driver_collect_max and not (
-            len(keys) > 0 and pdf[keys].isna().any().any()
-        ):
-            import numpy as np
 
-            def _group_stats(vm: "np.ndarray") -> list:
-                n = len(vm)
-                k_rank = max(1, math.ceil(0.5 * n))
-                med = int(np.partition(vm, k_rank - 1)[k_rank - 1])
-                dev = np.abs(vm - med)
-                mad = int(np.partition(dev, k_rank - 1)[k_rank - 1])
-                row = [n, med, mad]
-                if report_k is not None:
-                    row.append(int((dev > report_k * mad).sum()))
-                return row
+    def driver(got):
+        # rank-k selection over the same micro-unit longs; the outlier
+        # comparison promotes int64 > float64 exactly as Spark's long > double
+        import numpy as np
 
-            rows = []
-            if keys:
-                for kv, g in pdf.groupby(keys, dropna=False, sort=False):
-                    kt = kv if isinstance(kv, tuple) else (kv,)
-                    # numpy scalars -> python (createDataFrame-safe)
-                    kt = tuple(
-                        k.item() if hasattr(k, "item") else k for k in kt
-                    )
-                    vm = g["_vm"].to_numpy(dtype=np.int64, copy=False)
-                    rows.append([*kt, *_group_stats(vm)])
-            elif len(pdf):
-                vm = pdf["_vm"].to_numpy(dtype=np.int64, copy=False)
-                rows.append(_group_stats(vm))
-            return spark.createDataFrame(rows, out_schema)
+        rows = []
+        for kt, g in got.groups(keys):
+            vm = g["_vm"].to_numpy(dtype=np.int64)
+            n = len(vm)
+            if not n:
+                continue  # a keyless empty input has no group
+            k_rank = max(1, math.ceil(0.5 * n))
+            med = int(np.partition(vm, k_rank - 1)[k_rank - 1])
+            dev = np.abs(vm - med)
+            mad = int(np.partition(dev, k_rank - 1)[k_rank - 1])
+            row = [*kt, n, med, mad]
+            if report_k is not None:
+                row.append(int((dev > report_k * mad).sum()))
+            rows.append(row)
+        return rows
+
+    # a NULL key never matches the bisection's state joins; the mirror
+    # does not model that, so such inputs keep the dataflow's answer
+    fast = hybrid.run(
+        "quantiles.median_mad", proj, driver_collect_max, driver, out_schema,
+        non_null=keys,
+    )
+    if fast is not None:
+        return fast
     base = proj.cache()
     try:
         # fused seed + median round 0: ONE aggregation, binned by the

@@ -4,6 +4,12 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
+
+# every property test draws the same examples on every run, so a failure
+# reproduces; per-test @settings (max_examples, deadline) inherit this
+settings.register_profile("derandomized", derandomize=True, database=None)
+settings.load_profile("derandomized")
 
 SF_SMOKE = os.environ.get("OLAKE_TEST_SF_DIR", "/root/testdata/sf0.001")
 

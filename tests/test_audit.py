@@ -91,70 +91,3 @@ def test_numeric_outlier_stats_mad(spark):
     assert out["void"].n == 0 and out["void"].n_nulls == 4
     assert out["void"].median is None and out["void"].n_outliers == 0
     assert out["void"].outlier_frac is None
-
-
-def test_numeric_outlier_stats_driver_path_equals_dataflow(spark):
-    # the hybrid's two executions must be identical: Spark-Percentile
-    # median interpolation mirrored op-for-op, NULL values and NULL group
-    # keys included
-    import random
-
-    from olake_spark.operators.audit import numeric_outlier_stats
-
-    rng = random.Random(13)
-    rows = []
-    for i in range(3000):
-        g = rng.choice(["a", "b", "c", None])
-        val = None if rng.random() < 0.05 else round(rng.gauss(100, 30), 3)
-        if rng.random() < 0.01:
-            val = round(rng.uniform(5000, 9000), 3)  # gross outliers
-        rows.append((g, val))
-    rows.append(("allnull", None))
-    df = spark.createDataFrame(rows, "g string, v double")
-    fast = sorted(
-        map(tuple, numeric_outlier_stats(df, "g", "v", k=3.0).collect()),
-        key=str,
-    )
-    slow = sorted(
-        map(
-            tuple,
-            numeric_outlier_stats(
-                df, "g", "v", k=3.0, driver_collect_max=0
-            ).collect(),
-        ),
-        key=str,
-    )
-    assert fast == slow
-
-
-def test_numeric_outlier_stats_driver_path_fuzz(spark):
-    # fuzz the Percentile-interpolation mirror: even/odd group sizes,
-    # heavy ties (MAD 0 -> every deviation flags), wide magnitudes
-    import random
-
-    from olake_spark.operators.audit import numeric_outlier_stats
-
-    for seed in range(4):
-        rng = random.Random(40 + seed)
-        rows = []
-        for i in range(900):
-            g = "g%d" % (i % (2 * seed + 1))
-            if seed == 2:
-                val = rng.choice([5.0, 5.0, 5.0, 7.25])  # MAD 0 regime
-            else:
-                val = round(rng.gauss(0, 10 ** seed), 4)
-            rows.append((g, val))
-        df = spark.createDataFrame(rows, "g string, v double")
-        fast = sorted(
-            map(tuple, numeric_outlier_stats(df, "g", "v").collect()), key=str
-        )
-        slow = sorted(
-            map(
-                tuple,
-                numeric_outlier_stats(
-                    df, "g", "v", driver_collect_max=0
-                ).collect(),
-            ),
-            key=str,
-        )
-        assert fast == slow, seed

@@ -194,20 +194,3 @@ def test_bpe_train_exhausted_corpus_raises_loudly(spark):
     df = spark.createDataFrame([(1, "ab")], "doc_id int, text string")
     with pytest.raises(Exception, match="exhausted"):
         bpe_train_merges(df, n_merges=4).collect()
-
-
-def test_bpe_train_driver_path_equals_unrolled_plan(spark):
-    # the hybrid's two executions must produce the identical ranked merge
-    # table: weighted pair counts, (cnt desc, a, b) ties, overlapping-run
-    # replace semantics ("aaaa" merges left-to-right non-overlapping)
-    from olake_spark.operators.bpe import bpe_train_merges
-
-    rows = [
-        (1, "aaaa bb abab low low lower lowest"),
-        (2, "newer newest wide wider widest aaaa"),
-        (3, "ab ab ab ba ba cc ccc aaaa bb"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    fast = bpe_train_merges(df, n_merges=5).collect()
-    slow = bpe_train_merges(df, n_merges=5, driver_collect_max=0).collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]

@@ -60,71 +60,3 @@ def test_corr_matrix_validates_cols(spark):
     df = spark.createDataFrame([(1.0,)], "a double")
     with pytest.raises(ValueError, match="at least 2"):
         corr_matrix(df, ["a"])
-
-
-def test_corr_matrix_driver_path_equals_decimal_dataflow(spark):
-    # the hybrid's two executions must be bit-identical: exact hi/lo
-    # moment recombination == DECIMAL(38,0) sums, and the same
-    # cast->sqrt->divide->round(6, HALF_UP) float finish — negatives,
-    # constant columns (NULL corr) and groups included
-    import random
-
-    from olake_spark.operators.correlation import corr_matrix
-
-    rng = random.Random(5)
-    rows = [
-        (
-            "g%d" % (i % 3),
-            round(rng.uniform(-100, 100), 2),
-            round(rng.uniform(0, 50000), 2),
-            round(rng.uniform(-5, 5), 4),
-            7.25,  # constant -> zero radicand -> NULL corr
-        )
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "g string, a double, b double, c double, d double")
-    cols = ["a", "b", "c", "d"]
-    for by in (None, ["g"]):
-        fast = sorted(
-            map(tuple, corr_matrix(df, cols, by=by).collect())
-        )
-        slow = sorted(
-            map(
-                tuple,
-                corr_matrix(df, cols, by=by, driver_collect_max=0).collect(),
-            )
-        )
-        assert fast == slow, by
-
-
-def test_corr_matrix_driver_path_fuzz(spark):
-    # fuzz the float-finish mirror across regimes the single equivalence
-    # fixture can't cover: magnitudes near the 2^42 headroom bound (which
-    # must FALL BACK, not diverge), heavy ties, tiny groups, negatives
-    import random
-
-    from olake_spark.operators.correlation import corr_matrix
-
-    for seed in range(4):
-        rng = random.Random(100 + seed)
-        scale = [1e-3, 1.0, 1e3, 4.3e9][seed]  # 4.3e9*1e6 micros ~ 2^42 edge
-        rows = [
-            (
-                "g%d" % (i % (seed + 1)),
-                round(rng.uniform(-scale, scale), 3),
-                round(rng.choice([0.0, 1.5, 2.5, scale / 7]), 3),  # ties
-                round(rng.gauss(0, scale / 3), 3),
-            )
-            for i in range(700)
-        ]
-        df = spark.createDataFrame(rows, "g string, a double, b double, c double")
-        fast = sorted(map(tuple, corr_matrix(df, ["a", "b", "c"], by=["g"]).collect()))
-        slow = sorted(
-            map(
-                tuple,
-                corr_matrix(
-                    df, ["a", "b", "c"], by=["g"], driver_collect_max=0
-                ).collect(),
-            )
-        )
-        assert fast == slow, seed

@@ -67,110 +67,3 @@ def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
         ).collect()
     }
     assert pr == pr2
-
-
-def test_pagerank_driver_path_equals_dataflow(spark):
-    # the hybrid's two executions must be bit-identical (exact integers):
-    # random directed graph with string ids, duplicates, self-referential
-    # hubs and dangling nodes
-    import random
-
-    rng = random.Random(7)
-    rows = [
-        (f"n{rng.randrange(60)}", f"n{rng.randrange(60)}")
-        for _ in range(400)
-    ]
-    e = spark.createDataFrame(rows, "src string, dst string")
-    fast = sorted(map(tuple, pagerank(e, iters=3).collect()))
-    slow = sorted(
-        map(tuple, pagerank(e, iters=3, driver_collect_max=0).collect())
-    )
-    assert fast == slow
-
-
-def test_personalized_pagerank_driver_path_equals_dataflow(spark):
-    import random
-
-    from olake_spark.operators.graph import personalized_pagerank
-
-    rng = random.Random(11)
-    rows = [
-        (f"n{rng.randrange(40)}", f"n{rng.randrange(40)}")
-        for _ in range(250)
-    ]
-    e = spark.createDataFrame(rows, "src string, dst string")
-    # seeds include an id absent from the graph: it still dilutes the
-    # per-seed mass (count) while receiving none, on both paths
-    seeds = spark.createDataFrame(
-        [("n1",), ("n2",), ("absent",)], "node string"
-    )
-    fast = sorted(
-        map(tuple, personalized_pagerank(e, seeds, iters=3).collect())
-    )
-    slow = sorted(
-        map(
-            tuple,
-            personalized_pagerank(
-                e, seeds, iters=3, driver_collect_max=0
-            ).collect(),
-        )
-    )
-    assert fast == slow
-
-
-def test_pagerank_driver_path_fuzz(spark):
-    # fuzz the Pregel mirror: dense hubs, self-loops-only nodes, long
-    # chains, duplicate edges at several densities
-    import random
-
-    for seed in range(3):
-        rng = random.Random(70 + seed)
-        n = 30 + 20 * seed
-        rows = [("h", f"n{i}") for i in range(n)]  # hub fan-out
-        rows += [
-            (f"n{rng.randrange(n)}", f"n{rng.randrange(n)}")
-            for _ in range(300)
-        ]
-        rows += [(f"c{i}", f"c{i+1}") for i in range(15)]  # chain
-        e = spark.createDataFrame(rows, "src string, dst string")
-        fast = sorted(map(tuple, pagerank(e, iters=4).collect()))
-        slow = sorted(
-            map(tuple, pagerank(e, iters=4, driver_collect_max=0).collect())
-        )
-        assert fast == slow, seed
-
-
-def test_median_mad_bpe_fuzz_seeds(spark):
-    # a couple more seeds through the median_mad and bpe mirrors
-    import random
-
-    from olake_spark.operators.bpe import bpe_train_merges
-    from olake_spark.operators.quantiles import median_mad
-
-    rng = random.Random(99)
-    rows = [
-        (rng.choice(["a", "b"]), round(rng.gauss(50, 200), 2))
-        for _ in range(1200)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    assert sorted(
-        map(tuple, median_mad(df, ["g"], "v", report_k=2.5).collect())
-    ) == sorted(
-        map(
-            tuple,
-            median_mad(
-                df, ["g"], "v", report_k=2.5, driver_collect_max=0
-            ).collect(),
-        )
-    )
-    texts = [
-        (i, " ".join(rng.choice(["aa", "aaa", "abab", "x,y", "zz zz"]) for _ in range(12)))
-        for i in range(40)
-    ]
-    tdf = spark.createDataFrame(texts, "doc_id int, text string")
-    assert [
-        tuple(r) for r in bpe_train_merges(tdf, n_merges=4).collect()
-    ] == [
-        tuple(r)
-        for r in bpe_train_merges(tdf, n_merges=4, driver_collect_max=0).collect()
-    ]

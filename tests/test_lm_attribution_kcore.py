@@ -88,28 +88,6 @@ def test_kcore_peels_tail_into_core(spark):
     assert core2 == core
 
 
-def test_k_core_hybrid_paths_agree(spark):
-    # triangle + pendant chain with INT ids (the driver numpy path) vs
-    # the forced distributed delta loop; rounds=1/2 pin the exact
-    # fixed-round contract mid-cascade, not just the converged core
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (6, 7)],
-        "src long, dst long",
-    )
-    for rounds in (1, 2, 3):
-        fast = {
-            (r.node, r.degree)
-            for r in k_core(edges, k=2, rounds=rounds).collect()
-        }
-        dist = {
-            (r.node, r.degree)
-            for r in k_core(
-                edges, k=2, rounds=rounds, driver_collect_max=0
-            ).collect()
-        }
-        assert fast == dist
-
-
 def test_k_core_rejects_bad_rounds(spark):
     import pytest
 

@@ -66,31 +66,3 @@ def test_driver_collect_guard_trips_loudly(spark):
     assert len(_collect_bounded(df, "t", limit=5)) == 5
     with pytest.raises(RuntimeError, match="driver seed exceeded 4 rows"):
         _collect_bounded(df, "t", limit=4)
-
-
-def test_median_mad_driver_path_equals_bisection(spark):
-    # the hybrid's two executions must be bit-identical: exact integer
-    # (median, MAD, outlier count) per group, negatives and ties included
-    import random
-
-    from olake_spark.operators.quantiles import median_mad
-
-    rng = random.Random(3)
-    rows = [
-        (g, round(rng.uniform(-50, 50), 2))
-        for g in ("x", "y", "z")
-        for _ in range(rng.randrange(50, 400))
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    fast = sorted(
-        map(tuple, median_mad(df, ["g"], "v", report_k=3).collect())
-    )
-    slow = sorted(
-        map(
-            tuple,
-            median_mad(
-                df, ["g"], "v", report_k=3, driver_collect_max=0
-            ).collect(),
-        )
-    )
-    assert fast == slow

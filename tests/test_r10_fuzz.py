@@ -16,6 +16,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from olake_spark.exact import round_half_up6
 from olake_spark.operators.abtest import cuped_adjust, ratio_metric_delta
 from olake_spark.operators.fuzzy import editdist1_join
 from olake_spark.operators.quantiles import percentile_cont
@@ -37,7 +38,7 @@ def _pcont_reference(values, p):
     h = (n - 1) * p + 1
     k_lo, k_hi = int(math.floor(h)), min(int(math.ceil(h)), n)
     vlo, vhi = micros[k_lo - 1], micros[k_hi - 1]
-    return round((vlo + (h - math.floor(h)) * (vhi - vlo)) / 1_000_000.0, 6)
+    return round_half_up6((vlo + (h - math.floor(h)) * (vhi - vlo)) / 1_000_000.0)
 
 
 @settings(max_examples=6, deadline=None)

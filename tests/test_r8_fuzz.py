@@ -10,6 +10,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from olake_spark.exact import round_half_up6
 from olake_spark.operators.features import target_encode_loo
 from olake_spark.operators.forecast import holt_linear
 from olake_spark.operators.graph import connected_components_fixed
@@ -55,8 +56,9 @@ def test_kaplan_meier_matches_python_fold(spark, subjects):
 def test_holt_linear_matches_python_fold(spark, vals):
     """The fold is the pinned flat-form recursion — a plain Python float
     loop (same IEEE doubles, same op order) must agree bit-for-bit
-    before rounding, hence exactly after round(6) (doubles are dyadic,
-    decimal tie points are not, so rounding can never disagree)."""
+    before rounding, hence exactly after Spark's round(6), which is
+    HALF_UP on the shortest decimal repr (``round_half_up6``), not
+    Python's ``round``: 0.1234565 rounds to 0.123457, not 0.123456."""
     import datetime as dt
 
     l, b = vals[0], 0.0
@@ -72,9 +74,9 @@ def test_holt_linear_matches_python_fold(spark, vals):
     df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
     got = holt_linear(df, "ts", ["k"], "v").first()
     assert got.n == len(vals)
-    assert got.level == round(l, 6)
-    assert got.trend == round(b, 6)
-    assert got.forecast_1 == round(l + b, 6)
+    assert got.level == round_half_up6(l)
+    assert got.trend == round_half_up6(b)
+    assert got.forecast_1 == round_half_up6(l + b)
 
 
 # 4 examples: each drives a 10-round unrolled plan (the expensive part);

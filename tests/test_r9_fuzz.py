@@ -15,6 +15,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from olake_spark.exact import round_half_up6
 from olake_spark.operators.audit import hhi_concentration, theil_index
 from olake_spark.operators.quantiles import weighted_median
 from olake_spark.operators.sessions import sessionize
@@ -236,7 +237,7 @@ def test_hhi_matches_reference(spark, rows):
     tot = sum(per_key.values())
     exp = sum(x * x for x in per_key.values()) / (tot * tot)
     assert got.n_keys == len(per_key)
-    assert got.hhi == round(exp, 6)
+    assert got.hhi == round_half_up6(exp)
 
 
 # ---------------------------------------------------------------------------

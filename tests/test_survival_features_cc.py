@@ -92,26 +92,6 @@ def test_connected_components_fixed_path_and_island(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_fixed_hybrid_paths_agree(spark):
-    # deep chain: rounds=2 does NOT converge, so this pins the exact
-    # fixed-round recurrence (numpy driver path vs distributed frontier
-    # loop), not just the converged component labels
-    rows = [(i, i + 1) for i in range(1, 12)] + [(101, 100), (102, 101)]
-    edges = spark.createDataFrame(rows, "src long, dst long")
-    for rounds in (2, 4):
-        fast = {
-            (r.node, r.component)
-            for r in connected_components_fixed(edges, rounds=rounds).collect()
-        }
-        dist = {
-            (r.node, r.component)
-            for r in connected_components_fixed(
-                edges, rounds=rounds, driver_collect_max=0
-            ).collect()
-        }
-        assert fast == dist
-
-
 def test_connected_components_fixed_validates_rounds(spark):
     edges = spark.createDataFrame([(1, 2)], "src long, dst long")
     for bad in (0, -2, 1.5, True):
