@@ -11,15 +11,77 @@ verdict's suite-wall ask): convert `test_x` functions to `_check_x` and add
 one `test_<module>_concurrent` that calls `run_concurrently`. Checks that
 mutate session state (conf flips, temp views with fixed names) must stay
 sequential — do not route them through here.
+
+``child_jvm_slots`` sizes the full-suite fan-out of child JVMs (the
+registry-tail gate and the suite shards) to the host; ``join`` waits for
+one of them no longer than the run's deadline.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import subprocess
+import time
 import traceback
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-__all__ = ["run_concurrently"]
+__all__ = ["child_jvm_slots", "join", "run_concurrently"]
+
+# memory budget of one child test process: its JVM (1.2-1.8 GB at a 1g heap,
+# up to 3.6 GB at 3g), the Python driver and its pyspark.daemon workers
+# (~128 MB each, up to 24 per shard child). On a 4-core / 16 GB host these
+# figures give 2 + 2 children, whose full run bottomed out at 0.5 GB
+# available; the parent session runs tests too and keeps its own share
+CHILD_GB = 2.5
+PARENT_GB = 3.0
+
+
+def _mem_available_gb() -> float:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) / 2**20
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+
+
+@functools.cache
+def child_jvm_slots() -> int:
+    """How many child JVMs a full suite run may hold at once: two per usable
+    core (the fixture work is latency-bound), and no more than fit in the
+    memory left beside the parent session at CHILD_GB each. Beyond that
+    the kernel kills JVMs mid-run and every test left in one fails with
+    ConnectionRefusedError. Cached so the two fan-outs split one figure."""
+    if hasattr(os, "sched_getaffinity"):
+        cores = len(os.sched_getaffinity(0))
+    else:
+        cores = os.cpu_count() or 1
+    by_mem = int((_mem_available_gb() - PARENT_GB) // CHILD_GB)
+    return max(2, min(2 * cores, by_mem))
+
+
+# a full run must end inside the Tier-1 command's `timeout 2670` (ROADMAP
+# "Tier-1 verify"): killed there, pytest reports nothing at all. Children
+# still running this long after their launch are killed instead, which
+# fails their joiner and leaves the parent's later tests ~4 minutes.
+FANOUT_DEADLINE_S = 2400
+
+
+def join(proc: subprocess.Popen, launched_at: float) -> str:
+    """The output of a fan-out child launched at ``launched_at``
+    (``time.monotonic()``); one still running FANOUT_DEADLINE_S after that
+    is killed and ends with a nonzero returncode."""
+    left = launched_at + FANOUT_DEADLINE_S - time.monotonic()
+    try:
+        return proc.communicate(timeout=max(1.0, left))[0]
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        out = proc.communicate()[0]
+        return f"{out}\nkilled: still running {FANOUT_DEADLINE_S} s after launch\n"
 
 
 def run_concurrently(

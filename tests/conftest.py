@@ -51,7 +51,13 @@ def spark():
         # concurrent JVMs only mildly oversubscribe the box
         master=os.environ.get("OLAKE_TEST_SPARK_MASTER", "local[8]"),
         shuffle_partitions=4,
-        extra_conf={"spark.ui.enabled": "false"},
+        extra_conf={
+            "spark.ui.enabled": "false",
+            # the session default heap (48g) is sized for the sf0.1 bench;
+            # the unit fixtures keep ~0.6 GB live, and G1 grows a heap far
+            # past that under load when its cap allows
+            "spark.driver.memory": os.environ.get("OLAKE_DRIVER_MEM", "3g"),
+        },
     )
     yield s
 

@@ -18,13 +18,18 @@ import json
 import os
 import subprocess
 import sys
+import time
 
-REPO = "/root/repo"
+from concurrency import child_jvm_slots, join
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 # tail has grown past 140 queries and each shard is latency-bound (JVM
-# spawn + cold-JIT per query family); measured sweep at 142 tail queries:
-# 8x4=94s, 12x3=83s, 16x2=97s (2 threads starve the queries), 10x4=81s
-N_SHARDS = 10
+# spawn + cold-JIT per query family); measured sweep at 142 tail queries
+# on 32 cores: 8x4=94s, 12x3=83s, 16x2=97s (2 threads starve the
+# queries), 10x4=81s. A smaller host gets half its child JVM slots (the
+# suite shards take the rest).
+N_SHARDS = min(10, max(1, child_jvm_slots() // 2))
 
 
 def _balanced_shards(tail: list[str]) -> list[list[str]]:
@@ -100,7 +105,7 @@ def launch_shards() -> dict:
         for shard in shards
         if shard
     ]
-    _LAUNCHED = {"procs": procs, "tail": tail}
+    _LAUNCHED = {"procs": procs, "tail": tail, "at": time.monotonic()}
     return _LAUNCHED
 
 
@@ -110,7 +115,7 @@ def test_registry_tail_passes_driver_mirror_gate():
     assert tail, "registry fits the driver window; nothing to certify"
     outs = []
     for proc in procs:
-        out, _ = proc.communicate(timeout=1800)
+        out = join(proc, state["at"])
         outs.append((proc.returncode, out))
     failed = [out[-4000:] for rc, out in outs if rc != 0]
     assert not failed, "registry tail gate failed:\n" + "\n---\n".join(failed)

@@ -14,6 +14,9 @@ Guard rails:
   exactly as before;
 - children run with a smaller local[] so parent + children + tail-gate
   shards oversubscribe the 32 cores only mildly (all latency-bound);
+- the number of children follows the host's cores and memory
+  (tests/concurrency.py ``child_jvm_slots``), so a small host is not run
+  out of memory;
 - a missing/renamed module in the map is ignored (falls back to the
   parent run) — the map is a cache, never a correctness input.
 """
@@ -25,9 +28,14 @@ import os
 import subprocess
 import sys
 import tempfile
+import time
 
-REPO = "/root/repo"
-N_SHARDS = 6
+from concurrency import child_jvm_slots, join
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# at most 6 children; a smaller host gets what its child JVM slots leave
+# beside the registry-tail gate
+N_SHARDS = min(6, max(1, child_jvm_slots() - child_jvm_slots() // 2))
 # modules this machinery itself lives in must never be sharded out
 NEVER_SHARD = {
     "test_suite_shards.py",
@@ -97,10 +105,10 @@ def launch(modules_by_shard: list[list[str]]) -> dict:
         # (measured: 4 shards 13:11, the children were the critical path)
         OLAKE_TEST_SPARK_MASTER="local[6]",
         # the session default driver heap is 48g (sized for the sf0.1
-        # bench); 7 concurrent suite JVMs at -Xmx48g would let lazy GC
+        # bench); concurrent suite JVMs at -Xmx48g would let lazy GC
         # balloon aggregate RSS past the box and stall everyone on
-        # reclaim — unit fixtures fit comfortably in 6g
-        OLAKE_DRIVER_MEM=os.environ.get("OLAKE_SHARD_DRIVER_MEM", "6g"),
+        # reclaim — unit fixtures keep ~0.6 GB live, so 3g leaves room
+        OLAKE_DRIVER_MEM=os.environ.get("OLAKE_SHARD_DRIVER_MEM", "3g"),
     )
     procs = [
         subprocess.Popen(
@@ -117,7 +125,7 @@ def launch(modules_by_shard: list[list[str]]) -> dict:
         )
         for shard in modules_by_shard
     ]
-    _LAUNCHED = {"procs": procs, "shards": modules_by_shard}
+    _LAUNCHED = {"procs": procs, "shards": modules_by_shard, "at": time.monotonic()}
     return _LAUNCHED
 
 
@@ -136,7 +144,7 @@ def test_suite_shards_all_green():
     bad = []
     walls = []
     for shard, proc in zip(state["shards"], state["procs"]):
-        out, _ = proc.communicate(timeout=1800)
+        out = join(proc, state["at"])
         m = re.search(r"in (\d+\.\d+)s", out)
         walls.append(f"{shard[0]}+{len(shard) - 1}: {m.group(1)}s" if m else "?")
         # exit 0 = green, 5 = no tests collected (stale map entry → the
@@ -154,3 +162,38 @@ def test_suite_shards_all_green():
     assert not bad, "suite shards failed:\n" + "\n===\n".join(
         f"shard {s} rc={rc}\n{o}" for s, rc, o in bad
     )
+
+
+def test_child_jvm_slots_follow_cores_and_memory(monkeypatch):
+    """A 4-core / 16 GB host gets 2 tail + 2 shard children instead of
+    the 10 + 6 sized for a 32-core box; a large host keeps those caps."""
+    import concurrency
+
+    def slots(cores: int, avail_gb: float) -> int:
+        monkeypatch.setattr(os, "sched_getaffinity", lambda _pid: set(range(cores)))
+        monkeypatch.setattr(concurrency, "_mem_available_gb", lambda: avail_gb)
+        concurrency.child_jvm_slots.cache_clear()
+        return concurrency.child_jvm_slots()
+
+    try:
+        assert slots(4, 15.2) == 4  # memory-bound: (15.2 - 3) // 2.5
+        assert slots(4, 64.0) == 8  # core-bound: two per core
+        assert slots(1, 2.0) == 2  # never below one tail + one shard child
+        assert slots(32, 250.0) >= 16  # the 10 + 6 fan-out still fits
+    finally:
+        concurrency.child_jvm_slots.cache_clear()
+
+
+def test_join_kills_a_child_past_the_deadline(monkeypatch):
+    import concurrency
+
+    monkeypatch.setattr(concurrency, "FANOUT_DEADLINE_S", 1)
+    proc = subprocess.Popen(
+        [sys.executable, "-c", "import time; print('up', flush=True); time.sleep(60)"],
+        stdout=subprocess.PIPE,
+        stderr=subprocess.STDOUT,
+        text=True,
+    )
+    out = concurrency.join(proc, time.monotonic())
+    assert proc.returncode != 0
+    assert out.startswith("up\n") and "killed: still running 1 s" in out

@@ -14,6 +14,7 @@ Flags (place anywhere in argv):
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -87,13 +88,11 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     if vanilla:
         # Mimic the driver's harness: a bare session with no engine confs.
-        import os
-
         from pyspark.sql import SparkSession
 
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
