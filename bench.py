@@ -227,7 +227,7 @@ def make_cdc_replay(spark, sf_dir: str, tmp: str):
     produces a materialized table."""
     from pyspark.sql import functions as F
 
-    from olake_spark.queries import _events_changelog
+    from olake_spark.queries.ingest import _events_changelog
     from olake_spark.sinks.table import ManagedTable
     from olake_spark.streaming.replay import replay_batches
 

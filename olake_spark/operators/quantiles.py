@@ -66,6 +66,14 @@ def _collect_bounded(df: DataFrame, what: str, limit: int = DRIVER_STATE_MAX_ROW
     return rows
 
 
+def _join_groups(base: DataFrame, per_group: DataFrame, keys: list[str]) -> DataFrame:
+    """Broadcast-join one row per group onto ``base``; keyless (one global
+    group) it is a cross join against the single row."""
+    if not keys:
+        return base.crossJoin(F.broadcast(per_group))
+    return base.join(F.broadcast(per_group), keys)
+
+
 def _ddl(key_schema: str, rest: str) -> str:
     """Join a (possibly empty — global, keyless search) key schema with
     the fixed output columns without a leading-comma parse error."""
@@ -402,7 +410,7 @@ def median_mad(
             [[*k, m] for k, m in med_by_key.items()],
             _ddl(state_schema, "_medm long"),
         )
-        dev = base.join(F.broadcast(med_df), keys).select(
+        dev = _join_groups(base, med_df, keys).select(
             *keys, F.abs(F.col("_vm") - F.col("_medm")).alias("_vm")
         )
         mad_states = []
@@ -425,7 +433,7 @@ def median_mad(
                 _ddl(state_schema, "_medm long, _madm long"),
             )
             rep = (
-                base.join(F.broadcast(mm_df), keys)
+                _join_groups(base, mm_df, keys)
                 .groupBy(*keys)
                 .agg(
                     F.sum(

@@ -1,0 +1,2576 @@
+"""Registry entries for deduplication and similarity search: exact, MinHash,
+SimHash and substring dedup, brute-force/LSH/IVF/PQ top-k, sketches,
+fuzzy joins, decontamination and entity resolution."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from olake_spark.materialize import materialize
+from olake_spark.operators import dedup as dd
+from olake_spark.operators import similarity as sim
+from olake_spark.operators import sketches as sk
+from olake_spark.operators import text as tx
+from olake_spark.queries.core import register, table
+from olake_spark.queries.fragments import (
+    _BUCKET_SQL,
+    _COS,
+    _H60,
+    _HS,
+    IVF_CELL_SCORED_CTE,
+    _MIX_WEIGHTS,
+    _NORM,
+    _PACK_BUDGET,
+    _PACK_SHARDS,
+    PQ_ENC_CTE,
+    PQ_LUT_CTE,
+    PQ_QV_CTE,
+    PQ_STRIDE_CB_CTE,
+    _PQ_SUB_LEN,
+    PQ_SUBS_CTE,
+    _PUNCT_SQL,
+    _SK_H,
+    _TOKS,
+    cosine_topk,
+    _stop_list,
+)
+
+
+# ---------------------------------------------------------------------------
+# Grid-bucketed ε-neighbor spatial self-join (exact integer micro-units)
+# ---------------------------------------------------------------------------
+
+_SPATIAL_ORACLE = """
+WITH pts AS (
+  SELECT vec_id, round(embedding[1]::DOUBLE * 1000000)::BIGINT AS x,
+         round(embedding[2]::DOUBLE * 1000000)::BIGINT AS y
+  FROM embeddings
+)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       ((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))::BIGINT
+         AS dist2_micros
+FROM pts a JOIN pts b ON a.vec_id < b.vec_id
+WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+      <= 50000::BIGINT * 50000::BIGINT
+"""
+
+
+@register("spatial_eps_neighbor_pairs", _SPATIAL_ORACLE)
+def spatial_eps_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All point pairs within ε = 0.05 on the embedding's first two
+    dimensions (operators/spatial.grid_neighbor_pairs): coordinates
+    quantize to BIGINT micro-units (exact — no FP boundary flips), any
+    qualifying pair shares the same or an adjacent ε-cell, so candidates
+    are an equi-join of points against their 3×3 neighborhood (fixed 9×
+    fan-out, ONE hash shuffle on the cell key) with an exact integer L2²
+    verify. The oracle is the brute-force O(n²) join — the gate proves
+    the grid candidate set is lossless."""
+    from olake_spark.operators.spatial import grid_neighbor_pairs
+
+    pts = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.element_at("embedding", 1).alias("x"),
+        F.element_at("embedding", 2).alias("y"),
+    )
+    return grid_neighbor_pairs(pts, "vec_id", "x", "y", eps=0.05)
+
+
+# ---------------------------------------------------------------------------
+# Rank statistics: Mann-Whitney U and Spearman correlation, exact
+# ---------------------------------------------------------------------------
+
+_EDITDIST1_ORACLE = """
+WITH c AS (SELECT c_custkey, c_name FROM customer)
+SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+       a.c_name AS text_a, b.c_name AS text_b,
+       levenshtein(a.c_name, b.c_name)::INT AS dist
+FROM c a JOIN c b ON a.c_custkey < b.c_custkey
+WHERE levenshtein(a.c_name, b.c_name) <= 1
+"""
+
+
+@register("customer_editdist1_pairs", _EDITDIST1_ORACLE)
+def customer_editdist1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All customer-name pairs within Levenshtein distance 1 via the
+    FastSS deletion-neighborhood join (operators/fuzzy.editdist1_join):
+    index {s} ∪ deletions(s), equi-join on the variant, verify
+    candidates with one levenshtein — the cross join never exists and
+    the d=1 index is smaller than the q-gram machinery fuzzy_join pays
+    for larger distances. The ORACLE is deliberately the brute-force
+    O(n²) levenshtein join — an algorithmically INDEPENDENT check that
+    the deletion index is lossless, not a mirror of the Spark plan."""
+    from olake_spark.operators.fuzzy import editdist1_join
+
+    c = table(spark, sf_dir, "customer")
+    return editdist1_join(c, "c_custkey", "c_name").select(
+        "id_a", "id_b", "text_a", "text_b", "dist"
+    )
+
+
+# ---------------------------------------------------------------------------
+# dedup family
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "dedup_exact",
+    f"""
+    SELECT md5({_NORM}) AS fingerprint, min(doc_id) AS representative,
+           count(*) AS n_dupes
+    FROM documents GROUP BY 1
+    """,
+)
+def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dd.exact_dedup(table(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def _minhash_sig_sql() -> str:
+    h = _H60.format(x="s")
+    mins = ", ".join(
+        f"min(({a}*h + {b}) % {dd.HASH_PRIME}) AS m{i}"
+        for i, (a, b) in enumerate(dd.MINHASH_PARAMS)
+    )
+    return f"""
+    sh AS (
+      SELECT doc_id, unnest(list_distinct(list_transform(
+          range(1, greatest(length({_NORM})-4,1)+1),
+          i -> substring({_NORM}, i::INT, 5)))) AS s
+      FROM documents
+    ), hashed AS (SELECT doc_id, {h} % {dd.HASH_PRIME} AS h FROM sh),
+    sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
+    """
+
+
+def _minhash_oracle(threshold: float = 0.7, num_bands: int = 4) -> str:
+    k = len(dd.MINHASH_PARAMS)
+    rpb = k // num_bands
+    band_selects = []
+    for j in range(num_bands):
+        cols = ", ".join(f"m{j*rpb+r}::VARCHAR" for r in range(rpb))
+        band_selects.append(
+            f"SELECT doc_id, {j} AS band, md5(concat_ws('|', {cols})) AS bh FROM sig"
+        )
+    bands = " UNION ALL ".join(band_selects)
+    eq = " + ".join(f"(sa.m{i} = sb.m{i})::INT" for i in range(k))
+    return f"""
+    WITH {_minhash_sig_sql()},
+    bands AS ({bands}),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
+    )
+    SELECT id_a, id_b, round(({eq})/{float(k)}, 6) AS est_jaccard
+    FROM cand JOIN sig sa ON sa.doc_id = id_a JOIN sig sb ON sb.doc_id = id_b
+    WHERE round(({eq})/{float(k)}, 6) >= {threshold}
+    """
+
+
+@register("dedup_minhash_lsh", _minhash_oracle())
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dd.minhash_near_dups(table(spark, sf_dir, "documents"), "doc_id", "text", 0.7)
+
+
+def _cluster_oracle() -> str:
+    """Connected components over the MinHash pairs via a recursive
+    reachability CTE: cluster id = min id reachable from each doc (docs with
+    no pair cluster to themselves)."""
+    return f"""
+    WITH RECURSIVE mh AS MATERIALIZED ({_minhash_oracle()}),
+    edges AS MATERIALIZED (
+      SELECT id_a AS src, id_b AS dst FROM mh
+      UNION SELECT id_b, id_a FROM mh
+    ),
+    reach(src, dst) AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    )
+    SELECT d.doc_id,
+           least(d.doc_id, coalesce(min(r.dst), d.doc_id)) AS cluster_id
+    FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
+    GROUP BY d.doc_id
+    """
+
+
+@register("dedup_minhash_clusters", _cluster_oracle())
+def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pair → cluster step of the dedup pipeline (operators/dedup.py
+    connected_components): MinHash candidate pairs collapse into
+    min-label connected components; every document gets a cluster id
+    (singletons label themselves)."""
+    docs = table(spark, sf_dir, "documents")
+    pairs = dd.minhash_near_dups(docs, "doc_id", "text", 0.7)
+    return dd.connected_components(docs.select("doc_id"), pairs)
+
+
+def _simhash_sql() -> str:
+    h = _H60.format(x="w")
+    votes = ", ".join(
+        f"sum(((h >> {b}) & 1)*2 - 1) AS v{b}" for b in range(dd.SIMHASH_BITS)
+    )
+    bits = " + ".join(
+        f"CASE WHEN v{b} > 0 THEN {1 << b}::BIGINT ELSE 0 END" for b in range(dd.SIMHASH_BITS)
+    )
+    return f"""
+    tok AS (SELECT doc_id, unnest({_TOKS}) AS w FROM documents),
+    th AS (SELECT doc_id, {h} AS h FROM tok),
+    votes AS (SELECT doc_id, {votes} FROM th GROUP BY doc_id),
+    sim AS (SELECT doc_id, ({bits}) AS simhash FROM votes)
+    """
+
+
+def _simhash_oracle(max_hamming: int = 3) -> str:
+    width = dd.SIMHASH_BITS // dd.SIMHASH_BANDS
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, simhash, {j} AS band, (simhash >> {j*width}) & {(1<<width)-1} AS bv FROM sim"
+        for j in range(dd.SIMHASH_BANDS)
+    )
+    return f"""
+    WITH {_simhash_sql()},
+    bands AS ({bands})
+    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+           bit_count(xor(a.simhash, b.simhash))::INT AS hamming
+    FROM bands a JOIN bands b ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+    """
+
+
+@register("dedup_simhash", _simhash_oracle())
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dd.simhash_near_dups(table(spark, sf_dir, "documents"), "doc_id", "text", 3)
+
+
+@register(
+    "dedup_ngram_jaccard",
+    f"""
+    WITH g AS (
+      SELECT doc_id, unnest(list_distinct(list_transform(
+         range(1, greatest(len({_TOKS})-2,1)+1),
+         i -> array_to_string(({_TOKS})[i:i+2], ' ')))) AS ng
+      FROM documents
+    ), sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
+    dfreq AS (SELECT ng, count(*) AS df FROM g GROUP BY ng),
+    gc AS (SELECT g.doc_id, g.ng FROM g JOIN dfreq USING (ng) WHERE df <= 100),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+      FROM gc a JOIN gc b ON a.ng = b.ng AND a.doc_id < b.doc_id GROUP BY 1,2
+    )
+    SELECT id_a, id_b, round(c*1.0/(s1.n + s2.n - c), 6) AS jaccard
+    FROM inter JOIN sizes s1 ON s1.doc_id = id_a JOIN sizes s2 ON s2.doc_id = id_b
+    WHERE round(c*1.0/(s1.n + s2.n - c), 6) >= 0.2
+    """,
+)
+def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dd.ngram_jaccard_pairs(
+        table(spark, sf_dir, "documents"), "doc_id", "text", 3, 0.2, max_df=100
+    )
+
+
+@register(
+    "similarity_topk_bruteforce",
+    f"""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
+    scored AS (
+      SELECT q.query_id, c.vec_id AS neighbor_id,
+             round({_COS.format(a='q.qv', b='c.embedding')}, 9) AS s9
+      FROM q JOIN embeddings c ON c.vec_id <> q.query_id
+    ), {cosine_topk(5)}
+    """,
+)
+def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = table(spark, sf_dir, "embeddings")
+    return sim.brute_force_topk(emb.filter(F.col("vec_id") < 5), emb, k=5)
+
+
+def _plane_literal(plane: list[int]) -> str:
+    return "[" + ", ".join(f"{float(w)!r}" for w in plane) + "]::DOUBLE[]"
+
+
+def _lsh_sig_sql(vec: str, planes: list[list[int]] | None = None) -> str:
+    terms = [
+        f"CASE WHEN list_dot_product({vec}::DOUBLE[], {_plane_literal(p)}) > 0 "
+        f"THEN {1 << j} ELSE 0 END"
+        for j, p in enumerate(planes if planes is not None else sim.LSH_PLANES)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _lsh_bands_sql(vec: str, src: str = "embeddings") -> str:
+    """UNION ALL of one (vec_id, embedding, band, sig) select per LSH table —
+    the banded multi-table relation the Spark side builds with
+    explode(lsh_bands(...))."""
+    return " UNION ALL ".join(
+        f"SELECT vec_id, {vec}, {i} AS band, {_lsh_sig_sql(vec, planes)} AS sig FROM {src}"
+        for i, planes in enumerate(sim.lsh_planes())
+    )
+
+
+@register(
+    "similarity_topk_lsh",
+    f"""
+    WITH bands AS ({_lsh_bands_sql('embedding')}),
+    q AS (SELECT vec_id AS query_id, embedding AS qv, band, sig FROM bands WHERE vec_id < 5),
+    scored AS (
+      SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
+             round({_COS.format(a='q.qv', b='c.embedding')}, 9) AS s9
+      FROM q JOIN bands c ON c.band = q.band AND c.sig = q.sig AND c.vec_id <> q.query_id
+    ), {cosine_topk(5)}
+    """,
+)
+def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded multi-table LSH top-k (union of band matches across L tables —
+    operators/similarity.py lsh_bucket_topk)."""
+    emb = table(spark, sf_dir, "embeddings")
+    return sim.lsh_bucket_topk(emb.filter(F.col("vec_id") < 5), emb, k=5)
+
+
+@register(
+    "similarity_topk_ivf",
+    f"""
+    WITH cents AS (
+      SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id % 97 = 0
+    ), assign AS (
+      SELECT e.vec_id, e.embedding, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cent_id) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ), cells AS (
+      SELECT vec_id, embedding, cent_id AS cell FROM assign WHERE rn = 1
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qv, cell FROM cells WHERE vec_id < 5
+    ), {IVF_CELL_SCORED_CTE}, {cosine_topk(5)}
+    """,
+)
+def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate top-k: corpus partitioned into nearest-centroid
+    cells (deterministic centroid subset so the oracle reproduces the
+    index), query searches only its cell (operators/similarity.py
+    ivf_topk)."""
+    emb = table(spark, sf_dir, "embeddings")
+    return sim.ivf_topk(emb.filter(F.col("vec_id") < 5), emb, k=5)
+
+
+@register(
+    "similarity_topk_ivf_nprobe",
+    f"""
+    WITH cents AS (
+      SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id % 97 = 0
+    ), assign AS (
+      SELECT e.vec_id, e.embedding, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cent_id) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ), cells AS (
+      SELECT vec_id, embedding, cent_id AS cell FROM assign WHERE rn = 1
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qv, cent_id AS cell
+      FROM assign WHERE vec_id < 5 AND rn <= 2
+    ), {IVF_CELL_SCORED_CTE}, {cosine_topk(2)}
+    """,
+)
+def similarity_topk_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF with the two scale levers the round-2 verdict asked for: the
+    index is a PRECOMPUTED (id, vec, cell) assignment handed to the query
+    (``ivf_build_index`` → ``ivf_topk(index=...)`` — at 100 TB this is a
+    bucketed table, built once, not a per-run cost), and ``nprobe=2``
+    searches the two nearest cells per query for recall."""
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.stride_centroids(emb)
+    idx = sim.ivf_build_index(emb, cents)
+    return sim.ivf_topk(
+        emb.filter(F.col("vec_id") < 5), centroids=cents, index=idx, k=2, nprobe=2
+    )
+
+
+_KMEANS_K = 8
+_KMEANS_ITERS = 2
+_KMEANS_SCALE = 10_000
+
+
+def _kmeans_cte(iters: int = _KMEANS_ITERS, k: int = _KMEANS_K) -> str:
+    """Unrolled Lloyd's iterations over quantized vectors — every sum is an
+    exact integer below 2^53, so the result is identical under any
+    aggregation order in any engine (see ivf_train_centroids docstring)."""
+    cos = _COS.format(a="qv.v", b="c.cv")
+    parts = [
+        f"qv AS (SELECT vec_id, list_transform(embedding::DOUBLE[],"
+        f" x -> floor(x * {float(_KMEANS_SCALE)})) AS v FROM embeddings)",
+        f"c0 AS (SELECT vec_id AS cid, v AS cv, 1::BIGINT AS n FROM qv"
+        f" ORDER BY vec_id LIMIT {k})",
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"""a{i} AS (
+      SELECT qv.vec_id, qv.v, c.cid,
+             row_number() OVER (PARTITION BY qv.vec_id
+               ORDER BY round({cos}, 9) DESC, c.cid) AS rn
+      FROM qv CROSS JOIN c{i-1} c
+    )"""
+        )
+        parts.append(
+            f"""m{i} AS (
+      SELECT cid, pos, sum(x) AS s, count(*) AS cnt
+      FROM (SELECT cid, unnest(v) AS x, generate_subscripts(v, 1) AS pos
+            FROM a{i} WHERE rn = 1)
+      GROUP BY cid, pos
+    )"""
+        )
+        parts.append(
+            f"c{i} AS (SELECT cid, list(s ORDER BY pos) AS cv, max(cnt) AS n"
+            f" FROM m{i} GROUP BY cid)"
+        )
+    return ",\n    ".join(parts)
+
+
+@register(
+    "ivf_kmeans_quantized",
+    f"""
+    WITH {_kmeans_cte()}
+    SELECT cid AS cent_id, n AS n_members,
+           to_json(cv::BIGINT[]) AS centsum_json
+    FROM c{_KMEANS_ITERS}
+    """,
+)
+def ivf_kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed Lloyd's k-means (operators/similarity.py
+    ivf_train_centroids) in its exactly-reproducible quantized form:
+    components quantize to floor(x*1e4) and centroids stay per-dimension
+    SUMS (cosine is scale-invariant), so every aggregate is an exact
+    integer — bit-identical under any partitioning, verifiable by a SQL
+    oracle despite being an iterative algorithm."""
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.ivf_train_centroids(
+        emb, k=_KMEANS_K, iters=_KMEANS_ITERS, quantize_scale=_KMEANS_SCALE
+    )
+    return cents.select(
+        F.col("_cent_id").alias("cent_id"),
+        F.col("_n").alias("n_members"),
+        F.to_json(F.col("_cent_v").cast("array<long>")).alias("centsum_json"),
+    )
+
+
+@register(
+    "similarity_topk_ivf_trained",
+    f"""
+    WITH {_kmeans_cte()},
+    assign AS (
+      SELECT e.vec_id, e.embedding, c.cid,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cid) AS rn
+      FROM embeddings e CROSS JOIN c{_KMEANS_ITERS} c
+    ), cells AS (
+      SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qv, cell FROM cells WHERE vec_id < 5
+    ), {IVF_CELL_SCORED_CTE}, {cosine_topk(5)}
+    """,
+)
+def similarity_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The k-means path wired end-to-end (round-2 verdict item 1): train
+    quantized centroids, build the cell index from them, answer top-k from
+    the trained cells — all under the exact-value oracle."""
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.ivf_train_centroids(
+        emb, k=_KMEANS_K, iters=_KMEANS_ITERS, quantize_scale=_KMEANS_SCALE
+    )
+    return sim.ivf_topk(emb.filter(F.col("vec_id") < 5), emb, centroids=cents, k=5)
+
+
+@register(
+    "similarity_topk_lsh_indexed",
+    f"""
+    WITH bands AS ({_lsh_bands_sql('embedding')}),
+    q AS (SELECT vec_id AS query_id, embedding AS qv, band, sig FROM bands WHERE vec_id < 5),
+    scored AS (
+      SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
+             round({_COS.format(a='q.qv', b='c.embedding')}, 9) AS s9
+      FROM q JOIN bands c ON c.band = q.band AND c.sig = q.sig AND c.vec_id <> q.query_id
+    ), {cosine_topk(5)}
+    """,
+)
+def similarity_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH top-k answered from a PRECOMPUTED banded relation
+    (``lsh_build_index`` → ``lsh_bucket_topk(index=...)`` — the round-3
+    verdict's artifact-lifecycle fix, mirroring the IVF index): the
+    corpus-wide signature pass is the build step, each query run signs only
+    the query set. Results must be identical to ``similarity_topk_lsh``,
+    so the oracle SQL is the same."""
+    emb = table(spark, sf_dir, "embeddings")
+    idx = sim.lsh_build_index(emb)
+    return sim.lsh_bucket_topk(emb.filter(F.col("vec_id") < 5), index=idx, k=5)
+
+
+_PQ_ORACLE = f"""
+    WITH {PQ_QV_CTE},
+    {PQ_STRIDE_CB_CTE},
+    {PQ_SUBS_CTE},
+    {PQ_ENC_CTE},
+    {PQ_LUT_CTE},
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, sum(l.pd)::BIGINT AS adc_dot
+      FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+        AND l.query_id <> e.vec_id
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, "rank", adc_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id)::INT AS "rank"
+      FROM scored
+    ) WHERE "rank" <= 5
+    """
+
+
+_IVFPQ_ORACLE = f"""
+    WITH {PQ_QV_CTE},
+    {PQ_STRIDE_CB_CTE},
+    {PQ_SUBS_CTE},
+    {PQ_ENC_CTE},
+    cents AS (
+      SELECT vec_id AS cent_id, embedding AS ccv FROM embeddings WHERE vec_id % 97 = 0
+    ),
+    assign AS (
+      SELECT e.vec_id, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.ccv')}, 9) DESC,
+                        c.cent_id) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ),
+    cells AS (SELECT vec_id, cent_id AS cell FROM assign WHERE rn = 1),
+    qcells AS (
+      SELECT vec_id AS query_id, cent_id AS cell FROM assign
+      WHERE vec_id < 3 AND rn <= 2
+    ),
+    {PQ_LUT_CTE},
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, sum(l.pd)::BIGINT AS adc_dot
+      FROM enc e
+      JOIN cells ce ON ce.vec_id = e.vec_id
+      JOIN qcells qc ON qc.cell = ce.cell
+      JOIN lut l ON l.query_id = qc.query_id AND l.sub = e.sub AND l.code = e.code
+      WHERE l.query_id <> e.vec_id
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, "rank", adc_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id)::INT AS "rank"
+      FROM scored
+    ) WHERE "rank" <= 3
+    """
+
+
+@register("similarity_topk_ivfpq", _IVFPQ_ORACLE)
+def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The classic IVF-PQ pruned scan composed end-to-end (operators/pq.py
+    ivfpq_index / ivfpq_topk): coarse stride-centroid cells prune the
+    corpus to each query's nprobe=2 nearest cells, PQ codes ADC-score only
+    those cells' vectors. The persisted artifact is (id, cell, m codes) —
+    m+1 small ints per vector — and neither the corpus nor the index
+    shuffles at query time (per-query LUT replicated per probed cell and
+    broadcast). Exact-integer ADC keeps the oracle bit-for-bit."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.stride_centroids(emb)
+    cb = _pq.pq_stride_codebooks(emb)
+    idx = _pq.ivfpq_index(emb, cents, cb)
+    return _pq.ivfpq_topk(
+        emb.filter(F.col("vec_id") < 3), idx, cb, cents, k=3, nprobe=2
+    )
+
+
+_PQT_K, _PQT_ITERS = 8, 2
+
+
+def _pq_subspace_kmeans_cte(sub: int, k: int = _PQT_K, iters: int = _PQT_ITERS) -> str:
+    """Unrolled per-subspace L2 Lloyd's iterations over quantized
+    sub-vectors — init = first k by id, assignment = exact-integer squared
+    distance (ties → lowest code), update = per-dimension floor-mean
+    (floor of an exact-integer ratio) — mirroring pq_train_codebooks."""
+    sqd = (
+        "list_sum(list_transform(range(1, {n}+1), "
+        "i -> (s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])))".format(n=_PQ_SUB_LEN)
+    )
+    parts = [
+        f"s{sub}c0 AS (SELECT vec_id AS code, sv AS cv FROM subs"
+        f" WHERE sub = {sub} ORDER BY vec_id LIMIT {k})"
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"""s{sub}a{i} AS (
+      SELECT s.vec_id, s.sv, c.code,
+             row_number() OVER (PARTITION BY s.vec_id
+               ORDER BY {sqd}, c.code) AS rn
+      FROM (SELECT vec_id, sv FROM subs WHERE sub = {sub}) s
+      CROSS JOIN s{sub}c{i-1} c
+    )"""
+        )
+        parts.append(
+            f"""s{sub}c{i} AS (
+      SELECT code, list(m ORDER BY pos) AS cv FROM (
+        SELECT code, pos, floor(sum(x) / count(*)) AS m
+        FROM (SELECT code, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
+              FROM s{sub}a{i} WHERE rn = 1)
+        GROUP BY code, pos
+      ) GROUP BY code
+    )"""
+        )
+    return ",\n    ".join(parts)
+
+
+_PQ_TRAINED_ORACLE = f"""
+    WITH {PQ_QV_CTE},
+    {PQ_SUBS_CTE},
+    {",    ".join(_pq_subspace_kmeans_cte(j) for j in range(4))},
+    cb AS (
+      {" UNION ALL ".join(f"SELECT {j} AS sub, code, cv FROM s{j}c{_PQT_ITERS}" for j in range(4))}
+    ),
+    {PQ_ENC_CTE},
+    {PQ_LUT_CTE},
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, CAST(sum(l.pd) AS BIGINT) AS adc_dot
+      FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+        AND l.query_id <> e.vec_id
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, "rank", adc_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id)::INT AS "rank"
+      FROM scored
+    ) WHERE "rank" <= 5
+    """
+
+
+@register("similarity_topk_pq_trained", _PQ_TRAINED_ORACLE)
+def similarity_topk_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION PQ path end-to-end under the exact-value oracle:
+    per-subspace L2 k-means codebooks (quantized integers, floor-mean
+    updates — operators/pq.py pq_train_codebooks), encode, ADC top-k.
+    Completes the trained-component story the IVF family already has
+    (similarity_topk_ivf_trained)."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    cb = _pq.pq_train_codebooks(emb, k=_PQT_K, iters=_PQT_ITERS)
+    codes = _pq.pq_encode(emb, cb)
+    return _pq.pq_topk(emb.filter(F.col("vec_id") < 3), codes, cb, k=5)
+
+
+# the composition query trains at 1 Lloyd's iteration per k-means (gate
+# budget: each trained component is separately proven at 2 iterations by
+# ivf_kmeans_quantized / similarity_topk_pq_trained; this query proves the
+# trained COMPOSITION, and 1 vs 2 iterations changes nothing about that)
+_IVFPQT_ITERS = 1
+
+_IVFPQ_TRAINED_ORACLE = f"""
+    WITH {_kmeans_cte(iters=_IVFPQT_ITERS)},
+    assign AS (
+      SELECT e.vec_id, c.cid,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cid) AS rn
+      FROM embeddings e CROSS JOIN c{_IVFPQT_ITERS} c
+    ),
+    cells AS (SELECT vec_id, cid AS cell FROM assign WHERE rn = 1),
+    qcells AS (SELECT vec_id AS query_id, cid AS cell FROM assign
+               WHERE rn <= 2 AND vec_id < 3),
+    subids AS (SELECT unnest([0, 1, 2, 3]) AS sub),
+    {PQ_SUBS_CTE},
+    {",    ".join(_pq_subspace_kmeans_cte(j, iters=_IVFPQT_ITERS) for j in range(4))},
+    cb AS (
+      {" UNION ALL ".join(f"SELECT {j} AS sub, code, cv FROM s{j}c{_IVFPQT_ITERS}" for j in range(4))}
+    ),
+    {PQ_ENC_CTE},
+    {PQ_LUT_CTE},
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, CAST(sum(l.pd) AS BIGINT) AS adc_dot
+      FROM enc e
+      JOIN cells cv ON cv.vec_id = e.vec_id
+      JOIN qcells qc ON qc.cell = cv.cell
+      JOIN lut l ON l.sub = e.sub AND l.code = e.code
+        AND l.query_id = qc.query_id AND l.query_id <> e.vec_id
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, "rank", adc_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id)::INT AS "rank"
+      FROM scored
+    ) WHERE "rank" <= 3
+    """
+
+
+@register("similarity_topk_ivfpq_trained", _IVFPQ_TRAINED_ORACLE)
+def similarity_topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PRODUCTION IVF-PQ path end-to-end: TRAINED coarse centroids
+    (quantized Lloyd's, ivf_train_centroids) + TRAINED per-subspace PQ
+    codebooks (pq_train_codebooks) composed into the pruned ADC scan
+    (ivfpq_index → ivfpq_topk, nprobe=2) — the full FAISS-shaped pipeline
+    with every learned component under the exact-value oracle. The oracle
+    reuses the existing k-means CTE machinery (coarse + 4 subspaces), no
+    fresh unrolls; pruning parity (nprobe=n_cells ≡ unpruned PQ over the
+    same trained artifacts) is pinned in tests/test_pq.py."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.ivf_train_centroids(
+        emb, k=_KMEANS_K, iters=_IVFPQT_ITERS, quantize_scale=_KMEANS_SCALE
+    )
+    cb = _pq.pq_train_codebooks(emb, k=_PQT_K, iters=_IVFPQT_ITERS)
+    idx = _pq.ivfpq_index(emb, cents, cb)
+    return _pq.ivfpq_topk(
+        emb.filter(F.col("vec_id") < 3), idx, cb, cents, k=3, nprobe=2
+    )
+
+
+# IVFADC proper: PQ codes encode the RESIDUAL (vector − coarse centroid);
+# scoring adds dot(query, centroid) back per probed cell. Deterministic
+# stride coarse centroids keep the oracle's unrolled work on the residual
+# codebook training only (the trained-coarse composition is proven by
+# similarity_topk_ivfpq_trained; residual vs raw encode is the delta here).
+_IVFADC_ORACLE = f"""
+    WITH qv AS (
+      SELECT vec_id, list_transform(embedding::DOUBLE[], x -> floor(x * 10000.0)) AS v
+      FROM embeddings
+    ),
+    cents AS (
+      SELECT vec_id AS cell, embedding AS ccv,
+             list_transform(embedding::DOUBLE[], x -> floor(x * 10000.0)) AS qc
+      FROM embeddings WHERE vec_id % 97 = 0
+    ),
+    assign AS (
+      SELECT e.vec_id, c.cell,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.ccv')}, 9) DESC,
+                        c.cell) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ),
+    cells AS (SELECT vec_id, cell FROM assign WHERE rn = 1),
+    res AS (
+      SELECT q.vec_id, cl.cell,
+             list_transform(range(1, 65), i -> q.v[i] - c.qc[i]) AS rv
+      FROM qv q JOIN cells cl ON cl.vec_id = q.vec_id
+      JOIN cents c ON c.cell = cl.cell
+    ),
+    subids AS (SELECT unnest([0, 1, 2, 3]) AS sub),
+    subs AS (
+      SELECT vec_id, sub,
+             list_slice(rv, sub*{_PQ_SUB_LEN}+1, sub*{_PQ_SUB_LEN}+{_PQ_SUB_LEN}) AS sv
+      FROM res CROSS JOIN subids
+    ),
+    {",    ".join(_pq_subspace_kmeans_cte(j, iters=_IVFPQT_ITERS) for j in range(4))},
+    cb AS (
+      {" UNION ALL ".join(f"SELECT {j} AS sub, code, cv FROM s{j}c{_IVFPQT_ITERS}" for j in range(4))}
+    ),
+    {PQ_ENC_CTE},
+    qsubs AS (
+      SELECT vec_id, sub,
+             list_slice(v, sub*{_PQ_SUB_LEN}+1, sub*{_PQ_SUB_LEN}+{_PQ_SUB_LEN}) AS sv
+      FROM qv CROSS JOIN subids WHERE vec_id < 3
+    ),
+    lut AS (
+      SELECT q.vec_id AS query_id, cb.sub, cb.code,
+             list_sum(list_transform(range(1, {_PQ_SUB_LEN}+1), i -> q.sv[i]*cb.cv[i])) AS pd
+      FROM qsubs q JOIN cb ON cb.sub = q.sub
+    ),
+    qcells AS (SELECT vec_id AS query_id, cell FROM assign
+               WHERE vec_id < 3 AND rn <= 2),
+    cterm AS (
+      SELECT q.vec_id AS query_id, qc.cell,
+             list_sum(list_transform(range(1, 65), i -> q.v[i]*c.qc[i])) AS ct
+      FROM qv q JOIN qcells qc ON qc.query_id = q.vec_id
+      JOIN cents c ON c.cell = qc.cell
+    ),
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, ce.cell, sum(l.pd) AS r
+      FROM enc e
+      JOIN cells ce ON ce.vec_id = e.vec_id
+      JOIN qcells qc ON qc.cell = ce.cell
+      JOIN lut l ON l.query_id = qc.query_id AND l.sub = e.sub AND l.code = e.code
+      WHERE l.query_id <> e.vec_id
+      GROUP BY 1, 2, 3
+    ),
+    tot AS (
+      SELECT s.query_id, s.neighbor_id, CAST(s.r + t.ct AS BIGINT) AS adc_dot
+      FROM scored s JOIN cterm t ON t.query_id = s.query_id AND t.cell = s.cell
+    )
+    SELECT query_id, neighbor_id, "rank", adc_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id)::INT AS "rank"
+      FROM tot
+    ) WHERE "rank" <= 3
+    """
+
+
+@register("similarity_topk_ivfpq_residual", _IVFADC_ORACLE)
+def similarity_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FAISS IVFADC proper (Jégou et al. §IV): PQ codebooks trained on the
+    RESIDUAL (vector − coarse centroid) instead of the raw vector, the
+    centroid dot added back per probed cell at score time (operators/pq.py
+    ivf_residuals → pq_train_codebooks(scale=1) → pq_encode → ivfadc_topk,
+    nprobe=2). Residuals concentrate near zero, so the same m·k codebook
+    budget resolves finer — ANN_RECALL.json's clustered section measures
+    the recall gap vs the raw-encode variant at identical m."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.stride_centroids(emb)
+    # the residual frame feeds training AND encode — a lazy checkpoint
+    # computes it once per action instead of per consumer (mirrors
+    # FAISS, where residuals are a materialized build artifact)
+    res = _pq.ivf_residuals(emb, cents).transform(materialize)
+    cb = _pq.pq_train_codebooks(
+        res, vec_col="rv", k=_PQT_K, iters=_IVFPQT_ITERS, scale=1
+    )
+    # _cell rides the encode groupBy (carry_cols) — no codes⋈res id join
+    idx = _pq.pq_encode(res, cb, vec_col="rv", scale=1, carry_cols=["_cell"])
+    return _pq.ivfadc_topk(
+        emb.filter(F.col("vec_id") < 3), idx, cb, cents, k=3, nprobe=2
+    )
+
+
+_SQ8_ORACLE = """
+    WITH qv AS (
+      SELECT vec_id, list_transform(embedding::DOUBLE[], x -> floor(x * 10000.0)) AS v
+      FROM embeddings
+    ),
+    idx AS (SELECT unnest(generate_series(1, 64)) AS gi),
+    ex AS (SELECT vec_id, gi - 1 AS i, v[gi] AS x FROM qv CROSS JOIN idx),
+    st AS (SELECT i, min(x) AS mn, max(x) - min(x) AS span FROM ex GROUP BY i),
+    codes AS (
+      SELECT e.vec_id, e.i,
+             CASE WHEN st.span = 0 THEN 0.0
+                  ELSE least(255.0, greatest(0.0,
+                         floor(((e.x - st.mn) * 255.0) / st.span)))
+             END AS code
+      FROM ex e JOIN st ON st.i = e.i
+    ),
+    qw AS (
+      SELECT e.vec_id AS query_id, e.i,
+             e.x * st.span AS w, e.x * 255.0 * st.mn AS cterm
+      FROM ex e JOIN st ON st.i = e.i
+      WHERE e.vec_id < 3
+    ),
+    scored AS (
+      SELECT q.query_id, c.vec_id AS neighbor_id,
+             CAST(sum(q.w * c.code + q.cterm) AS BIGINT) AS sq_score
+      FROM codes c JOIN qw q ON q.i = c.i AND q.query_id <> c.vec_id
+      GROUP BY 1, 2
+    )
+    SELECT query_id, neighbor_id, "rank", sq_score FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY sq_score DESC, neighbor_id)::INT AS "rank"
+      FROM scored
+    ) WHERE "rank" <= 5
+    """
+
+
+@register("similarity_topk_sq8", _SQ8_ORACLE)
+def similarity_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQ8 scalar quantization top-k (operators/pq.py sq8_*) — the third
+    FAISS compression tier next to LSH/IVF and PQ: per-dimension 8-bit
+    codes (4x compression at float32), asymmetric exact-query scoring,
+    where score_255(q,c) = 255 * dot(q, dequantized(c)) keeps every
+    intermediate an exact integer below 2^53 so the DuckDB oracle
+    reproduces the ranking AND the score bit-for-bit. Train stats are d
+    rows (broadcast); encode is one broadcast join (no corpus shuffle);
+    scoring joins the broadcast per-query weight table on the dimension
+    and the per-(query, neighbor) sum combines map-side."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    stats = _pq.sq8_stats(emb)
+    codes = _pq.sq8_encode(emb, stats)
+    return _pq.sq8_topk(emb.filter(F.col("vec_id") < 3), codes, stats, k=5)
+
+
+@register("similarity_topk_pq", _PQ_ORACLE)
+def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ADC top-k (operators/pq.py — the FAISS IVF-PQ
+    compression half): stride codebooks (oracle-reproducible), exact-
+    integer squared-L2 encode, per-query LUT, MIPS ranking by the exact
+    Σ_sub dot(query_sub, codebook[code]) score. The corpus index is m
+    small ints per vector — 64× compression at d=64/m=4 — and the oracle
+    reproduces every adc_dot bit-for-bit because PQ approximates the
+    VECTOR while the arithmetic on the approximation stays integral."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    cb = _pq.pq_stride_codebooks(emb)
+    codes = _pq.pq_encode(emb, cb)
+    return _pq.pq_topk(emb.filter(F.col("vec_id") < 3), codes, cb, k=5)
+
+
+_PQ_REFINED_ORACLE = f"""
+    WITH {PQ_QV_CTE},
+    {PQ_STRIDE_CB_CTE},
+    {PQ_SUBS_CTE},
+    {PQ_ENC_CTE},
+    {PQ_LUT_CTE},
+    scored AS (
+      SELECT l.query_id, e.vec_id AS neighbor_id, sum(l.pd)::BIGINT AS adc_dot
+      FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+        AND l.query_id <> e.vec_id
+      GROUP BY 1, 2
+    ),
+    cand AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT *, row_number() OVER (
+          PARTITION BY query_id ORDER BY adc_dot DESC, neighbor_id) AS rn
+        FROM scored
+      ) WHERE rn <= 9
+    ),
+    refined AS (
+      SELECT c.query_id, c.neighbor_id,
+             list_sum(list_transform(range(1, 65), i -> q.v[i]*n.v[i]))::BIGINT
+               AS exact_dot
+      FROM cand c
+      JOIN qv q ON q.vec_id = c.query_id
+      JOIN qv n ON n.vec_id = c.neighbor_id
+    )
+    SELECT query_id, neighbor_id, "rank", exact_dot FROM (
+      SELECT *, row_number() OVER (
+        PARTITION BY query_id ORDER BY exact_dot DESC, neighbor_id)::INT AS "rank"
+      FROM refined
+    ) WHERE "rank" <= 3
+    """
+
+
+@register("similarity_topk_pq_refined", _PQ_REFINED_ORACLE)
+def similarity_topk_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FAISS ``IndexRefineFlat`` composed end-to-end (r6 verdict #4): the
+    ADC scan returns top-(k·r)=9 CANDIDATES per query from the compressed
+    codes, then operators/pq.py pq_refine fetches only those 9 raw
+    vectors per query (join cost ∝ candidates — bucketed corpus makes it
+    exchange-free at scale) and re-scores them with the exact quantized
+    dot, keeping top-k=3. The compressed scan only has to get the true
+    neighbors INTO the candidate set, not rank them — PQ speed at
+    near-exact recall, the production recall rung above residual ADC
+    (ANN_RECALL.json pq_refine section logs recall + candidate
+    fraction)."""
+    from olake_spark.operators import pq as _pq
+
+    emb = table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 3)
+    cb = _pq.pq_stride_codebooks(emb)
+    codes = _pq.pq_encode(emb, cb)
+    cand = _pq.pq_topk(queries, codes, cb, k=9)
+    return _pq.pq_refine(cand, emb, queries, k=3)
+
+
+@register(
+    "embedding_near_dup_pairs",
+    f"""
+    WITH bands AS ({_lsh_bands_sql('embedding')})
+    SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
+           round({_COS.format(a='a.embedding', b='b.embedding')}, 6) AS cosine_sim
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
+    WHERE round({_COS.format(a='a.embedding', b='b.embedding')}, 6) >= 0.2
+    """,
+)
+def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded multi-table LSH near-dup pairs (operators/similarity.py
+    cosine_near_dup_pairs)."""
+    return sim.cosine_near_dup_pairs(table(spark, sf_dir, "embeddings"), threshold=0.2)
+
+
+@register(
+    "semantic_dedup",
+    f"""
+    WITH RECURSIVE bands AS MATERIALIZED ({_lsh_bands_sql('embedding')}),
+    nd AS MATERIALIZED (
+      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
+      WHERE round({_COS.format(a='a.embedding', b='b.embedding')}, 6) >= 0.3
+    ),
+    edges AS MATERIALIZED (
+      SELECT id_a AS src, id_b AS dst FROM nd
+      UNION SELECT id_b, id_a FROM nd
+    ),
+    reach(src, dst) AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ),
+    cl AS (
+      SELECT e.vec_id,
+             least(e.vec_id, coalesce(min(r.dst), e.vec_id)) AS cluster_id
+      FROM embeddings e LEFT JOIN reach r ON r.src = e.vec_id
+      GROUP BY e.vec_id
+    )
+    SELECT e.vec_id, e.label FROM embeddings e
+    JOIN cl ON cl.vec_id = e.vec_id
+    WHERE cl.cluster_id = e.vec_id
+    """,
+)
+def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full semantic-dedup pipeline, composed end-to-end: embedding LSH
+    candidate pairs (cosine ≥ 0.2) → connected components (min-label +
+    pointer jumping, operators/dedup.py connected_components) → keep the
+    canonical (minimum-id) member of every cluster. This is the
+    training-data shape: 'collapse semantically-identical documents, keep
+    one representative' — at 100 TB each stage is the same bounded
+    bucket-join / label-propagation dataflow verified individually by
+    embedding_near_dup_pairs and dedup_minhash_clusters."""
+    emb = table(spark, sf_dir, "embeddings")
+    pairs = sim.cosine_near_dup_pairs(emb, threshold=0.3)
+    clusters = dd.connected_components(
+        emb.select("vec_id"), pairs, id_col="vec_id"
+    )
+    return dd.keep_canonical(emb.select("vec_id", "label"), clusters, id_col="vec_id")
+
+
+@register(
+    "decontaminate_overlap",
+    f"""
+    WITH toks AS (
+      SELECT doc_id, {_TOKS} AS t FROM documents
+    ), grams AS (
+      SELECT doc_id, array_to_string(t[i:i+3], ' ') AS gram
+      FROM toks, unnest(generate_series(1, len(t) - 3)) AS u(i)
+      WHERE len(t) >= 4
+    ), bench AS (
+      SELECT DISTINCT gram FROM grams WHERE doc_id % 10 = 7
+    ), corp AS (
+      SELECT DISTINCT doc_id, gram FROM grams WHERE doc_id % 10 <> 7
+    ), hits AS (
+      SELECT doc_id, count(*) AS n_shared_ngrams
+      FROM corp JOIN bench USING (gram) GROUP BY 1
+    )
+    SELECT d.doc_id,
+           coalesce(hits.n_shared_ngrams, 0) AS n_shared_ngrams,
+           CASE WHEN coalesce(hits.n_shared_ngrams, 0) > 0 THEN 1 ELSE 0 END AS contaminated
+    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 <> 7) d
+    LEFT JOIN hits USING (doc_id)
+    """,
+)
+def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: every tenth document plays the held-out
+    eval set; corpus docs are scored by distinct shared word 4-grams via a
+    broadcast join against the (small) benchmark n-gram set — the corpus
+    side never shuffles its text."""
+    from olake_spark.operators.decontam import ngram_overlap
+
+    docs = table(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 10 == 7)
+    corpus = docs.filter(F.col("doc_id") % 10 != 7)
+    scored = ngram_overlap(corpus, bench, "doc_id", "text", n=4)
+    return scored.select(
+        "doc_id",
+        "n_shared_ngrams",
+        F.when(F.col("n_shared_ngrams") > 0, F.lit(1)).otherwise(F.lit(0)).alias("contaminated"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# embedding utilities: L2 norm + int8 quantization
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "embedding_quantize_int8",
+    """
+    WITH m AS (
+      SELECT vec_id, embedding,
+             list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS maxabs
+      FROM embeddings
+    )
+    SELECT vec_id,
+           CAST(round(maxabs * 10000, 0) AS BIGINT) AS maxabs_e4,
+           CAST(to_json(CASE WHEN maxabs > 0
+                THEN list_transform(embedding::DOUBLE[],
+                                    x -> CAST(round(x * 127.0 / maxabs) AS INT))
+                ELSE list_transform(embedding::DOUBLE[], x -> 0) END) AS VARCHAR) AS q_json,
+           CAST(round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+                      * 10000, 0) AS BIGINT) AS l2_e4
+    FROM m
+    """,
+)
+def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric max-abs int8 quantization of the embedding column plus the
+    L2 norm — per-row higher-order array functions only (no shuffle); the
+    4×-smaller int8 vectors are the candidate-generation representation at
+    100 TB scale."""
+    from olake_spark.operators.embeddings import quantize_int8
+    from olake_spark.operators.similarity import _norm
+
+    emb = table(spark, sf_dir, "embeddings")
+    qd = quantize_int8(emb, "embedding")
+
+    # arrays don't hash stably across pandas/duckdb bridges (list vs ndarray
+    # repr) — serialize to canonical JSON text for the value-hash gate
+    return qd.select(
+        "vec_id",
+        F.round(F.col("scale") * 127.0 * 10000).cast("bigint").alias("maxabs_e4"),
+        F.to_json(F.col("q")).alias("q_json"),
+        F.round(_norm(F.col("embedding")) * 10000).cast("bigint").alias("l2_e4"),
+    )
+
+
+@register(
+    "curation_pipeline",
+    f"""
+    WITH feat AS (
+      SELECT doc_id, lang, text,
+             length(text)::DOUBLE AS n_chars,
+             len({_TOKS})::DOUBLE AS n_tokens,
+             (length(text) - length(regexp_replace(text, {_PUNCT_SQL}, '', 'g')))::DOUBLE AS n_punct,
+             len(list_filter({_TOKS}, x -> list_contains({{stops}}, x)))::DOUBLE AS n_stop
+      FROM documents
+    ), scored AS (
+      SELECT doc_id, lang, text, n_tokens::BIGINT AS n_tokens,
+             round(CASE WHEN n_chars IS NULL THEN 0.0 ELSE
+                   (least(n_chars/500.0, 1.0)
+                    + (1.0 - CASE WHEN n_chars > 0 THEN n_punct / n_chars ELSE 0.0 END)
+                    + (1.0 - CASE WHEN n_tokens > 0 THEN n_stop / n_tokens ELSE 0.0 END)) / 3.0 END,
+                   6) AS quality_score
+      FROM feat
+    ), kept AS (
+      SELECT * FROM scored WHERE quality_score >= 0.5 AND n_tokens >= 5
+    ), uniq AS (
+      SELECT * FROM kept
+      QUALIFY doc_id = min(doc_id) OVER (PARTITION BY md5({_NORM}))
+    ), wts(lang, wt) AS (VALUES {{mix_values}}),
+    counts AS (SELECT lang, count(*) AS n FROM uniq GROUP BY lang),
+    j AS (SELECT c.lang, c.n, w.wt FROM counts c JOIN wts w USING (lang)),
+    cap AS (SELECT min(n / wt) AS c FROM j),
+    fr AS (SELECT lang, least(1.0, wt * (SELECT c FROM cap) / n) AS f FROM j),
+    mixed AS (
+      SELECT u.doc_id, u.lang, u.n_tokens,
+             {_BUCKET_SQL.format(x="u.doc_id::VARCHAR || 'pack'")} AS h
+      FROM uniq u JOIN fr ON u.lang = fr.lang
+      WHERE {_BUCKET_SQL.format(x="u.doc_id::VARCHAR || 'mix'")} <
+            CAST(floor(f * {float(_HS)!r}) AS BIGINT)
+    ), cum AS (
+      SELECT doc_id, lang, n_tokens, (h % {_PACK_SHARDS})::INT AS shard,
+             COALESCE(SUM(n_tokens) OVER (
+               PARTITION BY h % {_PACK_SHARDS} ORDER BY h, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum_before
+      FROM mixed
+    )
+    SELECT doc_id, lang, n_tokens, shard,
+           (cum_before // {_PACK_BUDGET})::BIGINT AS seq_in_shard,
+           (cum_before % {_PACK_BUDGET})::BIGINT AS offset_in_seq
+    FROM cum
+    """.replace("{stops}", _stop_list())
+       .replace("{mix_values}", ", ".join(f"('{s}', {w!r})" for s, w in _MIX_WEIGHTS.items())),
+)
+def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The whole corpus-curation last mile as ONE composed lazy plan:
+    quality gate → exact dedup (min-id survivor per fingerprint) → weighted
+    mixture rebalance → sequence packing. Four operators, four narrow
+    shuffles total (fingerprint window, strata count, broadcast-filtered
+    mixture, shard window) — Catalyst pipelines the rest, which is the
+    point of declaring each stage as a DataFrame transform instead of
+    materializing between steps."""
+    from olake_spark.operators.packing import pack_offsets
+    from olake_spark.operators.sampling import mixture_weighted_sample
+
+    docs = tx.with_quality_features(table(spark, sf_dir, "documents"))
+    kept = docs.filter((F.col("quality_score") >= 0.5) & (F.col("n_tokens") >= 5))
+    uniq = dd.drop_exact_dupes(kept, "doc_id", "text")
+    # the mixture stage evaluates its input twice (per-stratum counts +
+    # the hash-threshold scan); cache the gate->dedup result so the
+    # tokenize/quality/fingerprint-window chain runs once (guide §2.1 — at
+    # scale this is "persist the curated corpus", which a production
+    # pipeline does anyway before rebalancing). Project to the three
+    # columns the mixture/packing stages actually read BEFORE caching —
+    # column pruning does not push through a cache boundary, and
+    # materializing the full text column costs more than the recompute it
+    # saves (guide §5). cache(), NOT localCheckpoint: this query declares
+    # zero-jobs-at-construction (test_plans lazy probe) and a lazy
+    # checkpoint still materializes its upstream AQE stages at
+    # construction time.
+    uniq = uniq.select("doc_id", "lang", "n_tokens").cache()
+    mixed = mixture_weighted_sample(uniq, "doc_id", "lang", _MIX_WEIGHTS)
+    packed = pack_offsets(mixed, "doc_id", "n_tokens", budget=_PACK_BUDGET,
+                          n_shards=_PACK_SHARDS)
+    return packed.select(
+        "doc_id", "lang", "n_tokens", "shard", "seq_in_shard", "offset_in_seq"
+    )
+
+
+# positional 5-gram CTEs shared by the two ExactSubstr queries
+_SUBSTR_GRAMS = f"""
+    toks AS (SELECT doc_id, {_TOKS} AS l FROM documents),
+    grams AS (
+      SELECT doc_id, l, unnest(generate_series(1, len(l) - 4)) AS p
+      FROM toks WHERE len(l) >= 5
+    ),
+    gh AS (
+      SELECT doc_id, p,
+        {_H60.format(x="array_to_string(l[p:p+4], ' ')")} AS h
+      FROM grams
+    )"""
+
+_SUBSTR_ISLANDS = """
+    pre AS (
+      SELECT doc_id, p, lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
+      FROM hits
+    ),
+    isl AS (
+      SELECT doc_id, p,
+             sum(CASE WHEN prev IS NULL OR p - prev > 5 THEN 1 ELSE 0 END)
+               OVER (PARTITION BY doc_id ORDER BY p ROWS UNBOUNDED PRECEDING)
+               AS island
+      FROM pre
+    )"""
+
+
+@register(
+    "dedup_exact_substr_spans",
+    f"""
+    WITH {_SUBSTR_GRAMS},
+    dup AS (SELECT h FROM gh GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
+    hits AS (SELECT g.doc_id, g.p FROM gh g JOIN dup USING (h)),
+    {_SUBSTR_ISLANDS}
+    SELECT doc_id, min(p)::INT AS span_start, (max(p)+4)::INT AS span_end,
+           (max(p)+4-min(p)+1)::INT AS span_len, count(*) AS n_grams
+    FROM isl GROUP BY doc_id, island
+    """,
+)
+def dedup_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr dedup, detection half (Lee et al. 2022): every maximal
+    run of token positions whose 5-gram occurs in >= 2 distinct documents,
+    reported as 1-based spans. The distributed plan is a positional
+    inverted index (one shuffle on the gram hash for document frequency,
+    one shuffle on doc id for the islands merge; the window sorts only a
+    single document's duplicated positions) — the join-friendly
+    equivalent of the paper's suffix-array scan. The oracle rebuilds
+    identical spans with SQL window islands over the same grams."""
+    docs = table(spark, sf_dir, "documents")
+    return dd.duplicate_spans(docs, "doc_id", "text", min_len=5, min_docs=2)
+
+
+@register(
+    "dedup_strip_substr",
+    f"""
+    WITH {_SUBSTR_GRAMS},
+    win AS (
+      SELECT h, min(doc_id) AS win, count(DISTINCT doc_id) AS df
+      FROM gh GROUP BY h
+    ),
+    hits AS (
+      SELECT g.doc_id, g.p FROM gh g JOIN win w USING (h)
+      WHERE w.df >= 2 AND g.doc_id != w.win
+    ),
+    {_SUBSTR_ISLANDS},
+    spans AS (
+      SELECT doc_id, min(p) AS span_start, max(p)+4 AS span_end
+      FROM isl GROUP BY doc_id, island
+    ),
+    rpos AS (
+      SELECT DISTINCT doc_id, p FROM (
+        SELECT doc_id, unnest(generate_series(span_start, span_end)) AS p
+        FROM spans)
+    ),
+    tp AS (
+      SELECT doc_id, l, unnest(generate_series(1, len(l))) AS p FROM toks
+    ),
+    kept AS (
+      SELECT t.doc_id, t.p, t.l[t.p] AS tok
+      FROM tp t LEFT JOIN rpos r ON t.doc_id = r.doc_id AND t.p = r.p
+      WHERE r.p IS NULL
+    ),
+    nrem AS (SELECT doc_id, count(*) AS n_removed FROM rpos GROUP BY doc_id),
+    reb AS (
+      SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS clean_text
+      FROM kept GROUP BY doc_id
+    )
+    SELECT n.doc_id, coalesce(r.clean_text, '') AS clean_text, n.n_removed
+    FROM nrem n LEFT JOIN reb r USING (doc_id)
+    """,
+)
+def dedup_strip_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ExactSubstr dedup, removal half: delete every cross-document
+    duplicated >=5-token span from all but its canonical occurrence (the
+    smallest doc_id containing the gram keeps it — deterministic, so both
+    engines agree exactly), and return the rewritten documents with their
+    removed-token counts. Only changed documents are emitted: at corpus
+    scale the cleaned minority is the delta you re-materialize. The
+    oracle replays the same winner policy, islands merge, and ordered
+    token rebuild in pure SQL."""
+    docs = table(spark, sf_dir, "documents")
+    return dd.strip_duplicate_spans(docs, "doc_id", "text", min_len=5)
+
+
+@register(
+    "dedup_line_level",
+    f"""
+    WITH lined AS (
+      SELECT doc_id,
+             text || chr(10) || 'Subscribe to our newsletter' || chr(10) ||
+             CASE WHEN doc_id % 3 = 0 THEN 'Cookie policy applies'
+                  ELSE 'unique line ' || doc_id::VARCHAR END AS text
+      FROM documents
+    ),
+    lines AS (
+      SELECT doc_id, unnest(ls) AS line, unnest(range(1, len(ls) + 1)) AS pos
+      FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM lined)
+    ),
+    keyed AS (SELECT doc_id, pos, line, trim(lower(line)) AS k FROM lines),
+    ldf AS (
+      SELECT k, count(*) AS dfc
+      FROM (SELECT DISTINCT doc_id, k FROM keyed WHERE k <> '') GROUP BY k
+    ),
+    hot AS (SELECT k FROM ldf WHERE dfc > 2),
+    kept AS (
+      SELECT doc_id, pos, line FROM keyed
+      WHERE k = '' OR k NOT IN (SELECT k FROM hot)
+    ),
+    rebuilt AS (
+      SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
+             count(*) AS n_lines
+      FROM kept GROUP BY doc_id
+    )
+    SELECT l.doc_id,
+           COALESCE(r.text, '') AS text,
+           COALESCE(r.n_lines, 0)::BIGINT AS n_lines,
+           (len(string_split(l.text, chr(10))) - COALESCE(r.n_lines, 0))::BIGINT
+             AS n_dropped
+    FROM lined l LEFT JOIN rebuilt r USING (doc_id)
+    """,
+)
+def dedup_line_level(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sub-document boilerplate removal (operators/dedup.py
+    drop_duplicate_lines — the CCNet/C4 line-dedup pass): lines recurring in
+    > max_line_df distinct documents are dropped and each document is
+    reassembled from its surviving lines in order. The fixture corpus is
+    single-line, so the query deterministically appends one corpus-wide
+    boilerplate line (always dropped), a 1-in-3 shared line (dropped), and
+    a per-doc unique line (kept) before applying the operator."""
+    docs = table(spark, sf_dir, "documents")
+    lined = docs.select(
+        "doc_id",
+        F.concat_ws(
+            "\n",
+            F.col("text"),
+            F.lit("Subscribe to our newsletter"),
+            F.when(F.col("doc_id") % 3 == 0, F.lit("Cookie policy applies")).otherwise(
+                F.concat(F.lit("unique line "), F.col("doc_id").cast("string"))
+            ),
+        ).alias("text"),
+    )
+    return dd.drop_duplicate_lines(lined, "doc_id", "text", max_line_df=2)
+
+
+# ---------------------------------------------------------------------------
+# incremental dedup: new batch vs persisted corpus index
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "dedup_incremental_exact",
+    f"""
+    WITH corpus AS (SELECT * FROM documents WHERE doc_id % 8 <> 7),
+    batch AS (
+      SELECT doc_id, text, source, lang FROM documents WHERE doc_id % 8 = 7
+      UNION ALL
+      SELECT doc_id + 1000000, text, source, lang FROM documents WHERE doc_id % 16 = 0
+      UNION ALL
+      SELECT doc_id + 2000000, text, source, lang FROM documents WHERE doc_id % 16 = 15
+    ),
+    idx AS (SELECT md5({_NORM}) AS fp FROM corpus GROUP BY 1),
+    fresh AS (
+      SELECT b.*, md5({_NORM}) AS fp FROM batch b
+      WHERE md5({_NORM}) NOT IN (SELECT fp FROM idx)
+    )
+    SELECT doc_id, source, lang
+    FROM (SELECT *, min(doc_id) OVER (PARTITION BY fp) AS first_id FROM fresh)
+    WHERE doc_id = first_id
+    """,
+)
+def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily-batch exact dedup against a persisted fingerprint index
+    (operators/dedup.py incremental_exact_dedup). Modulo split so the
+    shape holds at every SF: corpus = 7/8 of docs; the batch holds the
+    fresh 1/8, a redelivery of corpus docs (%16==0) under new ids, and a
+    second copy of half the fresh docs (%16==15) under higher ids.
+    Survivors = exactly the fresh docs under their original ids —
+    redeliveries lose to the index, batch-internal copies lose to
+    first-wins; the corpus contributes only its index."""
+    docs = table(spark, sf_dir, "documents")
+    sel = ["doc_id", "text", "source", "lang"]
+    corpus = docs.filter(F.col("doc_id") % 8 != 7)
+    batch = (
+        docs.filter(F.col("doc_id") % 8 == 7)
+        .select(*sel)
+        .unionByName(
+            docs.filter(F.col("doc_id") % 16 == 0).select(
+                (F.col("doc_id") + 1_000_000).alias("doc_id"), "text", "source", "lang"
+            )
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 16 == 15).select(
+                (F.col("doc_id") + 2_000_000).alias("doc_id"), "text", "source", "lang"
+            )
+        )
+    )
+    idx = dd.fingerprint_index(corpus, "doc_id", "text")
+    return dd.incremental_exact_dedup(batch, idx, "doc_id", "text").select(
+        "doc_id", "source", "lang"
+    )
+
+
+def _incremental_minhash_oracle(threshold: float = 0.7, num_bands: int = 4) -> str:
+    k = len(dd.MINHASH_PARAMS)
+    rpb = k // num_bands
+    band_selects = []
+    for j in range(num_bands):
+        cols = ", ".join(f"m{j*rpb+r}::VARCHAR" for r in range(rpb))
+        band_selects.append(
+            f"SELECT doc_id, {j} AS band, md5(concat_ws('|', {cols})) AS bh FROM sig"
+        )
+    bands = " UNION ALL ".join(band_selects)
+    eq = " + ".join(f"(sn.m{i} = sc.m{i})::INT" for i in range(k))
+    return f"""
+    WITH {_minhash_sig_sql()},
+    bands AS ({bands}),
+    cand AS (
+      SELECT DISTINCT n.doc_id AS nid, c.doc_id AS cid
+      FROM bands n JOIN bands c
+        ON n.band = c.band AND n.bh = c.bh AND n.doc_id % 10 = 0 AND c.doc_id % 10 <> 0
+    ),
+    dupes AS (
+      SELECT DISTINCT nid
+      FROM cand JOIN sig sn ON sn.doc_id = nid JOIN sig sc ON sc.doc_id = cid
+      WHERE round(({eq})/{float(k)}, 6) >= {threshold}
+    )
+    SELECT doc_id, source
+    FROM documents
+    WHERE doc_id % 10 = 0 AND doc_id NOT IN (SELECT nid FROM dupes)
+    """
+
+
+@register("dedup_incremental_minhash", _incremental_minhash_oracle())
+def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily-batch NEAR-dup dedup against a persisted MinHash signature
+    index (operators/dedup.py incremental_minhash_dedup): corpus = 9/10
+    of docs contributes only (id, m0..m15); batch = the remaining tenth
+    (modulo split — the shape holds at every SF). A batch doc
+    is dropped iff some corpus doc agrees on >= 1 LSH band AND the full
+    signature estimates Jaccard >= 0.7 — candidates are batch x band-bucket,
+    never batch x corpus."""
+    docs = table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    batch = docs.filter(F.col("doc_id") % 10 == 0)
+    idx = dd.minhash_index(corpus, "doc_id", "text")
+    return dd.incremental_minhash_dedup(batch, idx, "doc_id", "text", threshold=0.7).select(
+        "doc_id", "source"
+    )
+
+
+def _curate_incremental_oracle(threshold: float = 0.7, num_bands: int = 4) -> str:
+    """Composed pipeline oracle: stream_curate's batch-equivalent gate +
+    first-wins dedup over today's arrivals, then incremental MinHash
+    near-dup against the persisted corpus index."""
+    k = len(dd.MINHASH_PARAMS)
+    rpb = k // num_bands
+    band_selects = []
+    for j in range(num_bands):
+        cols = ", ".join(f"m{j*rpb+r}::VARCHAR" for r in range(rpb))
+        band_selects.append(
+            f"SELECT doc_id, {j} AS band, md5(concat_ws('|', {cols})) AS bh FROM sig"
+        )
+    bands = " UNION ALL ".join(band_selects)
+    eq = " + ".join(f"(sn.m{i} = sc.m{i})::INT" for i in range(k))
+    return f"""
+    WITH gated AS (
+      SELECT doc_id, source, text FROM documents
+      WHERE doc_id % 10 = 0 AND len({_TOKS}) >= 5
+    ),
+    uniq AS (
+      SELECT doc_id, source FROM gated
+      QUALIFY doc_id = min(doc_id) OVER (PARTITION BY md5({_NORM}))
+    ),
+    {_minhash_sig_sql()},
+    bands AS ({bands}),
+    cand AS (
+      SELECT DISTINCT n.doc_id AS nid, c.doc_id AS cid
+      FROM bands n JOIN bands c
+        ON n.band = c.band AND n.bh = c.bh
+       AND n.doc_id IN (SELECT doc_id FROM uniq) AND c.doc_id % 10 <> 0
+    ),
+    dupes AS (
+      SELECT DISTINCT nid
+      FROM cand JOIN sig sn ON sn.doc_id = nid JOIN sig sc ON sc.doc_id = cid
+      WHERE round(({eq})/{float(k)}, 6) >= {threshold}
+    )
+    SELECT doc_id, source FROM uniq
+    WHERE doc_id NOT IN (SELECT nid FROM dupes)
+    """
+
+
+@register("curate_incremental_pipeline", _curate_incremental_oracle())
+def curate_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production daily shape COMPOSED (round-3 verdict item 10):
+    today's arrivals (doc_id % 10 = 0) run the streaming curation gate's
+    batch equivalent (``curate_batch``: ≥5 tokens, first-wins per content
+    fingerprint — ``tests/test_stream_curation.py`` pins stream == batch),
+    then incremental MinHash near-dup against the PERSISTED corpus index
+    (corpus = the other 9/10, contributing only signatures). Catches
+    interface drift between the streaming and batch halves: the dedup
+    consumes exactly what the gate emits."""
+    from olake_spark.streaming.curation import curate_batch
+
+    docs = table(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    arrivals = docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "source", "text")
+    curated = curate_batch(arrivals, "doc_id", "text", min_tokens=5)
+    # curated feeds BOTH the batch's signature computation and the final
+    # anti-join inside incremental_minhash_dedup; materialize the gate
+    # chain (tokenize + first-wins fingerprint window) once (guide §2.1)
+    curated = curated.transform(materialize)
+    idx = dd.minhash_index(corpus, "doc_id", "text")
+    return dd.incremental_minhash_dedup(curated, idx, "doc_id", "text", threshold=0.7).select(
+        "doc_id", "source"
+    )
+
+
+# ---------------------------------------------------------------------------
+# embedding group centroids + outlier ranking
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "embedding_centroid_outliers",
+    f"""
+    WITH ex AS (
+      SELECT label, vec_id, unnest(embedding)::DOUBLE AS x,
+             generate_subscripts(embedding, 1) AS pos
+      FROM embeddings
+    ),
+    cent AS (SELECT label, pos, round(avg(x), 6) AS c FROM ex GROUP BY label, pos),
+    carr AS (SELECT label, list(c ORDER BY pos) AS cv FROM cent GROUP BY label),
+    scored AS (
+      SELECT vec_id, e.label,
+             round({_COS.format(a='e.embedding', b='cv')}, 9) AS s9
+      FROM embeddings e JOIN carr USING (label)
+    ),
+    ranked AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY label ORDER BY s9 ASC, vec_id ASC)::INT AS outlier_rank
+      FROM scored
+    )
+    SELECT vec_id, label, round(s9, 6) AS centroid_sim, outlier_rank
+    FROM ranked WHERE outlier_rank <= 5
+    """,
+)
+def embedding_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space outlier detection (operators/embeddings.py
+    centroid_outliers): cosine of every vector to its label's element-wise
+    mean, bottom-5 per label = candidates for label-noise / cluster
+    pruning. Centroid components are rounded to 6 decimals BEFORE the
+    cosine so distributed-sum ordering cannot leak into ranks; the
+    group-sized centroid relation broadcasts."""
+    from olake_spark.operators.embeddings import centroid_outliers
+
+    emb = table(spark, sf_dir, "embeddings")
+    return centroid_outliers(emb, "vec_id", "label", "embedding", dim=64, bottom_k=5)
+
+
+@register(
+    "decontaminate_semantic",
+    f"""
+    WITH bands AS ({_lsh_bands_sql('embedding')}),
+    hits AS (
+      SELECT DISTINCT c.vec_id
+      FROM bands c JOIN bands b
+        ON c.band = b.band AND c.sig = b.sig
+       AND c.vec_id < 450 AND b.vec_id >= 450
+      WHERE round({_COS.format(a='c.embedding', b='b.embedding')}, 6) >= 0.3
+    )
+    SELECT vec_id, label FROM embeddings
+    WHERE vec_id < 450 AND vec_id NOT IN (SELECT vec_id FROM hits)
+    """,
+)
+def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space decontamination (operators/decontam.py
+    semantic_decontaminate): corpus = vectors < 450, benchmark = the rest;
+    a corpus row is dropped iff it collides with a benchmark vector in any
+    LSH table AND exact cosine >= 0.3 — the paraphrase-level contamination
+    the n-gram pass (decontaminate_overlap) cannot see. Benchmark bands
+    broadcast; corpus rows never shuffle."""
+    from olake_spark.operators.decontam import semantic_decontaminate
+
+    emb = table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") < 450)
+    bench = emb.filter(F.col("vec_id") >= 450)
+    return semantic_decontaminate(corpus, bench, "vec_id", "embedding", 0.3).select(
+        "vec_id", "label"
+    )
+
+
+# ---------------------------------------------------------------------------
+# cluster-keyed survivors + near-dup-safe split
+# ---------------------------------------------------------------------------
+
+
+def _keep_canonical_oracle() -> str:
+    return f"""
+    WITH clusters AS MATERIALIZED ({_cluster_oracle()})
+    SELECT d.doc_id, d.source, d.lang
+    FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
+    WHERE c.doc_id = c.cluster_id
+    """
+
+
+@register("dedup_keep_canonical", _keep_canonical_oracle())
+def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The materialization step of the dedup pipeline (operators/dedup.py
+    keep_canonical): pairs -> connected components -> keep exactly the
+    min-id representative of every near-dup cluster, original columns
+    intact (singletons survive as their own representative)."""
+    docs = table(spark, sf_dir, "documents")
+    pairs = dd.minhash_near_dups(docs, "doc_id", "text", 0.7)
+    clusters = dd.connected_components(docs.select("doc_id"), pairs)
+    return dd.keep_canonical(docs, clusters).select("doc_id", "source", "lang")
+
+
+def _cluster_split_oracle(test_fraction: float = 0.2) -> str:
+    bucket = _BUCKET_SQL.format(x="c.cluster_id::VARCHAR || 'cluster-split'")
+    return f"""
+    WITH clusters AS MATERIALIZED ({_cluster_oracle()})
+    SELECT d.doc_id, c.cluster_id,
+           CASE WHEN {bucket} < {int(test_fraction * _HS)}
+                THEN 'test' ELSE 'train' END AS split
+    FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
+    """
+
+
+@register("split_leakage_safe_neardup", _cluster_split_oracle())
+def split_leakage_safe_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NEAR-dup-safe train/test split (operators/sampling.py
+    split_by_cluster): the split key is the connected-component cluster id,
+    so a document and all its near-duplicates land on one side — closing
+    the paraphrase leakage a content-fingerprint split cannot."""
+    from olake_spark.operators.sampling import split_by_cluster
+
+    docs = table(spark, sf_dir, "documents")
+    pairs = dd.minhash_near_dups(docs, "doc_id", "text", 0.7)
+    clusters = dd.connected_components(docs.select("doc_id"), pairs)
+    return split_by_cluster(docs, clusters, "doc_id", 0.2).select(
+        "doc_id", "cluster_id", "split"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Mergeable distinct-count sketches (operators/sketches.py): KMV + HLL-32
+# ---------------------------------------------------------------------------
+
+_KMV_NUM = repr(63.0 * float(2**sk.HASH_BITS))
+_HLL_NUM = repr(sk.HLL_ALPHA * sk.HLL_M * sk.HLL_M * float(2**sk.RHO_SCALE))
+
+_KMV_ORACLE = f"""
+    WITH h AS (
+      SELECT DISTINCT event_type, {_SK_H} AS h FROM events
+    ),
+    rk AS (
+      SELECT event_type, h,
+             row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+      FROM h
+    ),
+    kept AS (SELECT * FROM rk WHERE rn <= 64)
+    SELECT event_type, count(*)::BIGINT AS n_kept, max(h) AS kth_hash,
+           CASE WHEN count(*) < 64 THEN count(*)::DOUBLE
+                ELSE round({_KMV_NUM} / max(h)::DOUBLE, 4)
+           END AS est_distinct
+    FROM kept GROUP BY 1
+    """
+
+
+@register("sketch_kmv_distinct", _KMV_ORACLE)
+def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV (k-minimum-values) distinct-user sketch per event type
+    (operators/sketches.py kmv_sketch, k=64): the sketch STATE (k-th
+    minimum hash) is bit-exact in the oracle, the estimate one exact
+    division rounded late. The 100 TB story is mergeability — per-
+    partition k-smallest sets combine associatively, so the distinct
+    count never re-shuffles raw rows."""
+    ev = table(spark, sf_dir, "events").select("event_type", "user_id")
+    return sk.kmv_sketch(ev, "user_id", ["event_type"], k=64)
+
+
+_HLL_ORACLE = f"""
+    WITH h AS (
+      SELECT event_type, {_SK_H} AS h FROM events
+    ),
+    r AS (SELECT event_type, h % {sk.HLL_M} AS b, h // {sk.HLL_M} AS rest FROM h),
+    rr AS (
+      SELECT event_type, b,
+             CASE WHEN rest = 0 THEN {sk.RHO_SCALE}
+                  ELSE {sk.RHO_SCALE} - length(bin(rest)) END AS rho
+      FROM r
+    ),
+    regs AS (SELECT event_type, b, max(rho) AS m FROM rr GROUP BY 1, 2),
+    gridb AS (SELECT unnest(generate_series(0, {sk.HLL_M - 1})) AS b),
+    keysd AS (SELECT DISTINCT event_type FROM regs),
+    dense AS (
+      SELECT k.event_type, g.b, coalesce(regs.m, 0) AS m
+      FROM keysd k CROSS JOIN gridb g
+      LEFT JOIN regs ON regs.event_type = k.event_type AND regs.b = g.b
+    )
+    SELECT event_type,
+           sum((1::BIGINT << ({sk.RHO_SCALE} - m)))::BIGINT AS harmonic_scaled,
+           sum(CASE WHEN m = 0 THEN 1 ELSE 0 END)::BIGINT AS n_zero_regs,
+           round({_HLL_NUM} / sum((1::BIGINT << ({sk.RHO_SCALE} - m)))::DOUBLE, 4)
+             AS est_distinct
+    FROM dense GROUP BY 1
+    """
+
+
+@register("sketch_hll_distinct", _HLL_ORACLE)
+def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HyperLogLog-32 distinct-user sketch per event type
+    (operators/sketches.py hll_sketch): registers are map-side-
+    combinable MAXes; the harmonic sum stays an exact BIGINT by scaling
+    each 2^-M_j term to 2^(56-M_j), so the sketch state AND the raw
+    estimate (one double division, rounded late) match the oracle
+    bit-for-bit. No libm in the plan — the linear-counting correction is
+    intentionally left to the consumer (n_zero_regs is surfaced)."""
+    ev = table(spark, sf_dir, "events").select("event_type", "user_id")
+    return sk.hll_sketch(ev, "user_id", ["event_type"])
+
+
+# ---------------------------------------------------------------------------
+# Bloom-filter semi-join (operators/bloom.py): runtime-filter pruning
+# ---------------------------------------------------------------------------
+
+_BLM = "('0x' || substring(md5({k}::VARCHAR || ':{j}'),1,15))::BIGINT % 64"
+
+_BLOOM_ORACLE = f"""
+    WITH dim AS (SELECT s_suppkey FROM supplier WHERE s_nationkey < 5),
+    bits AS (
+      SELECT DISTINCT pos FROM (
+        SELECT ({_BLM.format(k='s_suppkey', j=0)}) AS pos FROM dim
+        UNION ALL
+        SELECT ({_BLM.format(k='s_suppkey', j=1)}) FROM dim
+      )
+    ),
+    probe AS (
+      SELECT l_suppkey,
+             ({_BLM.format(k='l_suppkey', j=0)}) AS q0,
+             ({_BLM.format(k='l_suppkey', j=1)}) AS q1
+      FROM lineitem
+    ),
+    flagged AS (
+      SELECT p.l_suppkey,
+             (b0.pos IS NOT NULL AND b1.pos IS NOT NULL) AS pass,
+             (d.s_suppkey IS NOT NULL) AS is_true
+      FROM probe p
+      LEFT JOIN bits b0 ON b0.pos = p.q0
+      LEFT JOIN bits b1 ON b1.pos = p.q1
+      LEFT JOIN dim d ON d.s_suppkey = p.l_suppkey
+    )
+    SELECT count(*)::BIGINT AS n_scanned,
+           sum(CASE WHEN pass THEN 1 ELSE 0 END)::BIGINT AS n_pass_bloom,
+           sum(CASE WHEN is_true THEN 1 ELSE 0 END)::BIGINT AS n_true_match,
+           sum(CASE WHEN pass AND NOT is_true THEN 1 ELSE 0 END)::BIGINT
+             AS n_false_pos
+    FROM flagged
+    """
+
+
+@register("bloom_semi_join_prune", _BLOOM_ORACLE)
+def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Runtime-filter pruning audit (operators/bloom.py): a 64-bit/2-hash
+    Bloom of a selective supplier subset probed against every lineitem
+    row via broadcast joins — one fact scan, zero fact shuffles. The
+    md5-derived bit set makes the EXACT false-positive rows reproducible
+    in the oracle (n_bits deliberately tiny at gate scale so FPs exist
+    and the accounting is exercised; production default is
+    n_bits ≈ 10x|dim|). Spark's InjectRuntimeFilter does this natively
+    with might_contain — this is the portable, oracle-checkable form of
+    the same plan shape."""
+    from olake_spark.operators import bloom as bl
+
+    sup = table(spark, sf_dir, "supplier")
+    dim = sup.filter(F.col("s_nationkey") < 5).select("s_suppkey")
+    bits = bl.bloom_build(dim, "s_suppkey", n_bits=64, n_hashes=2)
+    li = table(spark, sf_dir, "lineitem").select("l_suppkey")
+    audit = bl.bloom_prune_audit(li, "l_suppkey", bits, n_bits=64, n_hashes=2)
+    truth = audit.join(
+        F.broadcast(dim.withColumn("_true", F.lit(True))),
+        audit.l_suppkey == dim.s_suppkey,
+        "left",
+    )
+    is_true = F.coalesce(F.col("_true"), F.lit(False))
+    return truth.groupBy().agg(
+        F.count(F.lit(1)).alias("n_scanned"),
+        F.sum(F.when(F.col("_bloom_pass"), 1).otherwise(0)).alias("n_pass_bloom"),
+        F.sum(F.when(is_true, 1).otherwise(0)).alias("n_true_match"),
+        F.sum(F.when(F.col("_bloom_pass") & ~is_true, 1).otherwise(0)).alias(
+            "n_false_pos"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Q-gram fuzzy join (operators/fuzzy.py): prefix-filtered, no cross join
+# ---------------------------------------------------------------------------
+
+_QG = """unnest(list_distinct(CASE WHEN length(s) >= 3
+      THEN list_transform(generate_series(1, length(s)-2), i -> substring(s, i, 3))
+      ELSE []::VARCHAR[] END)) AS g"""
+
+_FUZZY_ORACLE = f"""
+    WITH probes AS (
+      SELECT min(p_partkey) AS probe_id, lower(substring(p_name, 2)) AS s
+      FROM part WHERE p_partkey % 37 = 0 GROUP BY 2
+    ),
+    corpus AS (
+      SELECT min(p_partkey) AS p_partkey, lower(p_name) AS s
+      FROM part GROUP BY 2
+    ),
+    pg AS (SELECT probe_id, s, {_QG} FROM probes),
+    cg AS (SELECT p_partkey, s, {_QG} FROM corpus),
+    dfq AS (SELECT g, count(*) AS df FROM cg GROUP BY 1),
+    lpref AS (
+      SELECT probe_id, s, g FROM (
+        SELECT pg.probe_id, pg.s, pg.g,
+               row_number() OVER (PARTITION BY pg.probe_id
+                 ORDER BY coalesce(dfq.df, 0), pg.g) AS rn
+        FROM pg LEFT JOIN dfq ON dfq.g = pg.g
+      ) WHERE rn <= 7
+    ),
+    rpref AS (
+      SELECT p_partkey, s, g FROM (
+        SELECT cg.p_partkey, cg.s, cg.g,
+               row_number() OVER (PARTITION BY cg.p_partkey
+                 ORDER BY dfq.df, cg.g) AS rn
+        FROM cg JOIN dfq ON dfq.g = cg.g
+      ) WHERE rn <= 7
+    ),
+    cand AS (
+      SELECT DISTINCT l.probe_id, r.p_partkey, l.s AS ls, r.s AS rs
+      FROM lpref l JOIN rpref r ON r.g = l.g
+      WHERE abs(length(l.s) - length(r.s)) <= 2
+    )
+    SELECT probe_id, p_partkey, levenshtein(ls, rs)::INT AS dist
+    FROM cand WHERE levenshtein(ls, rs) <= 2
+    """
+
+
+@register("fuzzy_join_qgram", _FUZZY_ORACLE)
+def fuzzy_join_qgram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Prefix-filtered q-gram fuzzy join (operators/fuzzy.py; Gravano
+    VLDB'01 count bound + Chaudhuri/PPJoin prefix filtering): probes are
+    part names with the first character dropped (true edit distance 1),
+    matched against the full part corpus by indexing only each string's
+    q*d+1 = 7 RAREST 3-grams (rarity = corpus df) -> equi-join on prefix
+    grams -> length filter -> levenshtein <= 2 verification. Lossless for
+    the claimed distance, and hot grams never reach a prefix, so the one
+    pairwise shuffle is skew-free by construction."""
+    from olake_spark.operators.fuzzy import fuzzy_join
+
+    part = table(spark, sf_dir, "part")
+    # match on the DISTINCT-string domain (the fixture's names repeat
+    # heavily; production string-matching dedupes first and fans out by
+    # joining back) - representative id = min key per distinct string
+    probes = (
+        part.filter(F.col("p_partkey") % 37 == 0)
+        .select(
+            "p_partkey",
+            F.lower(
+                F.col("p_name").substr(F.lit(2), F.length("p_name"))
+            ).alias("probe_name"),
+        )
+        .groupBy("probe_name")
+        .agg(F.min("p_partkey").alias("probe_id"))
+    )
+    corpus = (
+        part.select("p_partkey", F.lower("p_name").alias("p_name"))
+        .groupBy("p_name")
+        .agg(F.min("p_partkey").alias("p_partkey"))
+    )
+    return fuzzy_join(
+        probes, corpus,
+        "probe_id", "probe_name", "p_partkey", "p_name",
+        q=3, max_dist=2,
+    )
+
+
+# PPJoin token-set similarity self-join over 3-word shingles. The oracle
+# computes ground truth BRUTE-FORCE (all pairs, exact list_intersect) —
+# so a match proves the prefix+length+positional pruning is lossless —
+# and replicates the candidate pipeline only for the two audit counts.
+_JAC_T = 0.5
+_JAC_FRAC = repr(_JAC_T / (1.0 + _JAC_T))
+_SHINGLES = (
+    f"list_distinct(list_transform(range(1, greatest(len({_TOKS})-2,1)+1),"
+    f" i -> array_to_string(({_TOKS})[i:i+2], ' ')))"
+)
+
+_JACCARD_JOIN_ORACLE = f"""
+    WITH b2 AS (
+      SELECT doc_id AS id, tk, len(tk) AS l FROM (
+        SELECT doc_id, {_SHINGLES} AS tk FROM documents WHERE doc_id < 300
+      ) WHERE len(tk) > 0
+    ),
+    truth AS (
+      SELECT x.id AS id_a, y.id AS id_b,
+             len(list_intersect(x.tk, y.tk)) AS o, x.l AS la, y.l AS lb
+      FROM b2 x JOIN b2 y ON x.id < y.id
+      WHERE len(list_intersect(x.tk, y.tk)) * {1.0 + _JAC_T}
+            >= {_JAC_T} * (x.l + y.l)
+    ),
+    expl AS (SELECT id, l, unnest(tk) AS t FROM b2),
+    dftbl AS (SELECT t, count(*) AS df FROM expl GROUP BY 1),
+    pos AS (
+      SELECT e.id, e.l, e.t,
+             row_number() OVER (PARTITION BY e.id ORDER BY d.df, e.t) AS p
+      FROM expl e JOIN dftbl d ON d.t = e.t
+    ),
+    pref AS (
+      SELECT * FROM pos WHERE p <= l - ceil({_JAC_T}*l - 1e-9) + 1
+    ),
+    cand AS (
+      SELECT DISTINCT a.id AS id_a, b.id AS id_b
+      FROM pref a JOIN pref b ON a.t = b.t AND a.id < b.id
+      WHERE {_JAC_T} * greatest(a.l, b.l) - 1e-9 <= least(a.l, b.l)
+        AND 1 + least(a.l - a.p, b.l - b.p)
+            >= {_JAC_FRAC} * (a.l + b.l) - 1e-9
+    ),
+    nc AS (SELECT count(*) AS n_candidates FROM cand),
+    nu AS (
+      SELECT count(*) AS n_uncapped_candidates FROM (
+        SELECT DISTINCT a.id, b.id
+        FROM expl a JOIN expl b ON a.t = b.t AND a.id < b.id
+      )
+    )
+    SELECT id_a, id_b, o::INT AS overlap,
+           round(o / (la + lb - o), 6) AS jaccard,
+           n_candidates::BIGINT AS n_candidates,
+           n_uncapped_candidates::BIGINT AS n_uncapped_candidates
+    FROM truth, nc, nu
+    """
+
+
+@register("fuzzy_join_jaccard", _JACCARD_JOIN_ORACLE)
+def fuzzy_join_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PPJoin token-set similarity self-join (operators/fuzzy.py
+    jaccard_join; Xiao et al. WWW'08) over 3-word shingles of the
+    documents corpus at Jaccard ≥ 0.5 — the record-linkage form users
+    reach for first. Prefix (rarest l−⌈t·l⌉+1 shingles under the global
+    df order) + length + positional filters prune candidates; exact
+    ``array_intersect`` verification on candidates only. The ORACLE's
+    pair set is brute-force ground truth, so agreement proves the
+    pruning lossless; the in-band audit columns (filtered vs
+    share-any-token candidate counts) measure the pruning ratio the
+    prefix filter exists for.
+
+    Gate-budget scoping: both sides restrict to doc_id < 300 — the
+    oracle is deliberately brute-force O(n²) (that is the proof), so its
+    cost is bounded by fixture size, not by the operator under test; 300
+    docs keep 7 ground-truth pairs while holding the DuckDB side under
+    ~2.5 s (r6 verdict: the full 500-doc oracle alone was 5 s of the
+    worst gate query)."""
+    from olake_spark.operators.dedup import word_ngrams
+    from olake_spark.operators.fuzzy import jaccard_join
+
+    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
+        "doc_id",
+        word_ngrams(
+            F.split(
+                F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " "),
+                " ",
+            ),
+            3,
+        ).alias("sh"),
+    )
+    return jaccard_join(docs, "doc_id", "sh", threshold=_JAC_T)
+
+
+# ---------------------------------------------------------------------------
+# KMV set-overlap estimate (operators/sketches.py kmv_overlap)
+# ---------------------------------------------------------------------------
+
+_KMV_OVL_ORACLE = f"""
+    WITH h AS (
+      SELECT DISTINCT event_type AS grp, {_SK_H} AS h
+      FROM events WHERE event_type IN ('click', 'view')
+    ),
+    kept AS (
+      SELECT grp, h FROM (
+        SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rn
+        FROM h
+      ) WHERE rn <= 64
+    ),
+    b2 AS (
+      SELECT h, (count(*) = 2) AS in_both FROM kept GROUP BY h
+    ),
+    merged AS (
+      SELECT h, in_both FROM (
+        SELECT h, in_both, row_number() OVER (ORDER BY h) AS rn FROM b2
+      ) WHERE rn <= 64
+    ),
+    agg AS (
+      SELECT count(*)::BIGINT AS n_merged, max(h) AS kth_union_hash,
+             sum(CASE WHEN in_both THEN 1 ELSE 0 END)::BIGINT AS n_both
+      FROM merged
+    )
+    SELECT n_merged, kth_union_hash, n_both,
+           round(CASE WHEN n_merged < 64 THEN n_merged::DOUBLE
+                 ELSE {_KMV_NUM} / kth_union_hash::DOUBLE END, 4) AS est_union,
+           round(n_both::DOUBLE / n_merged::DOUBLE, 6) AS est_jaccard,
+           round((n_both::DOUBLE / n_merged::DOUBLE) *
+                 (CASE WHEN n_merged < 64 THEN n_merged::DOUBLE
+                  ELSE {_KMV_NUM} / kth_union_hash::DOUBLE END), 4)
+             AS est_intersection
+    FROM agg
+    """
+
+
+@register("sketch_kmv_overlap", _KMV_OVL_ORACLE)
+def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Jaccard / intersection / union estimates between the click-user
+    and view-user sets from MERGED KMV sketches (Beyer et al. SIGMOD'07):
+    within the 64 smallest union hashes, the both-sketch fraction rho
+    estimates Jaccard and rho x union-estimate the intersection size -
+    the corpus-overlap primitive (how much does source A duplicate
+    source B?) computed purely on mergeable sketch state."""
+    ev = table(spark, sf_dir, "events").select("event_type", "user_id")
+    return sk.kmv_overlap(ev, "user_id", "event_type", "click", "view", k=64)
+
+
+_CMS_CELL = (
+    "('0x' || substring(md5({r}::VARCHAR || '|' || {v}::VARCHAR),1,15))::BIGINT"
+    f" % {sk.CMS_WIDTH}"
+)
+
+_CMS_ORACLE = f"""
+    WITH rs AS (SELECT unnest(generate_series(0, {sk.CMS_DEPTH - 1})) AS r),
+    counts AS (
+      SELECT user_id, count(*)::BIGINT AS true_count FROM events GROUP BY 1
+    ),
+    cand AS (
+      SELECT user_id, true_count FROM counts
+      ORDER BY true_count DESC, user_id LIMIT 20
+    ),
+    cells AS (
+      SELECT rs.r, {_CMS_CELL.format(r="rs.r", v="e.user_id")} AS c,
+             count(*)::BIGINT AS cnt
+      FROM events e CROSS JOIN rs
+      GROUP BY 1, 2
+    )
+    SELECT cand.user_id, cand.true_count,
+           min(coalesce(cells.cnt, 0))::BIGINT AS est_count
+    FROM cand CROSS JOIN rs
+    LEFT JOIN cells ON cells.r = rs.r
+      AND cells.c = {_CMS_CELL.format(r="rs.r", v="cand.user_id")}
+    GROUP BY 1, 2
+    """
+
+
+@register("sketch_cms_heavy_hitters", _CMS_ORACLE)
+def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min sketch (Cormode & Muthukrishnan 2005) frequency estimates
+    for the top-20 users by event volume. The sketch STATE is exact
+    integers in a sparse (row, cell) -> count relation (depth x width =
+    4 x 256 counters regardless of corpus size) and merges by plain cell
+    addition, so per-partition partials combine associatively; the probe
+    side broadcasts the sketch — never a raw-data shuffle. Estimates are
+    upper bounds (est_count >= true_count by construction), and the gate
+    pins every counter's exact value through the min-over-rows probe."""
+    ev = table(spark, sf_dir, "events").select("user_id")
+    state = sk.cms_sketch(ev, "user_id")
+    true_counts = (
+        ev.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("true_count"))
+        .orderBy(F.col("true_count").desc(), F.col("user_id").asc())
+        .limit(20)
+    )
+    est = sk.cms_point_estimate(state, true_counts, "user_id")
+    return true_counts.join(est, "user_id").select(
+        "user_id", "true_count", "est_count"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Entity resolution: fuzzy blocking -> CC -> survivorship (operators/entity.py)
+# ---------------------------------------------------------------------------
+
+# the slim fixture has no address column; a 32-hex md5 of the key is the
+# deterministic high-entropy stand-in (cross-entity edit distance ~27, so
+# only the engineered 1- and 2-char deletions fall under the threshold)
+_ER_RECORDS_SQL = """
+    cust AS (
+      SELECT c_custkey AS ck, c_name, md5(c_custkey::VARCHAR) AS a0, c_acctbal
+      FROM customer WHERE c_custkey < 300
+    ),
+    records AS (
+      SELECT ck*10+1 AS rid, c_name AS name, a0 AS addr, c_acctbal AS bal
+      FROM cust
+      UNION ALL
+      SELECT ck*10+2, upper(c_name),
+             substring(a0, 1, 5) || substring(a0, 7), NULL
+      FROM cust
+      UNION ALL
+      SELECT ck*10+3, c_name,
+             substring(a0, 1, 2) || substring(a0, 4, 5) || substring(a0, 10),
+             c_acctbal
+      FROM cust WHERE ck % 3 = 0
+    )
+"""
+
+_ER_ORACLE = f"""
+    WITH RECURSIVE {_ER_RECORDS_SQL},
+    pairs AS MATERIALIZED (
+      SELECT a.rid AS id_a, b.rid AS id_b
+      FROM records a JOIN records b ON a.rid < b.rid
+      WHERE abs(length(a.addr) - length(b.addr)) <= 2
+        AND levenshtein(lower(a.addr), lower(b.addr)) <= 2
+    ),
+    edges AS MATERIALIZED (
+      SELECT id_a AS src, id_b AS dst FROM pairs
+      UNION SELECT id_b, id_a FROM pairs
+    ),
+    reach(src, dst) AS (
+      SELECT src, dst FROM edges
+      UNION
+      SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+    ),
+    labels AS (
+      SELECT rec.rid,
+             least(rec.rid, coalesce(min(r.dst), rec.rid)) AS cluster_id
+      FROM records rec LEFT JOIN reach r ON r.src = rec.rid
+      GROUP BY rec.rid
+    ),
+    resolved AS (
+      SELECT records.*, labels.cluster_id FROM records
+      JOIN labels ON records.rid = labels.rid
+    ),
+    agg AS (
+      SELECT cluster_id, count(*)::BIGINT AS n_records,
+             min(name) AS name, max(bal) AS bal
+      FROM resolved GROUP BY 1
+    ),
+    best_addr AS (
+      SELECT cluster_id, addr FROM (
+        SELECT cluster_id, addr, row_number() OVER (
+          PARTITION BY cluster_id ORDER BY length(addr) DESC, addr ASC) AS rn
+        FROM resolved)
+      WHERE rn = 1
+    )
+    SELECT agg.cluster_id, agg.n_records, agg.name, agg.bal, best_addr.addr
+    FROM agg JOIN best_addr ON agg.cluster_id = best_addr.cluster_id
+    """
+
+
+def _er_records(spark: SparkSession, sf_dir: str):
+    cust = (
+        table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") < 300)
+        .select(
+            "c_custkey",
+            "c_name",
+            F.md5(F.col("c_custkey").cast("string")).alias("a0"),
+            "c_acctbal",
+        )
+    )
+    r1 = cust.select(
+        (F.col("c_custkey") * 10 + 1).alias("rid"),
+        F.col("c_name").alias("name"),
+        F.col("a0").alias("addr"),
+        F.col("c_acctbal").alias("bal"),
+    )
+    r2 = cust.select(
+        (F.col("c_custkey") * 10 + 2).alias("rid"),
+        F.upper("c_name").alias("name"),
+        F.expr("substring(a0, 1, 5) || substring(a0, 7)").alias("addr"),
+        F.lit(None).cast("double").alias("bal"),
+    )
+    r3 = cust.filter(F.col("c_custkey") % 3 == 0).select(
+        (F.col("c_custkey") * 10 + 3).alias("rid"),
+        F.col("c_name").alias("name"),
+        F.expr(
+            "substring(a0, 1, 2) || substring(a0, 4, 5) || substring(a0, 10)"
+        ).alias("addr"),
+        F.col("c_acctbal").alias("bal"),
+    )
+    return r1.unionByName(r2).unionByName(r3)
+
+
+@register("entity_resolution_golden", _ER_ORACLE)
+def entity_resolution_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Record linkage end-to-end (operators/entity.py): dirty record
+    variants of each customer (deterministic 1- and 2-char address
+    deletions derived from the fixture) are matched via the LOSSLESS
+    prefix-filtered q-gram fuzzy join (never a cross join), grouped
+    transitively by connected components (r1~r2 d=1, r1~r3 d=2 chains a
+    3-record entity even where r2~r3 exceeds the threshold), and folded
+    to one golden record per entity by deterministic survivorship —
+    most-complete address, MIN name, MAX balance (NULLs lose). The
+    ORACLE brute-forces all pairs with levenshtein + a recursive
+    reachability CTE, so the gate proves the indexed path finds exactly
+    the clusters the quadratic path does."""
+    from olake_spark.operators.entity import golden_records, resolve_entities
+
+    records = _er_records(spark, sf_dir)
+    resolved = resolve_entities(records, "rid", "addr", max_dist=2)
+    return golden_records(
+        resolved, "rid", longest_cols=["addr"], min_cols=["name"], max_cols=["bal"]
+    ).select("cluster_id", "n_records", "name", "bal", "addr")
+
+
+# ---------------------------------------------------------------------------
+# Filtered ANN + incremental IVF index maintenance (round 6)
+# ---------------------------------------------------------------------------
+
+@register(
+    "similarity_topk_ivf_filtered",
+    f"""
+    WITH cents AS (
+      SELECT vec_id AS cent_id, embedding AS cv FROM embeddings WHERE vec_id % 97 = 0
+    ), assign AS (
+      SELECT e.vec_id, e.embedding, e.label, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cent_id) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ), cells AS (
+      SELECT vec_id, embedding, label, cent_id AS cell FROM assign WHERE rn = 1
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qv, cell FROM cells WHERE vec_id < 5
+    ), scored AS (
+      SELECT q.query_id, c.vec_id AS neighbor_id,
+             round({_COS.format(a='q.qv', b='c.embedding')}, 9) AS s9
+      FROM q JOIN cells c
+        ON c.cell = q.cell AND c.vec_id <> q.query_id AND c.label = 2
+    ), {cosine_topk(5)}
+    """,
+)
+def similarity_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Filtered ANN (the metadata-constrained search every production
+    vector store needs — FAISS IDSelector / Lucene filtered kNN): top-k
+    restricted to ``label = 2`` neighbors. PRE-filter strategy: the
+    predicate applies to the INDEX relation before the cell join, so the
+    scan prunes to matching rows inside each probed cell (predicate
+    pushdown into the index scan; with the index persisted bucketed on
+    ``_cell`` + file-skipping stats on the label column the non-matching
+    files never open). Post-filtering top-k would silently return < k
+    when the filter is selective; pre-filtering keeps k full within the
+    probed cells — and the oracle proves it against the same cell
+    pruning."""
+    emb = table(spark, sf_dir, "embeddings")
+    cents = sim.stride_centroids(emb)
+    # cell assignment is per-row (centroids frozen), so filtering the
+    # corpus BEFORE assignment ≡ filtering the persisted index relation —
+    # the form that lets parquet stats skip non-matching index files
+    index = sim.ivf_build_index(emb.filter(F.col("label") == 2), cents)
+    return sim.ivf_topk(
+        emb.filter(F.col("vec_id") < 5),
+        centroids=cents,
+        index=index,
+        k=5,
+    )
+
+
+@register(
+    "similarity_topk_ivf_appended",
+    f"""
+    WITH cents AS (
+      SELECT vec_id AS cent_id, embedding AS cv FROM embeddings
+      WHERE vec_id % 97 = 0 AND vec_id < 400
+    ), assign AS (
+      SELECT e.vec_id, e.embedding, c.cent_id,
+             row_number() OVER (PARTITION BY e.vec_id
+               ORDER BY round({_COS.format(a='e.embedding', b='c.cv')}, 9) DESC,
+                        c.cent_id) AS rn
+      FROM embeddings e CROSS JOIN cents c
+    ), cells AS (
+      SELECT vec_id, embedding, cent_id AS cell FROM assign WHERE rn = 1
+    ), q AS (
+      SELECT vec_id AS query_id, embedding AS qv, cell FROM cells WHERE vec_id < 5
+    ), {IVF_CELL_SCORED_CTE}, {cosine_topk(5)}
+    """,
+)
+def similarity_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental IVF index maintenance (FAISS ``index.add`` semantics):
+    the corpus arrives in two batches — the index is BUILT on the first
+    (centroids frozen from it), and the second batch only runs
+    ``ivf_assign`` for ITS OWN rows (cost ∝ batch × K centroids, never a
+    corpus rescan) and unions into the index relation. The oracle
+    rebuilds single-shot over everything, so the gate proves
+    append(index(A), B) ≡ index(A ∪ B) under frozen centroids — the same
+    refresh-cost-∝-batch contract as incremental dedup and the rollup
+    delta commit. (Centroid RETRAINING drift is the documented limit:
+    retrain is a rebuild, by design.)"""
+    emb = table(spark, sf_dir, "embeddings")
+    old = emb.filter(F.col("vec_id") < 400)
+    new = emb.filter(F.col("vec_id") >= 400)
+    cents = sim.stride_centroids(old)
+    index_old = sim.ivf_build_index(old, cents)
+    appended = sim.ivf_assign(
+        new.select("vec_id", "embedding"), cents, "vec_id", "embedding"
+    )
+    full_index = index_old.unionByName(appended)
+    return sim.ivf_topk(
+        emb.filter(F.col("vec_id") < 5), centroids=cents, index=full_index, k=5
+    )
+
+
+# ---------------------------------------------------------------------------
+# edit-distance ≤ 2 similarity join — INDEPENDENT brute-force oracle
+# ---------------------------------------------------------------------------
+
+_EDITDIST2_ORACLE = """
+WITH c AS (
+  SELECT c_custkey, c_name FROM customer WHERE c_custkey % 5 = 0
+)
+SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+       a.c_name AS text_a, b.c_name AS text_b,
+       levenshtein(a.c_name, b.c_name)::INT AS dist
+FROM c a JOIN c b ON a.c_custkey < b.c_custkey
+WHERE levenshtein(a.c_name, b.c_name) <= 2
+"""
+
+
+@register("customer_editdist2_pairs", _EDITDIST2_ORACLE)
+def customer_editdist2_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customer-name pairs within Levenshtein distance 2 on a custkey
+    slice — operators/fuzzy.editdist2_join, the depth-2 FastSS deletion
+    neighborhood (index |rows|·(1 + L + C(L,2)), variant equi-join,
+    levenshtein verify on candidates only). Oracle = brute-force O(n²)
+    levenshtein join, extending the editdist1 independent-oracle
+    family one edit further."""
+    from olake_spark.operators.fuzzy import editdist2_join
+
+    c = table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 5 == 0)
+    return editdist2_join(c, "c_custkey", "c_name").select(
+        "id_a", "id_b", "text_a", "text_b", "dist"
+    )
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH with exact-Jaccard verify — INDEPENDENT cross-join oracle
+# ---------------------------------------------------------------------------
+
+_MINHASH_PROOF_ORACLE = r"""
+WITH d AS (
+  SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  FROM documents WHERE doc_id % 2 = 0 AND doc_id < 500
+),
+g AS (
+  SELECT doc_id,
+         list_distinct(list_transform(
+           range(1, greatest(length(t) - 4, 1) + 1),
+           i -> substring(t, i, 5))) AS gs
+  FROM d
+),
+p AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+         len(list_intersect(a.gs, b.gs))::BIGINT AS inter,
+         len(a.gs)::BIGINT AS na, len(b.gs)::BIGINT AS nb
+  FROM g a JOIN g b ON a.doc_id < b.doc_id
+)
+SELECT id_a, id_b, inter, (na + nb - inter)::BIGINT AS union_sz,
+       round(inter::DOUBLE / (na + nb - inter)::DOUBLE, 6) AS jaccard
+FROM p
+WHERE round(inter::DOUBLE / (na + nb - inter)::DOUBLE, 6) >= 0.5
+"""
+
+
+@register("documents_minhash_jaccard_proof", _MINHASH_PROOF_ORACLE)
+def documents_minhash_jaccard_proof(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MinHash-LSH losslessness proof on a document slice
+    (operators/dedup.minhash_exact_jaccard_pairs): the Spark side bands
+    16×1 minhash signatures into candidate buckets and verifies each
+    candidate with the TRUE shingle-set Jaccard; the oracle is the
+    brute-force O(n²) cross-join over the same shingle sets. A green
+    check proves the banded plan finds exactly the pairs exhaustive
+    comparison finds (miss probability per true pair at J ≥ 0.5 is
+    (1−J)^16 ≤ 1.5e-5 — and the fixture is fixed, so a pass is
+    permanent; the slice holds 6 such pairs at sf0.01, so the check is
+    NOT vacuous). The doc_id < 500 bound PINS the proof corpus at every
+    SF — this query certifies losslessness on a fixed slice (and keeps
+    the O(n²) oracle inside the gate budget); the production-scale
+    near-dup path with its capped-bucket growth exponents is
+    dedup_minhash_lsh / SCALE_EVIDENCE.json. The fixture corpus is
+    adversarially self-similar (31% of ALL pairs at J ≥ 0.2), so
+    unbounded banded candidates here are dense by construction, not by
+    defect."""
+    from olake_spark.operators.dedup import minhash_exact_jaccard_pairs
+
+    docs = table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") % 2 == 0) & (F.col("doc_id") < 500)
+    )
+    return minhash_exact_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
+
+
+# ---------------------------------------------------------------------------
+# 2) ExactSubstr spans vs brute-force substring CONTAINMENT.
+#
+# The existing dedup_exact_substr_spans oracle rebuilds the k-gram
+# positional-inverted-index formulation in SQL — a shared tokenization
+# or hashing bug would be green on both sides. This proof pins a slice
+# of the corpus and asks the DIRECT question: for every token position,
+# does the 5-token substring STARTING THERE literally appear (as a
+# space-joined string) inside any OTHER document's normalized text?
+# position() over raw strings — no grams, no hashes, no inverted index.
+# A 60-bit gram-hash collision, an off-by-one in the positional window,
+# or a tokenizer drift between the sides all surface here.
+# ---------------------------------------------------------------------------
+
+_SUBSTR_PIN_MOD = 3  # pinned slice: doc_id % 3 = 0 (~33% — the
+# smallest slice that still carries cross-doc duplicate grams at
+# sf0.01: 177 dup 5-grams / 6 spans; sparser slices were measured
+# duplicate-free, which would make the proof vacuous)
+
+_SUBSTR_CONTAIN_ORACLE = f"""
+WITH docs AS (
+  SELECT doc_id, text FROM documents WHERE doc_id % {_SUBSTR_PIN_MOD} = 0
+),
+toks AS (SELECT doc_id, {_TOKS} AS l FROM docs),
+txt AS (
+  SELECT doc_id, ' ' || array_to_string(l, ' ') || ' ' AS s FROM toks
+),
+grams AS (
+  SELECT doc_id, l, unnest(generate_series(1, len(l) - 4)) AS p
+  FROM toks WHERE len(l) >= 5
+),
+gs AS (
+  SELECT doc_id, p, array_to_string(l[p:p+4], ' ') AS g FROM grams
+),
+hits AS (
+  SELECT g.doc_id, g.p FROM gs g
+  WHERE EXISTS (
+    SELECT 1 FROM txt t
+    WHERE t.doc_id <> g.doc_id
+      AND position(' ' || g.g || ' ' IN t.s) > 0
+  )
+),
+pre AS (
+  SELECT doc_id, p, lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev
+  FROM hits
+),
+isl AS (
+  SELECT doc_id, p,
+         sum(CASE WHEN prev IS NULL OR p - prev > 5 THEN 1 ELSE 0 END)
+           OVER (PARTITION BY doc_id ORDER BY p ROWS UNBOUNDED PRECEDING)
+           AS island
+  FROM pre
+)
+SELECT doc_id, min(p)::INT AS span_start, (max(p)+4)::INT AS span_end,
+       (max(p)+4-min(p)+1)::INT AS span_len, count(*) AS n_grams
+FROM isl GROUP BY doc_id, island
+"""
+
+
+@register("dedup_exact_substr_containment_proof", _SUBSTR_CONTAIN_ORACLE)
+def dedup_exact_substr_containment_proof(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """ExactSubstr span detection (operators/dedup.duplicate_spans — the
+    k-gram positional-inverted-index plan: gram-hash shuffle for
+    document frequency, id shuffle for the islands merge) certified on a
+    pinned 1/3 corpus slice against a brute-force oracle that never
+    builds grams: literal substring containment of each 5-token window
+    in every other document's normalized text. The slice bounds the
+    oracle's O(positions × docs) string scan; the Spark side runs the
+    exact shipped plan on the same slice."""
+    from olake_spark.operators import dedup as dd
+
+    docs = table(spark, sf_dir, "documents").filter(
+        F.pmod(F.col("doc_id"), F.lit(_SUBSTR_PIN_MOD)) == 0
+    )
+    return dd.duplicate_spans(docs, "doc_id", "text", min_len=5, min_docs=2)
+
+
+# ---------------------------------------------------------------------------
+# independent-oracle proof #7: exact ANN with triangle-inequality pruning
+# ---------------------------------------------------------------------------
+
+# deterministic CLUSTERED 8-dim vectors derived from orders: cluster
+# center from o_orderkey % 32 (integers, exact), jitter from a Knuth
+# multiplicative hash (exact integer math then one divide) — identical
+# doubles in both engines, and genuinely clustered so the triangle
+# pruning is non-vacuous (random high-dim vectors concentrate distances
+# and prune nothing; the embeddings table proved that empirically).
+_CLUSTER_DIM = 8
+
+
+def _clustered_vec_exprs(key: str) -> list[str]:
+    exprs = []
+    for j in range(_CLUSTER_DIM):
+        center = f"(CAST(({key} % 32) * 7 + {13 * j} AS BIGINT) % 11) - 5"
+        jitter = f"((({key} + {j}) * 2654435761) % 997) / 2000.0 - 0.25"
+        exprs.append(f"(({center}) + ({jitter}))")
+    return exprs
+
+
+def _clustered_vec_sql(key: str) -> str:
+    return "[" + ", ".join(_clustered_vec_exprs(key)) + "]"
+
+
+def _cos8(a: str, b: str) -> str:
+    dot = " + ".join(f"{a}[{i + 1}] * {b}[{i + 1}]" for i in range(_CLUSTER_DIM))
+    na = " + ".join(f"{a}[{i + 1}] * {a}[{i + 1}]" for i in range(_CLUSTER_DIM))
+    nb = " + ".join(f"{b}[{i + 1}] * {b}[{i + 1}]" for i in range(_CLUSTER_DIM))
+    return f"(0.0 + {dot}) / (sqrt(0.0 + {na}) * sqrt(0.0 + {nb}))"
+
+
+_EXACT_PRUNED_ORACLE = f"""
+WITH vecs AS (
+  SELECT o_orderkey AS vec_id, {_clustered_vec_sql('o_orderkey')}::DOUBLE[] AS v
+  FROM orders
+),
+q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < 16),
+scored AS (
+  SELECT q.query_id, c.vec_id AS neighbor_id,
+         round({_cos8('q.qv', 'c.v')}, 9) AS s9
+  FROM q JOIN vecs c ON c.vec_id <> q.query_id
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY s9 DESC, neighbor_id) AS "rank"
+  FROM scored
+)
+SELECT query_id, neighbor_id, "rank", round(s9, 6) AS cosine_sim
+FROM ranked WHERE "rank" <= 5
+"""
+
+
+def _clustered_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = table(spark, sf_dir, "orders")
+    dims = [F.expr(e).cast("double") for e in _clustered_vec_exprs("o_orderkey")]
+    return o.select(
+        F.col("o_orderkey").alias("vec_id"), F.array(*dims).alias("embedding")
+    )
+
+
+@register("similarity_topk_exact_pruned", _EXACT_PRUNED_ORACLE)
+def similarity_topk_exact_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Independent-oracle proof #7: `ivf_exact_topk` — exact top-k that
+    PRUNES cells by the triangle inequality (d(q,cent) − radius > d_k ⇒
+    skip the cell) — against a plain brute-force cross-join oracle that
+    knows nothing about cells, bounds, or the two-phase plan. The
+    operator's losslessness is mathematical (every true neighbor's cell
+    must survive the bound), so exact hash equality is the expected
+    outcome and any divergence is a real bug in the pruning algebra.
+    tests/test_similarity_fast_paths.py asserts the pruning is also
+    non-vacuous on this fixture (measured: 1.6% of (query, cell) pairs
+    survive at sf0.01). The centroid stride scales with the corpus so
+    the CELL COUNT stays ~fixed (~160): with a constant stride the
+    centroid set grows ∝N and index assignment degenerates to
+    O(N²/stride) — the r11 SF sweep caught exactly that (exponent 1.5
+    at stride 97) — while a bounded cell count keeps assignment linear,
+    the way production IVF holds n_cells at a trained constant. The
+    one-row count() is index-BUILD sizing, not per-query work."""
+    from olake_spark.operators.similarity import ivf_exact_topk
+
+    vecs = _clustered_vectors(spark, sf_dir)
+    stride = max(97, vecs.count() // 160)
+    return ivf_exact_topk(
+        vecs.filter(F.col("vec_id") < 16),
+        vecs,
+        k=5,
+        centroid_stride=stride,
+        p_init=2,
+        dim=_CLUSTER_DIM,
+    )

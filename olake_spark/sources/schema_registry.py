@@ -20,7 +20,6 @@ closure. Executors decode; they never talk HTTP.
 from __future__ import annotations
 
 import json
-import struct
 import threading
 import urllib.error
 import urllib.request
@@ -238,8 +237,3 @@ def resolve_and_decode(
             )
         schemas[i] = reg.schema_str
     return decode_confluent_multi_df(df, schemas, value_col, out_col)
-
-
-def _struct_pack_id(schema_id: int, body: bytes) -> bytes:
-    """Frame an Avro body in Confluent wire format (test/fixture helper)."""
-    return b"\x00" + struct.pack(">I", schema_id) + body

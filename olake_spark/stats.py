@@ -8,8 +8,8 @@ protocol/sync.go:127-131). On Spark the idiomatic equivalents are:
   collected from the SAME job that materializes the data — zero extra
   actions, zero extra scans (a ``.count()`` per stage would re-run the
   pipeline).
-- ``StreamingQueryListener``: per-micro-batch progress (rows/sec) for the
-  bounded-drain streaming paths.
+- per-micro-batch progress of the bounded-drain streaming paths is read
+  from the finished query (``streaming/observe.harvest_progress``).
 """
 
 from __future__ import annotations
@@ -18,9 +18,9 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 
-__all__ = ["SyncStats", "DrainListener"]
+__all__ = ["SyncStats"]
 
 
 @dataclass
@@ -69,38 +69,3 @@ class SyncStats:
             out["records_filtered"] = read - written
         return out
 
-
-class DrainListener:
-    """StreamingQueryListener capturing per-batch rows/sec for bounded
-    drains. Register with ``spark.streams.addListener(DrainListener(...)
-    .listener(spark))``; inspect ``batches`` after ``awaitTermination``."""
-
-    def __init__(self) -> None:
-        self.batches: list[dict] = []
-
-    def listener(self, spark: SparkSession):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        outer = self
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(self, event) -> None:  # noqa: N802
-                pass
-
-            def onQueryProgress(self, event) -> None:  # noqa: N802
-                p = event.progress
-                outer.batches.append(
-                    {
-                        "batch_id": p.batchId,
-                        "num_input_rows": p.numInputRows,
-                        "rows_per_sec": p.processedRowsPerSecond,
-                    }
-                )
-
-            def onQueryIdle(self, event) -> None:  # noqa: N802
-                pass
-
-            def onQueryTerminated(self, event) -> None:  # noqa: N802
-                pass
-
-        return _L()

@@ -96,3 +96,22 @@ def test_decode_confluent_df(spark):
     assert got[3]["price"] == pytest.approx(3.25)
     assert got[4]["raw"] == "04"  # bytes → hex string convention
     assert list(got) == [0, 1, 2, 3, 4]
+
+
+# -- avro union-as-type-attribute -------------------------------------------
+
+
+def test_avro_union_as_type_attribute():
+    from olake_spark.functions.avro_codec import AvroCodec
+
+    schema = {
+        "type": "record",
+        "name": "R",
+        "fields": [
+            {"name": "a", "type": {"type": ["null", "int"]}},
+            {"name": "b", "type": {"type": ["null", "string"]}},
+        ],
+    }
+    codec = AvroCodec(schema)
+    for rec in ({"a": 5, "b": None}, {"a": None, "b": "x"}):
+        assert codec.decode(codec.encode(rec)) == rec

@@ -602,3 +602,31 @@ def test_incremental_phash_dedup_batch_vs_index(spark):
             expect.append(r.media_id)
     assert got == sorted(expect)
     assert all(m >= 700 for m in got) and not any(1000 <= m < 1010 for m in got)
+
+
+# -- connected_components NULL edge endpoints -------------------------------
+
+
+def test_cc_null_pairs_dropped(spark):
+    from olake_spark.operators.dedup import connected_components
+
+    ids = spark.range(1, 6).withColumnRenamed("id", "doc_id")
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 4)], "a bigint, b bigint"
+    )
+    out = {r.doc_id: r.cluster_id for r in
+           connected_components(ids, pairs, "doc_id", "a", "b").collect()}
+    assert out[1] == out[2]  # the real edge
+    assert out[4] == 4 and out[5] == 5  # NULL edges did not link anything
+
+
+def test_cc_int32_ids_supported(spark):
+    """int32 id columns are lossless and must take the driver fast path
+    (the first dtype guard rejected anything non-int64)."""
+    from olake_spark.operators.dedup import connected_components
+
+    ids = spark.createDataFrame([(1,), (2,), (3,)], "doc_id int")
+    pairs = spark.createDataFrame([(1, 2)], "a int, b int")
+    out = {r.doc_id: r.cluster_id
+           for r in connected_components(ids, pairs, "doc_id", "a", "b").collect()}
+    assert out[1] == out[2] and out[3] == 3

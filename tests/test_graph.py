@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from olake_spark.operators.graph import pagerank
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from olake_spark.operators.graph import connected_components_fixed, pagerank
 
 
 def _edges(spark):
@@ -67,3 +70,48 @@ def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
         ).collect()
     }
     assert pr == pr2
+
+
+# 4 examples: each drives a 10-round unrolled plan (the expensive part);
+# the single-shape coverage (paths/cliques/self-loops) saturates quickly
+@settings(max_examples=4, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)),
+        min_size=1,
+        max_size=15,
+    )
+)
+def test_cc_fixed_matches_union_find(spark, edges):
+    """rounds = node-domain size always covers the diameter (shortcutting
+    only accelerates), so the fixed-round labels must equal a reference
+    union-find's min-id components over the non-isolated nodes."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    nodes = set()
+    for a, b in edges:
+        if a == b:
+            continue
+        nodes.update((a, b))
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {n: find(n) for n in nodes}
+    df = spark.createDataFrame(edges, "src long, dst long")
+    if not nodes:
+        # all edges were self-loops: the operator drops them, no nodes
+        assert connected_components_fixed(df, rounds=1).count() == 0
+        return
+    got = {
+        r.node: r.component
+        for r in connected_components_fixed(df, rounds=10).collect()
+    }
+    assert got == expected

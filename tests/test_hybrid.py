@@ -116,6 +116,35 @@ def test_median_mad_null_key_takes_dataflow(spark, caplog):
     ]
 
 
+def test_median_mad_keyless_both_ways(spark, caplog):
+    # one global group: the dataflow joins the one-row median on no keys
+    df = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS v")
+    rows, _ = both_ways(
+        caplog, "quantiles.median_mad", lambda **kw: median_mad(df, [], "v", **kw)
+    )
+    assert rows == [(10, 4_000_000, 2_000_000)]
+    rows, _ = both_ways(
+        caplog, "quantiles.median_mad",
+        lambda **kw: median_mad(df, [], "v", report_k=1, **kw),
+    )
+    assert rows == [(10, 4_000_000, 2_000_000, 5)]
+
+
+def test_null_group_reports_real_stats(spark):
+    from olake_spark.operators.audit import numeric_outlier_stats
+
+    rows = [(None, float(v)) for v in (1, 2, 3, 4, 1000)]
+    rows += [("a", float(v)) for v in (10, 20, 30)]
+    rows += [(None, None)]
+    df = spark.createDataFrame(rows, "grp string, v double")
+    out = {r.grp: r for r in numeric_outlier_stats(df, "grp", "v", k=3.0).collect()}
+    ng = out[None]
+    assert ng.n == 5 and ng.n_nulls == 1
+    assert ng.median == 3.0 and ng.mad == 1.0
+    assert ng.n_outliers == 1  # the 1000
+    assert out["a"].n == 3 and out["a"].median == 20.0
+
+
 def test_floating_group_key_takes_dataflow(spark, caplog):
     # Spark groups -0.0 with 0.0 (and NaN with NaN); Arrow hashing does not
     df = spark.createDataFrame(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from olake_spark.operators.merge import apply_changelog, latest_state, merge_upsert
 from olake_spark.sinks.table import CommitConflict, ManagedTable
@@ -158,3 +159,24 @@ def test_mor_key_cols_pinned(spark, tmp_path, changelog):
     t.upsert_mor(spark.createDataFrame(changelog[50:80], SCHEMA), ["k"], ["lsn"])
     with pytest.raises(ValueError):
         t.upsert_mor(spark.createDataFrame(changelog[80:99], SCHEMA), ["v"], ["lsn"])
+
+
+# -- NULL-op rows are not deletes -------------------------------------------
+
+
+def test_merge_null_op_rows_survive(spark):
+    from olake_spark.operators.merge import merge_upsert
+
+    # target snapshot written WITHOUT an _op_type column (e.g. a pre-CDC
+    # backfill table); unionByName null-fills it during the merge
+    target = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    batch = spark.createDataFrame(
+        [(2, "b2", "u", 10), (3, "c", "c", 11)], "k int, v string, _op_type string, lsn int"
+    )
+    target = target.withColumn("lsn", F.lit(0))
+    out = {
+        r["k"]: r["v"]
+        for r in merge_upsert(target, batch, ["k"], ["lsn"]).collect()
+    }
+    # key 1 exists only in the target with NULL op — it must survive
+    assert out == {1: "a", 2: "b2", 3: "c"}

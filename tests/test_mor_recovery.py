@@ -140,3 +140,17 @@ def test_mor_crash_mid_commit_leaves_table_readable_and_recoverable(
     # compaction after recovery still resolves to the oracle
     t_check.compact()
     assert _rows(t_check) == _oracle(log)
+
+
+def test_mor_base_without_op_column_survives_read(spark, tmp_path):
+    from olake_spark.sinks.table import ManagedTable
+
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    base = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    t.overwrite(base)  # base group has no _op_type at all
+    delta = spark.createDataFrame(
+        [(2, "b2", "u", 10), (3, "c", "c", 11)], "k int, v string, _op_type string, lsn int"
+    )
+    t.upsert_mor(delta, ["k"], ["lsn"])
+    got = {r["k"]: r["v"] for r in t.read().collect()}
+    assert got == {1: "a", 2: "b2", 3: "c"}

@@ -8,8 +8,13 @@ cross-join probes), and the hot path must stay inside whole-stage codegen.
 
 from __future__ import annotations
 
+import json
+from datetime import datetime
+
 import pytest
 
+from olake_spark.plans.state import SyncState, cursor_less_than, cursor_to_json
+from olake_spark.plans.stream import Catalog
 from olake_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -291,3 +296,128 @@ def test_decode_count_plan_parses_json_once(spark):
     cnt = QUERIES["wal2json_decode"](spark, SF).groupBy().count()
     plan = cnt._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("from_json") == 1, plan[:2000]
+
+
+# -- type-aware cursor ordering ---------------------------------------------
+
+
+def test_cursor_numeric_string_ordering():
+    assert cursor_less_than("9", "100")  # lexicographic would say 100 < 9
+    assert not cursor_less_than("100", "9")
+    assert cursor_less_than(9, 100)
+    assert cursor_less_than("2024-01-02 00:00:00", "2024-01-10 00:00:00")
+    assert cursor_less_than(
+        datetime(2024, 1, 2), "2024-01-10 00:00:00.500000"
+    )
+    # genuinely textual cursors still compare lexicographically
+    assert cursor_less_than("abc", "abd")
+
+
+def test_cursor_to_json_round_trip():
+    assert cursor_to_json(42) == 42  # numbers stay numbers
+    iso = cursor_to_json(datetime(2024, 1, 2, 3, 4, 5, 600000))
+    assert iso == "2024-01-02 03:04:05.600000"
+    assert json.loads(json.dumps({"c": iso}))["c"] == iso
+
+
+def test_reconcile_numeric_cursor_adopts_committed():
+    st = SyncState()
+    st.set_cursor("ev", "id", "9")
+    # committed position 100 is AHEAD; lexicographic compare would miss it
+    assert st.reconcile("ev", "id", "100") is True
+    assert st.get_cursor("ev", "id") == "100"
+    # behind/equal positions leave state untouched
+    assert st.reconcile("ev", "id", "50") is False
+    assert st.reconcile("ev", "id", "100") is False
+
+
+# -- reference-shaped streams.json / state.json load ------------------------
+
+_REFERENCE_CATALOG = {
+    "selected_streams": {
+        "public": [
+            {
+                "stream_name": "events",
+                "partition_regex": "",
+                "normalization": True,
+                "filter": "",
+                "selected_columns": {
+                    "columns": ["id", "ts", "v"],
+                    "sync_new_columns": False,
+                },
+            }
+        ]
+    },
+    "streams": [
+        {
+            "stream": {
+                "name": "events",
+                "namespace": "public",
+                "type_schema": {
+                    "properties": {
+                        "id": {"type": ["integer"]},
+                        "ts": {"type": ["timestamp_micro", "null"]},
+                        "v": {"type": ["number", "null"]},
+                        "tags": {"type": ["array", "null"]},
+                    }
+                },
+                "supported_sync_modes": ["full_refresh", "incremental", "cdc"],
+                "source_defined_primary_key": ["id"],
+                "available_cursor_fields": [],
+                "cursor_field": "ts",
+                "sync_mode": "cdc",
+                "destination_table": "events_dst",
+                "additional_properties": "whatever",
+            }
+        }
+    ],
+}
+
+
+def test_reference_catalog_loads():
+    cat = Catalog.from_json(json.dumps(_REFERENCE_CATALOG))
+    assert len(cat.streams) == 1
+    cs = cat.streams[0]
+    assert cs.stream.name == "events"
+    assert cs.stream.sync_mode == "cdc"
+    # cursor_field seeds available_cursor_fields
+    assert cs.stream.available_cursor_fields == ["ts"]
+    sch = cs.stream.spark_schema
+    by_name = {f.name: f.dataType.simpleString() for f in sch.fields}
+    assert by_name["id"] == "bigint"  # OLAKE 'integer' = int64
+    assert by_name["ts"] == "timestamp"
+    assert by_name["v"] == "double"
+    # metadata: nested selected_columns unpacked; stream has no 'metadata'
+    # key in the reference shape, so it defaults from the stream name
+    assert cs.metadata.stream_name == "events"
+    meta = cat.selected_streams["public"][0]
+    assert meta.selected_columns == ["id", "ts", "v"]
+    assert meta.sync_new_columns is False
+
+
+def test_reference_state_loads():
+    ref_state = {
+        "type": "STREAM",
+        "streams": [
+            {
+                "stream": "events",
+                "namespace": "public",
+                "sync_mode": "incremental",
+                "state": {
+                    "ts": "2024-01-05 00:00:00",
+                    "chunks": [{"min": 0, "max": 100}, {"min": 100, "max": 200}],
+                },
+            }
+        ],
+    }
+    st = SyncState.from_json(json.dumps(ref_state))
+    assert st.get_cursor("events", "ts") == "2024-01-05 00:00:00"
+    chunks = st.streams["events"].chunks
+    assert [(c.min, c.max) for c in chunks] == [(0, 100), (100, 200)]
+    # engine-native shape still loads (round-trip)
+    again = SyncState.from_json(st.to_json())
+    assert again.get_cursor("events", "ts") == "2024-01-05 00:00:00"
+    assert [(c.min, c.max) for c in again.streams["events"].chunks] == [
+        (0, 100),
+        (100, 200),
+    ]

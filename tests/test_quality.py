@@ -245,3 +245,31 @@ def test_source_quality_filter_flags_and_drops(spark):
 
     kept = source_quality_filter(df, min_docs=10, min_quality=0.5, max_dup_rate=0.2)
     assert {r.source for r in kept.collect()} == {"healthy", "tiny"}
+
+
+# -- source_quality_report NULL text ----------------------------------------
+
+
+def test_source_quality_null_text_not_counted_as_dup(spark):
+    from olake_spark.operators.quality import (
+        source_quality_filter,
+        source_quality_report,
+    )
+
+    rows = [(i, None, "nullsrc") for i in range(12)]
+    rows += [(100 + i, f"unique document text number {i} " * 20, "goodsrc") for i in range(12)]
+    df = spark.createDataFrame(rows, ["doc_id", "text", "source"])
+    rep = {
+        r.source: r
+        for r in source_quality_report(
+            df, min_docs=10, min_quality=0.5, max_dup_rate=0.2
+        ).collect()
+    }
+    ns = rep["nullsrc"]
+    # 12 NULL-text docs share the '' fingerprint: 11/12 dup_rate, 0 quality,
+    # and a DEFINITE verdict (previously flagged could be NULL)
+    assert ns.n_docs == 12 and ns.sum_quality_micro == 0
+    assert ns.flagged is True
+    assert rep["goodsrc"].flagged is False
+    kept = source_quality_filter(df, min_docs=10, min_quality=0.5, max_dup_rate=0.2)
+    assert kept.count() == 12  # the all-NULL source is actually dropped now

@@ -38,7 +38,11 @@ def _streams_fixtures() -> list[str]:
     return sorted(glob.glob(f"{REF}/drivers/*/internal/testdata/test_streams.json"))
 
 
-def _driver(path: str) -> str:
+def _driver(path: object) -> str | None:
+    # with no fixtures found, pytest asks for the id of its empty-parameter
+    # placeholder, which is not a path; None lets pytest name it itself
+    if not isinstance(path, str):
+        return None
     return path.split("/drivers/")[1].split("/")[0]
 
 

@@ -9,6 +9,7 @@ output (unrolled sequential-fold dot products, max_by argmax) and
 signatures). These tests pin both claims.
 """
 
+import random
 import time
 
 import pytest
@@ -274,7 +275,7 @@ def test_ivf_exact_topk_is_lossless_and_actually_prunes(spark):
     random `embeddings` table concentrates distances and prunes
     nothing, which is precisely why the registry proof runs on the
     orders-derived clustered vectors)."""
-    from olake_spark.queries_r11 import _clustered_vectors
+    from olake_spark.queries.dedup import _clustered_vectors
 
     vecs = _clustered_vectors(spark, SF)
     q = vecs.filter(F.col("vec_id") < 16)
@@ -289,3 +290,80 @@ def test_ivf_exact_topk_is_lossless_and_actually_prunes(spark):
     n_cells = vecs.filter((F.col("vec_id") % 97) == 0).count()
     frac = surv / (n_q * n_cells)
     assert frac < 0.6, f"pruning is vacuous: {frac:.3f} of cells survive"
+
+
+DIM = 64
+
+
+def _vec(seed: int) -> list[float]:
+    rng = random.Random(seed)
+    return [rng.uniform(-1, 1) for _ in range(DIM)]
+
+
+# -- LSH index param stamps -------------------------------------------------
+
+
+def test_index_param_mismatch_raises_not_silent_clean(spark):
+    from olake_spark.operators.decontam import semantic_overlap
+    from olake_spark.operators.similarity import lsh_build_index
+
+    v = _vec(1)
+    corpus = spark.createDataFrame([(10, v), (11, _vec(2))], ["vec_id", "embedding"])
+    bench = spark.createDataFrame([(900, v)], ["vec_id", "embedding"])
+    idx = lsh_build_index(corpus, n_tables=2, n_planes=8)
+    # matched params: exact-copy contamination found via the index
+    hits = semantic_overlap(
+        bench, benchmark=bench, corpus_index=idx, n_tables=2, n_planes=8, threshold=0.9
+    )
+    assert {r.vec_id for r in hits.collect()} == {10}
+    # mismatched planes: used to return an empty (all-clean) frame; the
+    # schema-metadata stamp now fails PLAN BUILD, before any execution
+    with pytest.raises(Exception, match="n_tables, n_planes"):
+        semantic_overlap(
+            bench, benchmark=bench, corpus_index=idx,
+            n_tables=2, n_planes=12, threshold=0.9,
+        )
+    # an EMPTY mis-pathed index (rows can't trigger the lazy assert) still
+    # fails loudly via the metadata stamp
+    with pytest.raises(Exception, match="n_tables, n_planes"):
+        semantic_overlap(
+            bench, benchmark=bench, corpus_index=idx.filter("vec_id < 0"),
+            n_tables=2, n_planes=12, threshold=0.9,
+        )
+
+
+def test_lsh_bucket_topk_checks_index_params(spark):
+    from olake_spark.operators.similarity import lsh_bucket_topk, lsh_build_index
+
+    corpus = spark.createDataFrame(
+        [(i, _vec(i)) for i in range(6)], ["vec_id", "embedding"]
+    )
+    idx = lsh_build_index(corpus, n_tables=2, n_planes=8)
+    q = corpus.limit(1)
+    ok = lsh_bucket_topk(q, index=idx, k=3, n_tables=2, n_planes=8)
+    ok.collect()  # no raise
+    with pytest.raises(Exception, match="n_tables, n_planes"):
+        lsh_bucket_topk(q, index=idx, k=3, n_tables=4, n_planes=8)
+    # metadata stripped (e.g. a transformation rebuilt the column): the
+    # row-level lazy assert still catches the mismatch at execution
+    stripped = idx.withMetadata("band", {})
+    lazy_bad = lsh_bucket_topk(stripped, index=stripped, k=3, n_tables=4, n_planes=8)
+    with pytest.raises(Exception, match="n_tables, n_planes"):
+        lazy_bad.collect()
+
+
+def test_unstamped_index_passes_through(spark):
+    from olake_spark.operators.similarity import check_index_params, lsh_build_index
+
+    idx = (
+        lsh_build_index(
+            spark.createDataFrame([(1, _vec(1))], ["vec_id", "embedding"]),
+            n_tables=2,
+            n_planes=8,
+        )
+        .drop("_lsh_tables", "_lsh_planes")
+        .withMetadata("band", {})
+    )
+    # hand-built / pre-stamp index (no stamp columns, no schema metadata):
+    # caller owns consistency, no check
+    assert check_index_params(idx, 99, 99).count() == 2  # 2 tables → 2 rows

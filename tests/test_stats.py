@@ -1,12 +1,10 @@
-"""SyncStats observation counters + streaming drain listener."""
+"""SyncStats observation counters."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
-from olake_spark.stats import DrainListener, SyncStats
+from olake_spark.stats import SyncStats
 
 
 def test_observe_counts_without_extra_actions(spark, tmp_path):
@@ -29,27 +27,3 @@ def test_report_skips_unrun_points(spark):
     rep = stats.report()
     assert "records_read" not in rep
 
-
-def test_drain_listener_captures_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
-    spark.range(100).withColumn("v", F.col("id") * 2).repartition(2).write.parquet(src)
-    dl = DrainListener()
-    listener = dl.listener(spark)
-    spark.streams.addListener(listener)
-    try:
-        stream = spark.readStream.schema("id long, v long").parquet(src)
-        (
-            stream.writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # listener callbacks are async — give the bus a moment
-        for _ in range(50):
-            if sum(b["num_input_rows"] for b in dl.batches) >= 100:
-                break
-            time.sleep(0.2)
-    finally:
-        spark.streams.removeListener(listener)
-    assert sum(b["num_input_rows"] for b in dl.batches) == 100

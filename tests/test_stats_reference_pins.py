@@ -680,7 +680,7 @@ def test_markov_entropy_pin(spark, tmp_path):
         "value double, props string",
     )
     df.write.parquet(str(tmp_path / "events.parquet"))
-    from olake_spark.queries_r10 import events_markov_entropy
+    from olake_spark.queries.stats import events_markov_entropy
 
     got = _row(events_markov_entropy(spark, str(tmp_path)))
 

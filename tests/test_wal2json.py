@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olake_spark.streaming.wal2json import decode_wal2json, project_stream
@@ -123,3 +124,36 @@ def test_decode_adversarial_values_roundtrip(spark):
     null_msg = _msg("0/FF", [_ins("t", ["id", "payload"], [99, None])])
     row = decode_wal2json(_raw(spark, [null_msg])).collect()[0]
     assert row.data["id"] == "99" and row.data["payload"] is None
+
+
+# -- wal2json unknown-kind default + non-DML filter -------------------------
+
+
+def test_wal2json_unknown_kind_and_truncate(spark):
+    from olake_spark.streaming.wal2json import decode_wal2json, op_type_column
+
+    msg = json.dumps(
+        {
+            "nextlsn": "0/1000",
+            "timestamp": "2024-03-01 10:00:00",
+            "change": [
+                {
+                    "kind": "insert",
+                    "schema": "public",
+                    "table": "t",
+                    "columnnames": ["id"],
+                    "columntypes": ["integer"],
+                    "columnvalues": ["1"],
+                },
+                {"kind": "truncate", "schema": "public", "table": "t"},
+            ],
+        }
+    )
+    raw = spark.createDataFrame([(msg,)], "value string")
+    rows = decode_wal2json(raw).collect()
+    # the truncate entry emits no row
+    assert len(rows) == 1 and rows[0]["_op_type"] == "c"
+    # unknown kinds default to insert op, like the reference
+    df = spark.createDataFrame([("message",), ("insert",)], "kind string")
+    got = [r["op"] for r in df.select(op_type_column(F.col("kind")).alias("op")).collect()]
+    assert got == ["c", "c"]

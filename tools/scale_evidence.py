@@ -196,7 +196,8 @@ def headline_scaling(spark, sf_dir: str, hi_scale: int = 10) -> dict:
     import tempfile as _tempfile
 
     from olake_spark.functions.olake_columns import stamp_olake_columns
-    from olake_spark.queries import _events_changelog, table
+    from olake_spark.queries import table
+    from olake_spark.queries.ingest import _events_changelog
     from olake_spark.sinks.table import ManagedTable
     from olake_spark.sources.files import spread
     from olake_spark.streaming.replay import replay_batches
@@ -361,7 +362,7 @@ def mor_read_amplification(
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from olake_spark.queries import _events_changelog
+    from olake_spark.queries.ingest import _events_changelog
     from olake_spark.sinks.table import ManagedTable
 
     tmp = _tempfile.mkdtemp(prefix="olake_mor_amp_")
@@ -1295,7 +1296,7 @@ def main() -> None:
     import shutil as _shutil
     import tempfile as _tempfile
 
-    from olake_spark.queries import _events_changelog
+    from olake_spark.queries.ingest import _events_changelog
     from olake_spark.sinks.table import ManagedTable
 
     def _pq_files(path: str) -> set:

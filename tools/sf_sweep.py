@@ -41,7 +41,6 @@ def main() -> int:
     sfs = args.sfs.split(",")
 
     from olake_spark.queries import QUERIES  # noqa: E402  (registers all)
-    from olake_spark import queries_data_ops  # noqa: F401,E402
     from olake_spark.session import get_spark
 
     unknown = [n for n in args.names if n not in QUERIES]
