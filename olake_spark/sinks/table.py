@@ -32,17 +32,26 @@ Two upsert strategies, mirroring Iceberg's copy-on-write vs merge-on-read:
   cost moves to readers until ``compact()`` folds deltas into a new base.
   Right for CDC into a 100 TB table: a 100k-row batch must not rewrite
   the table.
+
+A file group's commit position (its *seq*) is not stored in the data. The
+read scans every group that shares a schema in ONE parquet scan and
+recovers each row's seq from a basename→seq map looked up on the file
+source's ``_metadata.file_name`` (Spark names each written file
+``part-…-<job uuid>-c000…``, so a basename is unique per write). The plan
+has one scan per distinct group schema, however many deltas are pending; a
+table that only ``upsert_mor`` has written has one.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -106,18 +115,30 @@ class CommitConflict(RuntimeError):
     """Another writer committed the same version first."""
 
 
-def _align(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project df onto the target schema: cast matching columns, null-fill
-    missing ones. Pure column expressions — no shuffle, no Python."""
-    from pyspark.sql import functions as F
-
+def _align(df: DataFrame, target: T.StructType, *extra: Column) -> DataFrame:
+    """Project df onto the target schema (then ``extra``): cast matching
+    columns, null-fill missing ones. Pure column expressions — no shuffle,
+    no Python."""
     have = {f.name for f in df.schema.fields}
     return df.select(
         *[
             (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
             for f in target.fields
-        ]
+        ],
+        *extra,
     )
+
+
+def _loose(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable and no field
+    metadata: two group schemas that differ only there share a scan."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _loose(f.dataType)) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_loose(dt.elementType))
+    if isinstance(dt, T.MapType):
+        return T.MapType(_loose(dt.keyType), _loose(dt.valueType))
+    return dt
 
 
 class ManagedTable:
@@ -228,6 +249,12 @@ class ManagedTable:
         full snapshot chain for exactly this, destination/iceberg/iceberg.go).
         Compaction rewrites files but commits a NEW version, so prior
         snapshots stay readable until a retention sweep removes them.
+
+        A table with file groups is read with one parquet scan per distinct
+        group schema (names and types; nullability ignored), not one per
+        group. A merge-on-read table tags each row with its group's commit
+        seq through a basename→seq map on ``_metadata.file_name``, then
+        keeps the newest row per key with one window.
         """
         m = self._manifest(version)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
@@ -236,23 +263,31 @@ class ManagedTable:
         groups = m.get("groups")
         if not groups:
             return self.spark.read.schema(schema).parquet(*m["files"])
-        # evolved table: each file group was written under an older schema;
-        # read each with its own schema and align to the table schema with
-        # column-level casts (the Iceberg int→long/float→double read-time
-        # promotion, iceberg.go:42-57) — still N parallel scans + a union,
-        # no driver-side work
+        # evolved or merge-on-read table: each file group was written under
+        # its own schema. The groups that share one are read by a single
+        # scan, aligned once to the table schema with column-level casts
+        # (the Iceberg int→long/float→double read-time promotion,
+        # iceberg.go:42-57); distinct schemas union. No driver-side work.
         has_delta = any(g.get("delta") for g in groups)
-        parts = []
+        scans: dict[str, tuple[T.StructType, list[str]]] = {}
+        seq_of: dict[str, int] = {}
         for seq, g in enumerate(groups):
             gschema = T.StructType.fromJson(json.loads(g["schema"]))
-            gdf = self.spark.read.schema(gschema).parquet(*g["files"])
-            gdf = _align(gdf, schema)
+            scans.setdefault(_loose(gschema).json(), (gschema, []))[1].extend(g["files"])
+            seq_of.update((os.path.basename(f), seq) for f in g["files"])
+        if has_delta:
+            # a row's commit seq, from the basename of the file it came from
+            seq_map = F.create_map(*[F.lit(x) for kv in seq_of.items() for x in kv])
+        parts = []
+        for gschema, files in scans.values():
+            gdf = self.spark.read.schema(gschema).parquet(*files)
+            extra = []
             if has_delta:
-                gdf = gdf.withColumn("_mor_seq", F.lit(seq))
-            parts.append(gdf)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+                # metadataColumn: a data column named _metadata cannot shadow it
+                name = gdf.metadataColumn("_metadata").getField("file_name")
+                extra.append(seq_map[name].alias("_mor_seq"))
+            parts.append(_align(gdf, schema, *extra))
+        out = functools.reduce(DataFrame.unionByName, parts)
         if not has_delta:
             return out
         # MOR resolve: newest (commit seq, change order) per key wins, then

@@ -29,13 +29,20 @@ from concurrent.futures import ThreadPoolExecutor
 
 __all__ = ["child_jvm_slots", "join", "run_concurrently"]
 
-# memory budget of one child test process: its JVM (1.2-1.8 GB at a 1g heap,
-# up to 3.6 GB at 3g), the Python driver and its pyspark.daemon workers
-# (~128 MB each, up to 24 per shard child). On a 4-core / 16 GB host these
-# figures give 2 + 2 children, whose full run bottomed out at 0.5 GB
-# available; the parent session runs tests too and keeps its own share
-CHILD_GB = 2.5
-PARENT_GB = 3.0
+# memory one registry-tail child and one suite-shard child hold together
+# (each a JVM, its Python driver and pyspark.daemon workers), and the
+# parent session's share (a 3g heap; it runs tests too). In two full runs
+# on a 4-core host with 15 GB available, 2 + 2 children with the shard
+# children at a SHARD_DRIVER_MEM heap, MemAvailable bottomed out at
+# 2.0-2.4 GB. In the second, the summed PSS of parent and children
+# peaked at 13.4 GB, under PARENT_GB + 2 * PAIR_GB; a child's own peak
+# PSS was higher than its share (tail 2.4-2.7 GB, shard 3.9-4.4 GB, of
+# which the JVM held 2.2-2.8 GB), but the peaks do not coincide. With a
+# 3g shard heap the same fan-out bottomed out near 0.5 GB, and in one
+# run the kernel killed a shard child's JVM.
+PAIR_GB = 5.0
+PARENT_GB = 4.0
+SHARD_DRIVER_MEM = "2g"
 
 
 def _mem_available_gb() -> float:
@@ -52,16 +59,17 @@ def _mem_available_gb() -> float:
 @functools.cache
 def child_jvm_slots() -> int:
     """How many child JVMs a full suite run may hold at once: two per usable
-    core (the fixture work is latency-bound), and no more than fit in the
-    memory left beside the parent session at CHILD_GB each. Beyond that
-    the kernel kills JVMs mid-run and every test left in one fails with
-    ConnectionRefusedError. Cached so the two fan-outs split one figure."""
+    core (the fixture work is latency-bound), and no more tail + shard
+    pairs than fit in the memory left beside the parent session. Beyond
+    that the kernel kills JVMs mid-run and every test left in one fails
+    with ConnectionRefusedError. The figure is even, half for each
+    fan-out; cached so the two fan-outs split one figure."""
     if hasattr(os, "sched_getaffinity"):
         cores = len(os.sched_getaffinity(0))
     else:
         cores = os.cpu_count() or 1
-    by_mem = int((_mem_available_gb() - PARENT_GB) // CHILD_GB)
-    return max(2, min(2 * cores, by_mem))
+    pairs = int((_mem_available_gb() - PARENT_GB) // PAIR_GB)
+    return 2 * max(1, min(cores, pairs))
 
 
 # a full run must end inside the Tier-1 command's `timeout 2670` (ROADMAP

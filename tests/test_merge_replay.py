@@ -152,6 +152,45 @@ def test_managed_table_mor_matches_cow(spark, tmp_path, changelog):
     assert _rows_to_dict(t.read().collect()) == _oracle(changelog + extra)
 
 
+def test_mor_commit_order_beats_order_columns(spark, tmp_path):
+    """A later delta wins per key even when its order-column values are
+    LOWER than an earlier delta's (a source whose LSNs restarted, or a
+    replayed batch): the commit seq orders first, the order columns only
+    break ties within one commit. Tombstones obey the same rule."""
+    t = ManagedTable(spark, str(tmp_path / "mor_order"))
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(1, "c", k, f"base{k}") for k in range(1, 6)], SCHEMA
+        ),
+        ["k"], ["lsn"],
+    )
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(100, "u", 1, "early1"), (101, "u", 2, "early2"), (102, "u", 3, "early3"),
+             (103, "c", 6, "early6")],
+            SCHEMA,
+        ),
+        ["k"], ["lsn"],
+    )
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(10, "u", 1, "late1"), (11, "d", 2, None), (12, "u", 6, "late6")],
+            SCHEMA,
+        ),
+        ["k"], ["lsn"],
+    )
+    want = {
+        1: (10, "u", 1, "late1"),
+        3: (102, "u", 3, "early3"),
+        4: (1, "c", 4, "base4"),
+        5: (1, "c", 5, "base5"),
+        6: (12, "u", 6, "late6"),
+    }
+    assert _rows_to_dict(t.read().collect()) == want
+    t.compact()
+    assert _rows_to_dict(t.read().collect()) == want
+
+
 def test_mor_key_cols_pinned(spark, tmp_path, changelog):
     t = ManagedTable(spark, str(tmp_path / "mor_pin"))
     df = spark.createDataFrame(changelog[:50], SCHEMA)

@@ -154,3 +154,43 @@ def test_mor_base_without_op_column_survives_read(spark, tmp_path):
     t.upsert_mor(delta, ["k"], ["lsn"])
     got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == {1: "a", 2: "b2", 3: "c"}
+
+
+def test_mor_mixed_schema_deltas_resolve(spark, tmp_path):
+    """Delta groups written under four schemas: a base without _op_type, a
+    delta that widens the key int→long, one that adds a column, and one
+    whose data has a column named ``_metadata`` (the name of the file
+    source's metadata column the read takes each row's commit seq from)."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b"), (5, "e")], "k int, v string"))
+    big = 2**40
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(2, "b2", "u", 10), (big, "big", "c", 11)], "k long, v string, _op_type string, lsn int"
+        ),
+        ["k"], ["lsn"],
+    )
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(1, "a2", "u", 5, "w1"), (big, None, "d", 12, None)],
+            "k long, v string, _op_type string, lsn int, w string",
+        ),
+        ["k"], ["lsn"],
+    )
+    t.upsert_mor(
+        spark.createDataFrame(
+            [(3, "c", "c", 13, "m3"), (2, "b3", "u", 1, "m2")],
+            "k long, v string, _op_type string, lsn int, _metadata string",
+        ),
+        ["k"], ["lsn"],
+    )
+    schemas = {g["schema"] for g in t._manifest()["groups"]}
+    assert len(schemas) == 4
+    got = {(r["k"], r["v"], r["w"], r["_metadata"]) for r in t.read().collect()}
+    assert got == {
+        (1, "a2", "w1", None),
+        (2, "b3", None, "m2"),
+        (3, "c", None, "m3"),
+        (5, "e", None, None),
+    }
+    assert dict(t.read().dtypes)["k"] == "bigint"

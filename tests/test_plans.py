@@ -298,6 +298,23 @@ def test_decode_count_plan_parses_json_once(spark):
     assert plan.count("from_json") == 1, plan[:2000]
 
 
+def test_mor_read_is_one_scan_per_schema(spark, tmp_path):
+    """Pending merge-on-read deltas that share a schema are read by ONE
+    parquet scan (each row's commit seq comes from its file's name), not
+    one scan per delta group unioned together."""
+    from olake_spark.sinks.table import ManagedTable
+
+    t = ManagedTable(spark, str(tmp_path / "mor"))
+    schema = "lsn long, _op_type string, k long, v string"
+    t.upsert_mor(spark.createDataFrame([(0, "c", k, "base") for k in range(8)], schema), ["k"], ["lsn"])
+    for i in range(1, 7):
+        t.upsert_mor(spark.createDataFrame([(i, "u", i, f"d{i}")], schema), ["k"], ["lsn"])
+    assert sum(1 for g in t._manifest()["groups"] if g.get("delta")) == 6
+    plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Union" not in plan, plan
+
+
 # -- type-aware cursor ordering ---------------------------------------------
 
 

@@ -30,7 +30,7 @@ import sys
 import tempfile
 import time
 
-from concurrency import child_jvm_slots, join
+from concurrency import SHARD_DRIVER_MEM, child_jvm_slots, join
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # at most 6 children; a smaller host gets what its child JVM slots leave
@@ -107,8 +107,9 @@ def launch(modules_by_shard: list[list[str]]) -> dict:
         # the session default driver heap is 48g (sized for the sf0.1
         # bench); concurrent suite JVMs at -Xmx48g would let lazy GC
         # balloon aggregate RSS past the box and stall everyone on
-        # reclaim — unit fixtures keep ~0.6 GB live, so 3g leaves room
-        OLAKE_DRIVER_MEM=os.environ.get("OLAKE_SHARD_DRIVER_MEM", "3g"),
+        # reclaim — unit fixtures keep ~0.6 GB live; the child memory
+        # budget in tests/concurrency.py was measured at this heap
+        OLAKE_DRIVER_MEM=os.environ.get("OLAKE_SHARD_DRIVER_MEM", SHARD_DRIVER_MEM),
     )
     procs = [
         subprocess.Popen(
@@ -176,7 +177,8 @@ def test_child_jvm_slots_follow_cores_and_memory(monkeypatch):
         return concurrency.child_jvm_slots()
 
     try:
-        assert slots(4, 15.2) == 4  # memory-bound: (15.2 - 3) // 2.5
+        assert slots(4, 15.2) == 4  # memory-bound: 2 pairs, (15.2 - 4) // 5
+        assert slots(4, 12.0) == 2  # one pair beside the parent
         assert slots(4, 64.0) == 8  # core-bound: two per core
         assert slots(1, 2.0) == 2  # never below one tail + one shard child
         assert slots(32, 250.0) >= 16  # the 10 + 6 fan-out still fits

@@ -353,11 +353,11 @@ def mor_read_amplification(
     """Read-amplification vs pending-delta count for the MOR table.
 
     A MOR commit is O(|batch|), but every un-compacted delta group joins
-    the read-time resolve (union of base + k deltas → one keyed window).
-    This measures resolve wall at 0/1/4/16/64 pending deltas against a
-    ``target_scale``× base, plus the post-compact read — the curve that
-    justifies a documented compaction threshold (compact when resolve
-    cost stops being dominated by the base scan).
+    the read-time resolve (one scan over base + k deltas → one keyed
+    window). This measures resolve wall, and the jobs run to build the
+    read's plan, at 0/1/4/16/64 pending deltas against a
+    ``target_scale``× base, plus the post-compact read and the compaction
+    itself — the curve the README's compaction policy is read from.
     """
     import shutil as _shutil
     import tempfile as _tempfile
@@ -396,9 +396,25 @@ def mor_read_amplification(
                 best = w if best is None else min(best, w)
             return round(best, 2), n
 
+        def _build_jobs(pending: int) -> int:
+            """Spark jobs run while the read plan is BUILT, before any
+            action: Spark's parallel file-listing job, which one scan
+            starts when it gets more paths than
+            ``spark.sql.sources.parallelPartitionDiscovery.threshold``."""
+            group = f"mor_read_build_{pending}"
+            sc = spark.sparkContext
+            sc.setJobGroup(group, group)
+            try:
+                t.read()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
         w, n = _read_wall()
         res["base_rows"] = n
-        res["points"].append({"pending_deltas": 0, "read_wall_s": w})
+        res["points"].append(
+            {"pending_deltas": 0, "read_wall_s": w, "build_jobs": _build_jobs(0)}
+        )
         pending = 0
         for cp in checkpoints:
             while pending < cp:
@@ -409,7 +425,9 @@ def mor_read_amplification(
                     ["lsn"],
                 )
             w, _ = _read_wall()
-            res["points"].append({"pending_deltas": cp, "read_wall_s": w})
+            res["points"].append(
+                {"pending_deltas": cp, "read_wall_s": w, "build_jobs": _build_jobs(cp)}
+            )
         t0 = time.perf_counter()
         t.compact()
         res["compact_wall_s"] = round(time.perf_counter() - t0, 2)
