@@ -25,7 +25,7 @@ def l2_normalize(df: DataFrame, vec_col: str = "embedding", out: str | None = No
     unchanged). Output element type is double."""
     out = out or vec_col
     v = F.col(vec_col)
-    n = _norm(v)
+    n = _norm(vec_col)
     unit = F.transform(v, lambda x: x.cast("double") / n)
     return df.withColumn(out, F.when(n > 0, unit).otherwise(v.cast("array<double>")))
 
@@ -107,9 +107,8 @@ def centroid_outliers(
     from olake_spark.operators.similarity import cosine
 
     cents = group_centroids(df, group_col, vec_col)
-    # column NAMES with a known dim get the codegen'd unrolled dot chain
-    sim9 = F.round(cosine(vec_col if dim else F.col(vec_col),
-                          "centroid" if dim else F.col("centroid"), dim), 9)
+    # a known dim gets the codegen'd unrolled dot chain
+    sim9 = F.round(cosine(vec_col, "centroid", dim), 9)
     scored = (
         df.select(id_col, group_col, vec_col)
         .join(F.broadcast(cents), group_col)

@@ -44,6 +44,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from olake_spark.materialize import materialize
+from olake_spark.operators.similarity import _kernel, _quantized, _rank_topk, ivf_assign
 
 __all__ = [
     "pq_stride_codebooks",
@@ -64,41 +65,46 @@ _M = 4  # subspaces
 _SCALE = 10_000
 
 
-def _quantized(vec_col: str, scale: int) -> Column:
-    return F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(scale))).cast("double"),
+def _subvectors(
+    df: DataFrame, keep: list, qv: Column, m: int, dim: int, sv: str = "sv"
+) -> DataFrame:
+    """(keep..., sub, sv): one row per subspace with the vector's ``sub``-th
+    slice of width ``dim // m``. A ``dim`` that ``m`` does not divide raises:
+    the trailing ``dim % m`` components would belong to no subspace."""
+    if dim % m:
+        raise ValueError(
+            f"dim={dim} is not divisible by m={m}: PQ would drop the last "
+            f"{dim % m} dimension(s); pick m dividing dim"
+        )
+    n = dim // m
+    subs = F.array(
+        *[F.struct(F.lit(j).alias("sub"), F.slice(qv, j * n + 1, n).alias(sv)) for j in range(m)]
     )
+    return df.select(*keep, F.inline(subs))
 
 
-def _sub_structs(qv: Column, m: int, dim: int) -> Column:
-    """array<struct<sub,sv>> of the m sub-slices (slice is 1-based)."""
-    sub_len = dim // m
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("sub"),
-                F.slice(qv, j * sub_len + 1, sub_len).alias("sv"),
-            )
-            for j in range(m)
-        ]
+def _probed_cells(
+    queries: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, dim: int, nprobe: int
+) -> DataFrame:
+    """(query_id, _cell): each query's ``nprobe`` nearest coarse cells."""
+    return ivf_assign(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
+        centroids, "query_id", "_qv", dim, nprobe=nprobe,
+    ).select("query_id", "_cell")
+
+
+def _query_lut(
+    queries: DataFrame, codebooks: DataFrame, id_col: str, vec_col: str,
+    m: int, dim: int, scale: int,
+) -> DataFrame:
+    """(query_id, sub, code, _pd): the per-query ADC look-up table, the exact
+    dot of each quantized query slice against every codebook entry."""
+    qs = _subvectors(
+        queries, [F.col(id_col).alias("query_id")], _quantized(vec_col, scale), m, dim, "qsv"
     )
-
-
-def _int_dot(a: str, b: str, n: int) -> Column:
-    """Unrolled integer-valued dot (stays in codegen; exact below 2^53)."""
-    acc = F.lit(0.0)
-    for i in range(n):
-        acc = acc + F.col(a)[i] * F.col(b)[i]
-    return acc
-
-
-def _int_sqdist(a: str, b: str, n: int) -> Column:
-    acc = F.lit(0.0)
-    for i in range(n):
-        d = F.col(a)[i] - F.col(b)[i]
-        acc = acc + d * d
-    return acc
+    return qs.join(codebooks, "sub").select(
+        "query_id", "sub", "code", _kernel("dot", dim // m, "qsv", "cv").alias("_pd")
+    )
 
 
 def pq_stride_codebooks(
@@ -119,10 +125,8 @@ def pq_stride_codebooks(
         F.col(id_col).alias("code"), qv.alias("_qv")
     )
     return (
-        rows.select(
-            "code", F.explode(_sub_structs(F.col("_qv"), m, dim)).alias("_s")
-        )
-        .select(F.col("_s.sub").alias("sub"), "code", F.col("_s.sv").alias("cv"))
+        _subvectors(rows, ["code"], F.col("_qv"), m, dim, "cv")
+        .select("sub", "code", "cv")
         # tiny (m x |corpus|/stride) and referenced from both the encode pass
         # and every query LUT — materialize once per execution (guide §2.1)
         .transform(materialize)
@@ -169,11 +173,9 @@ def pq_train_codebooks(
     ``incremental_minhash_dedup``). The leak is (iters−1) DataFrames of
     m·k rows each — bytes, not gigabytes — but unbounded across sessions
     that train repeatedly without clearing."""
-    sub_len = dim // m
-    qv = _quantized(vec_col, scale)
-    sliced = corpus.select(
-        F.col(id_col).alias("_vid"), F.explode(_sub_structs(qv, m, dim)).alias("_s")
-    ).select("_vid", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv"))
+    sliced = _subvectors(
+        corpus, [F.col(id_col).alias("_vid")], _quantized(vec_col, scale), m, dim
+    )
     wk = W.partitionBy("sub").orderBy("_vid")
     cb = (
         sliced.withColumn("_rn", F.row_number().over(wk))
@@ -182,7 +184,7 @@ def pq_train_codebooks(
     )
     for _ in range(iters):
         scored = sliced.join(F.broadcast(cb), "sub").select(
-            "_vid", "sub", "sv", "code", _int_sqdist("sv", "cv", sub_len).alias("_d2")
+            "_vid", "sub", "sv", "code", _kernel("sqdist", dim // m, "sv", "cv").alias("_d2")
         )
         assigned = scored.groupBy("_vid", "sub").agg(
             F.max_by(
@@ -245,19 +247,13 @@ def pq_encode(
     ``ivfpq_index`` encode an already-assigned corpus without a second
     corpus scan or a codes⋈cells self-join."""
     carry = list(carry_cols or [])
-    sub_len = dim // m
-    qv = _quantized(vec_col, scale)
-    vs = corpus.select(
-        F.col(id_col), *carry, F.explode(_sub_structs(qv, m, dim)).alias("_s")
-    ).select(
-        id_col, *carry, F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv")
-    )
+    vs = _subvectors(corpus, [id_col, *carry], _quantized(vec_col, scale), m, dim)
     scored = vs.join(F.broadcast(codebooks), "sub").select(
         id_col,
         *carry,
         "sub",
         "code",
-        _int_sqdist("sv", "cv", sub_len).alias("_d2"),
+        _kernel("sqdist", dim // m, "sv", "cv").alias("_d2"),
     )
     best = F.max_by(
         F.col("code"), F.struct((-F.col("_d2")).alias("d"), (-F.col("code")).alias("c"))
@@ -288,31 +284,14 @@ def pq_topk(
     joins it on (sub, code) with no shuffle of corpus rows, and the
     (query, neighbor) sum combines map-side. Compose with an IVF cell
     filter on ``codes`` for the classic IVF-PQ pruned scan."""
-    sub_len = dim // m
-    qv = _quantized(vec_col, scale)
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.explode(_sub_structs(qv, m, dim)).alias("_s")
-    ).select("query_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("qsv"))
-    lut = qs.join(codebooks, "sub").select(
-        "query_id", "sub", "code", _int_dot("qsv", "cv", sub_len).alias("_pd")
-    )
+    lut = _query_lut(queries, codebooks, id_col, vec_col, m, dim, scale)
     scored = (
         codes.join(F.broadcast(lut), ["sub", "code"])
         .filter(F.col("query_id") != F.col(id_col))
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.sum("_pd").alias("adc_dot"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("adc_dot").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            F.col("adc_dot").cast("long").alias("adc_dot"),
-        )
-    )
+    return _rank_topk(scored, k, "adc_dot", F.col("adc_dot").cast("long").alias("adc_dot"))
 
 
 def pq_refine(
@@ -350,21 +329,9 @@ def pq_refine(
     scored = cand_vecs.join(F.broadcast(qvecs), "query_id").select(
         "query_id",
         "neighbor_id",
-        _int_dot("_qv", "_nv", dim).alias("exact_dot"),
+        _kernel("dot", dim, "_qv", "_nv").alias("exact_dot"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("exact_dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.col("exact_dot").cast("long").alias("exact_dot"),
-        )
-    )
+    return _rank_topk(scored, k, "exact_dot", F.col("exact_dot").cast("long").alias("exact_dot"))
 
 
 def ivfpq_index(
@@ -389,8 +356,6 @@ def ivfpq_index(
     scans plus that join). Bit-identical: the carried vector is the
     argmax struct's verbatim vector, and the cell is functionally
     dependent on the id."""
-    from olake_spark.operators.similarity import ivf_assign
-
     assigned = ivf_assign(
         corpus.select(id_col, vec_col), centroids, id_col, vec_col, dim
     )
@@ -421,39 +386,16 @@ def ivfpq_topk(
 
     Output: (query_id, neighbor_id, rank, adc_dot), ranked per query by
     the exact-integer ADC score, ties on neighbor id."""
-    from olake_spark.operators.similarity import ivf_assign
-
-    sub_len = dim // m
-    qcells = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        centroids, "query_id", "_qv", dim, nprobe=nprobe,
-    ).select("query_id", "_cell")
-    qv = _quantized(vec_col, scale)
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.explode(_sub_structs(qv, m, dim)).alias("_s")
-    ).select("query_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("qsv"))
-    lut = (
-        qs.join(codebooks, "sub")
-        .select("query_id", "sub", "code", _int_dot("qsv", "cv", sub_len).alias("_pd"))
-        .join(qcells, "query_id")  # replicate the LUT per probed cell
-    )
+    qcells = _probed_cells(queries, centroids, id_col, vec_col, dim, nprobe)
+    # replicate the LUT per probed cell
+    lut = _query_lut(queries, codebooks, id_col, vec_col, m, dim, scale).join(qcells, "query_id")
     scored = (
         index.join(F.broadcast(lut), ["_cell", "sub", "code"])
         .filter(F.col("query_id") != F.col(id_col))
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.sum("_pd").alias("adc_dot"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("adc_dot").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            F.col("adc_dot").cast("long").alias("adc_dot"),
-        )
-    )
+    return _rank_topk(scored, k, "adc_dot", F.col("adc_dot").cast("long").alias("adc_dot"))
 
 
 # ---------------------------------------------------------------------------
@@ -503,8 +445,6 @@ def ivf_residuals(
     the assigned relation with a broadcast centroid join — no second
     corpus scan and no corpus-wide id join (the pre-r12 shape paid
     both)."""
-    from olake_spark.operators.similarity import ivf_assign
-
     assigned = ivf_assign(
         corpus.select(id_col, vec_col), centroids, id_col, vec_col, dim
     )
@@ -545,38 +485,17 @@ def ivfadc_topk(
     per-(query, cell) centroid terms are tiny and broadcast; neither the
     corpus nor the index ever shuffles. Output: (query_id, neighbor_id,
     rank, adc_dot) with the exact-integer score, ties on neighbor id."""
-    from olake_spark.operators.similarity import ivf_assign
-
-    sub_len = dim // m
-    qcells = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        centroids, "query_id", "_qv", dim, nprobe=nprobe,
-    ).select("query_id", "_cell")
-    qv = _quantized(vec_col, scale)
+    qcells = _probed_cells(queries, centroids, id_col, vec_col, dim, nprobe)
     # centroid term: one exact dot per (query, probed cell)
     qcent = _quantized_cent(centroids, scale, centroids_prequantized)
     cterm = (
-        queries.select(F.col(id_col).alias("query_id"), qv.alias("_q"))
+        queries.select(F.col(id_col).alias("query_id"), _quantized(vec_col, scale).alias("_q"))
         .join(qcells, "query_id")
         .join(F.broadcast(qcent), "_cell")
-        .select(
-            "query_id",
-            "_cell",
-            F.aggregate(
-                F.zip_with("_q", "_qc", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("_ct"),
-        )
+        .select("query_id", "_cell", _kernel("dot", dim, "_q", "_qc").alias("_ct"))
     )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.explode(_sub_structs(qv, m, dim)).alias("_s")
-    ).select("query_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("qsv"))
-    lut = (
-        qs.join(codebooks, "sub")
-        .select("query_id", "sub", "code", _int_dot("qsv", "cv", sub_len).alias("_pd"))
-        .join(qcells, "query_id")  # replicate the LUT per probed cell
-    )
+    # replicate the LUT per probed cell
+    lut = _query_lut(queries, codebooks, id_col, vec_col, m, dim, scale).join(qcells, "query_id")
     scored = (
         index.join(F.broadcast(lut), ["_cell", "sub", "code"])
         .filter(F.col("query_id") != F.col(id_col))
@@ -584,19 +503,11 @@ def ivfadc_topk(
         .agg(F.sum("_pd").alias("_r"))
     )
     total = scored.join(F.broadcast(cterm), ["query_id", "_cell"]).select(
-        "query_id", id_col, (F.col("_r") + F.col("_ct")).alias("adc_dot")
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        (F.col("_r") + F.col("_ct")).alias("adc_dot"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("adc_dot").desc(), F.col(id_col).asc())
-    return (
-        total.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            F.col("adc_dot").cast("long").alias("adc_dot"),
-        )
-    )
+    return _rank_topk(total, k, "adc_dot", F.col("adc_dot").cast("long").alias("adc_dot"))
 
 
 # ---------------------------------------------------------------------------
@@ -691,19 +602,7 @@ def sq8_topk(
     scored = (
         codes.join(F.broadcast(qw), "i")
         .filter(F.col("query_id") != F.col(id_col))
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
         .agg(F.sum(F.col("w") * F.col("code") + F.col("cterm")).alias("sq_score"))
     )
-    win = W.partitionBy("query_id").orderBy(
-        F.col("sq_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "rank",
-            F.col("sq_score").cast("long").alias("sq_score"),
-        )
-    )
+    return _rank_topk(scored, k, "sq_score", F.col("sq_score").cast("long").alias("sq_score"))

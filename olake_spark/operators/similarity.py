@@ -3,8 +3,8 @@
 Two plans, one semantics:
 
 - ``brute_force_topk`` — the exactness baseline: broadcast the (small) query
-  set against the corpus, JVM-native dot products via
-  ``aggregate(zip_with(...))``, per-query top-k window. Cost O(|Q|·|C|·d);
+  set against the corpus, codegen'd dot products, per-query top-k window.
+  Cost O(|Q|·|C|·d);
   right when |Q| is small (the common "probe" pattern) because the corpus is
   scanned once with no shuffle — at 100 TB the corpus never moves, only the
   broadcast queries do.
@@ -24,6 +24,11 @@ Two plans, one semantics:
 Everything is double-precision with sequential fold order so DuckDB
 (list_dot_product / list_cosine_similarity) reproduces values to ~1e-15;
 compared outputs are rounded to 6 decimals.
+
+One kernel (``_kernel``: the unrolled dot / sqdist / norm chain) builds
+every fixed-width vector score here and in ``pq``, and one tail
+(``_rank_topk``) ranks every per-query top-k; the indexes differ only in
+which pairs they score.
 """
 
 from __future__ import annotations
@@ -90,58 +95,85 @@ def lsh_planes(
 LSH_PLANES: list[list[int]] = lsh_planes(1)[0]
 
 
-def _dot_terms(a: str, b: str, dim: int) -> str:
-    return " + ".join(
-        f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)" for i in range(dim)
+def _quantized(vec_col: str, scale: int) -> Column:
+    """``floor(x * scale)`` per component as integer-valued doubles — the
+    exact-integer discipline of the quantized trainer and the PQ family."""
+    return F.transform(
+        F.col(vec_col).cast("array<double>"),
+        lambda x: F.floor(x * F.lit(float(scale))).cast("double"),
     )
 
 
-def _dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Sequential-fold dot product: ``((0.0 + a0*b0) + a1*b1) + ...``.
+def _item(v: str | list, i: int) -> str:
+    # a name (any SQL array expression) is indexed; a Python vector (an LSH
+    # plane) is inlined element-wise as double literals — the same folded
+    # constant ``array(...)[i]`` would reduce to, without the array
+    if isinstance(v, str):
+        return f"CAST({v}[{i}] AS DOUBLE)"
+    return f"({float(v[i])!r}D)"
 
-    With ``dim`` known (the common case — embedding width is fixed by the
-    table schema) the fold is unrolled into a left-associated add chain of
-    plain ``getItem``/multiply nodes: bit-identical values (same IEEE op
-    order as the ``aggregate`` fold and the DuckDB oracle's sequential
-    accumulation) but whole-stage-codegen'd instead of interpreted per
-    element — higher-order lambda functions never enter codegen, which made
-    this the hot spot of every similarity operator. Pass column NAMES (not
-    Columns) to build the chain as one parsed ``expr`` — constructing 64
-    getItem nodes through the Python Column API costs a py4j round-trip per
-    node and dominated query *planning* time. ``dim=None`` keeps the lambda
-    fold for arrays of unknown width.
+
+def _kernel(op: str, dim: int, a: str | list, b: str | list | None = None) -> Column:
+    """The one vector-scoring kernel: ``dot``, ``sqdist`` or ``norm`` of
+    width-``dim`` operands as ONE parsed expression, the unrolled
+    left-associated chain ``((0.0 + t0) + t1) + ...``.
+
+    Bit-identical to the sequential ``aggregate`` fold and to the DuckDB
+    oracle's accumulation (same IEEE op order; PQ scores are exact
+    integers anyway), but whole-stage-codegen'd instead of interpreted per
+    element — higher-order lambda functions never enter codegen. One
+    ``F.expr`` parse replaces ``dim`` py4j round-trips per Column node,
+    which dominated query planning when the chains were built node by node.
     """
+    def term(i: int) -> str:
+        x = _item(a, i)
+        if op == "norm":
+            return f"{x} * {x}"
+        y = _item(b, i)
+        if op == "dot":
+            return f"{x} * {y}"
+        d = f"({x} - {y})"  # sqdist
+        return f"{d} * {d}"
+
+    chain = " + ".join(["0.0D", *(term(i) for i in range(dim))])
+    return F.expr(f"SQRT({chain})" if op == "norm" else chain)
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str, out: Column) -> DataFrame:
+    """The one per-query ranking tail: ``row_number`` over ``query_id``
+    ordered by ``score`` desc then ``neighbor_id`` asc, keep ``rank <= k``,
+    project ``(query_id, neighbor_id, rank, out)``."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", out)
+    )
+
+
+def _dot(a: str, b: str, dim: int | None = None) -> Column:
+    """Sequential-fold dot product ``((0.0 + a0*b0) + a1*b1) + ...`` of two
+    array columns by name: the kernel chain when ``dim`` is known (embedding
+    width is fixed by the table schema), else the lambda fold — the only
+    form for arrays of unknown width."""
     if dim is None:
-        assert not isinstance(a, str) and not isinstance(b, str)
         return F.aggregate(
             F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(f"0.0D + {_dot_terms(a, b, dim)}")
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + a[i].cast("double") * b[i].cast("double")
-    return acc
+    return _kernel("dot", dim, a, b)
 
 
-def _norm(a: Column | str, dim: int | None = None) -> Column:
+def _norm(a: str, dim: int | None = None) -> Column:
     if dim is None:
-        assert not isinstance(a, str)
         return F.sqrt(
             F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
         )
-    if isinstance(a, str):
-        return F.expr(f"SQRT(0.0D + {_dot_terms(a, a, dim)})")
-    acc = F.lit(0.0)
-    for i in range(dim):
-        x = a[i].cast("double")
-        acc = acc + x * x
-    return F.sqrt(acc)
+    return _kernel("norm", dim, a)
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def cosine(a: str, b: str, dim: int | None = None) -> Column:
     return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))
 
 
@@ -188,30 +220,22 @@ def brute_force_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim)
     )
-    w = W.partitionBy("query_id").orderBy(F.col("_sim9").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("_sim9"), 6).alias("cosine_sim"),
-        )
-    )
+    return _rank_topk(scored, k, "_sim9", F.round("_sim9", 6).alias("cosine_sim"))
 
 
-def lsh_signature(vec: Column, planes: list[list[int]] | None = None) -> Column:
-    """Bucket id = integer of sign bits of the ±1-plane dot products.
+def lsh_signature(vec: str, planes: list[list[int]] | None = None) -> Column:
+    """Bucket id = integer of sign bits of the ±1-plane dot products of the
+    column ``vec``.
 
-    This is the *definitional* (pure-Column) form, mirrored verbatim by the
-    SQL oracle; ``lsh_sigs_arrow`` below is the vectorized production form.
+    This is the *definitional* form, mirrored verbatim by the SQL oracle;
+    ``lsh_sigs_arrow`` below is the vectorized production form and is
+    tested against it.
     """
     planes = planes if planes is not None else LSH_PLANES
     sig = F.lit(0)
     for j, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(w)) for w in plane])
-        sig = sig + F.when(_dot(vec, arr, len(plane)) > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        dot = _kernel("dot", len(plane), vec, plane)
+        sig = sig + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
     return sig.cast("int")
 
 
@@ -244,7 +268,7 @@ def lsh_sigs_arrow(tables: list[list[list[int]]]):
     return sigs
 
 
-def lsh_bands(vec: Column, tables: list[list[list[int]]]) -> Column:
+def lsh_bands(vec: str, tables: list[list[list[int]]]) -> Column:
     """Array of (band, sig) structs — one per LSH table — for one explode.
 
     All L signatures are computed in a single projection pass over the
@@ -267,15 +291,12 @@ def banded_relation(
     tables: list[list[list[int]]],
     out_id: str,
     out_vec: str,
-    arrow: bool = True,
     norm_col: str | None = None,
 ) -> DataFrame:
     """(id, vec[, norm], band, sig) — one row per LSH table per vector.
 
-    ``arrow=True`` computes all L signatures with one batched matmul
-    (``lsh_sigs_arrow``); ``arrow=False`` keeps the pure-Column definitional
-    form. Either way the vector is read once and only the narrow banded
-    relation is exploded.
+    All L signatures come from one batched matmul (``lsh_sigs_arrow``): the
+    vector is read once and only the narrow banded relation is exploded.
 
     ``norm_col`` materializes the vector's L2 norm alongside — norms are a
     per-VECTOR quantity, so computing them here (once, pre-join) instead of
@@ -286,20 +307,12 @@ def banded_relation(
     interpreted evaluation for the entire stage."""
     dim = len(tables[0][0])
     extra = [_norm(vec_col, dim).alias(norm_col)] if norm_col else []
-    if arrow:
-        sigs = lsh_sigs_arrow(tables)
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(vec_col).alias(out_vec),
-            *extra,
-            F.posexplode(sigs(F.col(vec_col))).alias("band", "sig"),
-        )
     return df.select(
         F.col(id_col).alias(out_id),
         F.col(vec_col).alias(out_vec),
         *extra,
-        F.explode(lsh_bands(F.col(vec_col), tables)).alias("_b"),
-    ).select(out_id, out_vec, *([norm_col] if norm_col else []), "_b.band", "_b.sig")
+        F.posexplode(lsh_sigs_arrow(tables)(F.col(vec_col))).alias("band", "sig"),
+    )
 
 
 def lsh_build_index(
@@ -308,7 +321,6 @@ def lsh_build_index(
     vec_col: str = "embedding",
     n_tables: int = _NUM_TABLES,
     n_planes: int = _NUM_PLANES,
-    arrow: bool = True,
 ) -> DataFrame:
     """Materialize the banded LSH relation: ``(id, vec, _norm, band, sig)``,
     one row per table per vector.
@@ -326,7 +338,7 @@ def lsh_build_index(
     tables = lsh_planes(n_tables, n_planes)
     return (
         banded_relation(
-            spread(corpus, id_col), id_col, vec_col, tables, id_col, vec_col, arrow,
+            spread(corpus, id_col), id_col, vec_col, tables, id_col, vec_col,
             norm_col="_norm",
         )
         .withColumns(
@@ -400,7 +412,6 @@ def lsh_bucket_topk(
     n_tables: int = _NUM_TABLES,
     n_planes: int = _NUM_PLANES,
     dim: int = _DIM,
-    arrow: bool = True,
     index: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: search the union of the query's buckets across L
@@ -432,12 +443,10 @@ def lsh_bucket_topk(
         if corpus is None:
             raise ValueError("need corpus or a precomputed index")
         c = banded_relation(
-            spread(corpus, id_col), id_col, vec_col, tables, "neighbor_id", "_cv", arrow,
+            spread(corpus, id_col), id_col, vec_col, tables, "neighbor_id", "_cv",
             norm_col="_cn",
         )
-    q = banded_relation(
-        queries, id_col, vec_col, tables, "query_id", "_qv", arrow, norm_col="_qn"
-    )
+    q = banded_relation(queries, id_col, vec_col, tables, "query_id", "_qv", norm_col="_qn")
     sim = F.round(cosine_prenormed("_qv", "_cv", "_qn", "_cn", dim), 9).alias("_sim9")
     # multi-table collision dedup as groupBy+min, NOT distinct: every
     # collision of a pair scores to the same rounded value so min == the
@@ -452,14 +461,7 @@ def lsh_bucket_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.min("_sim9").alias("_sim9"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("_sim9").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round(F.col("_sim9"), 6).alias("cosine_sim")
-        )
-    )
+    return _rank_topk(scored, k, "_sim9", F.round("_sim9", 6).alias("cosine_sim"))
 
 
 def ivf_assign(
@@ -609,14 +611,7 @@ def ivf_topk(
     )
     # no dedup needed even at nprobe>1: each corpus vector lives in exactly
     # one cell, so a (query, neighbor) pair joins at most once
-    w = W.partitionBy("query_id").orderBy(F.col("_sim9").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round(F.col("_sim9"), 6).alias("cosine_sim")
-        )
-    )
+    return _rank_topk(scored, k, "_sim9", F.round("_sim9", 6).alias("cosine_sim"))
 
 
 def ivf_exact_topk(
@@ -758,19 +753,7 @@ def ivf_exact_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("_sim9").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("_sim9"), 6).alias("cosine_sim"),
-        )
-    )
+    return _rank_topk(scored, k, "_sim9", F.round("_sim9", 6).alias("cosine_sim"))
 
 
 def ivf_train_centroids(
@@ -810,12 +793,7 @@ def ivf_train_centroids(
     fine to ~1e4-row cells; at larger cells lower the scale.
     """
     q = quantize_scale is not None
-    raw = F.col(vec_col).cast("array<double>")
-    qv = (
-        F.transform(raw, lambda x: F.floor(x * F.lit(float(quantize_scale))).cast("double"))
-        if q
-        else raw
-    )
+    qv = _quantized(vec_col, quantize_scale) if q else F.col(vec_col).cast("array<double>")
     first_k = corpus.orderBy(F.col(id_col)).limit(k)
     cents = first_k.select(
         F.col(id_col).alias("_cent_id"), qv.alias("_cent_v")
@@ -862,7 +840,6 @@ def cosine_near_dup_pairs(
     n_planes: int = _NUM_PLANES,
     max_bucket_size: int | None = None,
     dim: int = _DIM,
-    arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs with cosine ≥ threshold.
 
@@ -880,7 +857,7 @@ def cosine_near_dup_pairs(
     # cache the banded relation: it feeds both self-join sides — without the
     # cache every hyperplane signature runs twice
     t = banded_relation(
-        spread(df, id_col), id_col, vec_col, tables, "_id", "_v", arrow, norm_col="_n"
+        spread(df, id_col), id_col, vec_col, tables, "_id", "_v", norm_col="_n"
     )
     t = cap_buckets(t, ["band", "sig"], max_bucket_size).cache()
     a, b = t.alias("a"), t.alias("b")

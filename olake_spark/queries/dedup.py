@@ -1107,7 +1107,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(F.col("scale") * 127.0 * 10000).cast("bigint").alias("maxabs_e4"),
         F.to_json(F.col("q")).alias("q_json"),
-        F.round(_norm(F.col("embedding")) * 10000).cast("bigint").alias("l2_e4"),
+        F.round(_norm("embedding") * 10000).cast("bigint").alias("l2_e4"),
     )
 
 

@@ -67,6 +67,16 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
+@pytest.fixture()
+def no_codegen_fallback(spark):
+    """Fail hard if any stage's generated Java exceeds the 64 KB method
+    limit instead of silently running interpreted."""
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    yield
+    spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
 @pytest.hookimpl(trylast=True)
 def pytest_collection_modifyitems(session, config, items):
     """Overlap the registry-tail gate with the rest of the suite: its 10

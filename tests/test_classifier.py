@@ -56,16 +56,6 @@ def test_empty_weights_rejected(spark):
         hashed_bow_logits(df, "doc_id", "text", [])
 
 
-@pytest.fixture()
-def no_codegen_fallback(spark):
-    """Fail hard if any stage's generated Java exceeds the 64 KB method
-    limit instead of silently running interpreted."""
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    yield
-    spark.conf.set("spark.sql.codegen.fallback", prev)
-
-
 def test_broadcast_weight_path_at_65k_buckets(spark, no_codegen_fallback):
     """B=65,536 takes the broadcast-join path (an F.array literal that size
     is ~65k expression nodes — Janino/constant-pool blowup); with codegen

@@ -233,11 +233,11 @@ def test_lsh_bucket_count_grows_with_planes(spark):
         tables_coarse = sim.lsh_planes(1, 6)
         tables_fine = sim.lsh_planes(1, 12)
         n_coarse = (
-            emb.select(F.explode(sim.lsh_bands(F.col("embedding"), tables_coarse)).alias("b"))
+            emb.select(F.explode(sim.lsh_bands("embedding", tables_coarse)).alias("b"))
             .select("b.sig").distinct().count()
         )
         n_fine = (
-            emb.select(F.explode(sim.lsh_bands(F.col("embedding"), tables_fine)).alias("b"))
+            emb.select(F.explode(sim.lsh_bands("embedding", tables_fine)).alias("b"))
             .select("b.sig").distinct().count()
         )
     finally:

@@ -89,6 +89,45 @@ def test_adc_dot_is_exact_reconstructed_dot(spark, emb):
     codes.unpersist()
 
 
+def test_m_not_dividing_dim_raises(spark, emb):
+    """m=3 over 64 dims would encode 3 slices of 21 and silently drop the
+    64th component; every PQ entry point refuses instead."""
+    with pytest.raises(ValueError, match="not divisible"):
+        pq.pq_stride_codebooks(emb, m=3)
+    with pytest.raises(ValueError, match="not divisible"):
+        pq.pq_train_codebooks(emb, m=3)
+    cb = pq.pq_stride_codebooks(emb)
+    with pytest.raises(ValueError, match="not divisible"):
+        pq.pq_encode(emb, cb, m=3)
+    with pytest.raises(ValueError, match="not divisible"):
+        pq.pq_topk(emb.limit(1), pq.pq_encode(emb, cb), cb, m=3)
+
+
+def test_pq_family_scoring_stays_in_codegen(spark, emb, no_codegen_fallback):
+    """Every PQ-family scorer runs with codegen fallback disabled, so a
+    stage pushed out of whole-stage codegen (the 64 KB method limit)
+    throws instead of silently running interpreted. Small inputs: the
+    pin is about the generated code, not the data size. IVFADC's
+    centroid term is an unrolled 64-term dot inside codegen."""
+    from olake_spark.operators.similarity import stride_centroids
+
+    sub = emb.filter(F.col("vec_id") < 200)
+    q = sub.filter(F.col("vec_id") < 2)
+    cents = stride_centroids(sub)
+    cb = pq.pq_stride_codebooks(sub)
+    codes = pq.pq_encode(sub, cb)
+    cand = pq.pq_topk(q, codes, cb, k=6)
+    assert cand.count() > 0
+    assert pq.pq_refine(cand, sub, q, k=3).count() > 0
+    assert pq.ivfpq_topk(q, pq.ivfpq_index(sub, cents, cb), cb, cents, k=5).count() > 0
+    res = pq.ivf_residuals(sub, cents)
+    rcb = pq.pq_stride_codebooks(res, vec_col="rv", scale=1)
+    ridx = pq.pq_encode(res, rcb, vec_col="rv", scale=1, carry_cols=["_cell"])
+    assert pq.ivfadc_topk(q, ridx, rcb, cents, k=5, nprobe=2).count() > 0
+    stats = pq.sq8_stats(sub)
+    assert pq.sq8_topk(q, pq.sq8_encode(sub, stats), stats, k=5).count() > 0
+
+
 def test_trained_codebooks_reduce_quantization_error(spark, emb):
     """Trained (L2 k-means) codebooks must beat the stride codebooks on
     total squared reconstruction error — the objective k-means descends —
@@ -120,14 +159,11 @@ def test_trained_codebooks_reduce_quantization_error(spark, emb):
 
     def total_err(cb) -> float:
         codes = pq.pq_encode(emb, cb)
-        sub_len = pq._DIM // pq._M
         qv = pq._quantized("embedding", pq._SCALE)
-        vs = emb.select(
-            F.col("vec_id"), F.explode(pq._sub_structs(qv, pq._M, pq._DIM)).alias("_s")
-        ).select("vec_id", F.col("_s.sub").alias("sub"), F.col("_s.sv").alias("sv"))
+        vs = pq._subvectors(emb, ["vec_id"], qv, pq._M, pq._DIM)
         joined = vs.join(codes, ["vec_id", "sub"]).join(cb, ["sub", "code"])
         return joined.agg(
-            F.sum(pq._int_sqdist("sv", "cv", sub_len))
+            F.sum(pq._kernel("sqdist", pq._DIM // pq._M, "sv", "cv"))
         ).first()[0]
 
     assert total_err(trained_cb) < total_err(stride_cb)

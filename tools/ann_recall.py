@@ -379,7 +379,7 @@ def main() -> None:
     mean_cos = (
         base.alias("o")
         .join(planted.alias("p"), F.col("o.vec_id") == F.col("p.vec_id") - F.lit(1_000_000))
-        .select(sim.cosine(F.col("o.embedding"), F.col("p.embedding"), 64).alias("c"))
+        .select(sim.cosine("o.embedding", "p.embedding", 64).alias("c"))
         .agg(F.round(F.avg("c"), 4))
         .first()[0]
     )

@@ -1192,7 +1192,7 @@ def main() -> None:
         n_rows = emb.count()
         emb_tables = lsh_planes(4, planes_for(n_rows))
         t = banded_relation(
-            spread(emb, "vec_id"), "vec_id", "embedding", emb_tables, "_id", "_v", True
+            spread(emb, "vec_id"), "vec_id", "embedding", emb_tables, "_id", "_v"
         ).cache()
         uncapped, max_b = candidate_pairs(t, ["band", "sig"])
         capped, _ = candidate_pairs(cap_buckets(t, ["band", "sig"], args.cap), ["band", "sig"])
