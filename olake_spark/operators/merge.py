@@ -43,11 +43,6 @@ def not_deleted(op_col: str = OP_TYPE) -> Column:
     return F.coalesce(F.col(op_col) != OP_DELETE, F.lit(True))
 
 
-def _rank_latest(df: DataFrame, key_cols: list[str], order_by: list[Column]) -> DataFrame:
-    w = W.partitionBy(*key_cols).orderBy(*order_by)
-    return df.withColumn(_RN, F.row_number().over(w))
-
-
 def latest_state(
     changelog: DataFrame,
     key_cols: list[str],
@@ -61,8 +56,8 @@ def latest_state(
     token position / (cursor, tiebreak)). Deletes evict the key unless
     ``keep_tombstones`` (needed when the result is itself merged downstream).
     """
-    order_by = [F.col(c).desc() for c in order_cols]
-    out = _rank_latest(changelog, key_cols, order_by).filter(F.col(_RN) == 1).drop(_RN)
+    w = W.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
+    out = changelog.withColumn(_RN, F.row_number().over(w)).filter(F.col(_RN) == 1).drop(_RN)
     if not keep_tombstones:
         out = out.filter(not_deleted(op_col))
     return out
@@ -83,21 +78,14 @@ def merge_upsert(
     - multiple ops for one key within the batch → newest (by order_cols) wins
     - target rows never carry op ``d`` (deletes are applied, not stored)
 
-    Implementation: collapse the batch (tombstones kept), union with the
-    target, rank by (source-precedence, change order) per key, keep rank 1,
-    drop tombstones. One shuffle; idempotent under replay of the same batch.
+    Implementation: ``latest_state`` over target ∪ batch with the source
+    (batch beats target) as the leading order column. One shuffle;
+    idempotent under replay of the same batch.
     """
-    collapsed = latest_state(batch, key_cols, order_cols, op_col, keep_tombstones=True)
-    t = target.withColumn(_SRC, F.lit(0))
-    b = collapsed.withColumn(_SRC, F.lit(1))
-    combined = t.unionByName(b, allowMissingColumns=True)
-    order_by = [F.col(_SRC).desc()] + [F.col(c).desc() for c in order_cols]
-    return (
-        _rank_latest(combined, key_cols, order_by)
-        .filter(F.col(_RN) == 1)
-        .filter(not_deleted(op_col))
-        .drop(_RN, _SRC)
+    combined = target.withColumn(_SRC, F.lit(0)).unionByName(
+        batch.withColumn(_SRC, F.lit(1)), allowMissingColumns=True
     )
+    return latest_state(combined, key_cols, [_SRC, *order_cols], op_col).drop(_SRC)
 
 
 def apply_changelog(

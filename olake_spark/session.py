@@ -22,6 +22,13 @@ from pyspark.sql import SparkSession
 __all__ = ["get_spark", "stop_spark"]
 
 
+def _default_driver_mem() -> str:
+    """48g, or half of physical memory on a smaller host: a driver heap
+    larger than the host lets one session grow until the kernel kills it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "olake_spark",
     master: str | None = None,
@@ -65,7 +72,7 @@ def get_spark(
         # default in every run
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", os.environ.get("OLAKE_SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("OLAKE_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("OLAKE_DRIVER_MEM", _default_driver_mem()))
         # InferFiltersFromGenerate duplicates the generator's input
         # expression into a `size(e) > 0` pre-filter that predicate
         # pushdown then sinks below repartitions — for our decode

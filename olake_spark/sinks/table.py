@@ -11,11 +11,17 @@ miniature snapshot log with the same commit semantics:
 
 - table dir = ``data/<uuid>/part-*.parquet`` + ``_commits/v<N>.json``
 - a manifest lists the live data files, the table schema, and a free-form
-  ``properties`` map (the 2PC state: last applied LSN/cursor lives here)
+  ``properties`` map (the 2PC state: last applied LSN/cursor lives here);
+  a table written by more than one write also lists its file ``groups``,
+  each under the schema it was written with (a manifest without ``groups``
+  is one group of its files and schema)
 - commit = write data files, then **atomically link** the next manifest
   version; data + state land in one atomic filesystem op
-- optimistic concurrency: two writers racing to ``v<N>`` — one link wins,
-  the loser retries on a fresh read
+- optimistic concurrency: a write reads the head manifest once, builds the
+  next one on it and links exactly ``v<head+1>``, or raises
+  ``CommitConflict`` when another writer linked that version first. Nothing
+  retries inside the table: ``plans.chunk_runner`` re-drives a failed chunk
+  whole, and replay's LSN guard makes re-running a batch safe
 
 On a real cluster with Iceberg on the classpath, ``sinks.iceberg`` replaces
 this with ``writeTo(...).append()`` / ``MERGE INTO`` + snapshot properties —
@@ -44,6 +50,7 @@ table that only ``upsert_mor`` has written has one.
 
 from __future__ import annotations
 
+import copy
 import functools
 import json
 import os
@@ -55,7 +62,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from olake_spark.operators.merge import merge_upsert
+from olake_spark.operators.merge import latest_state, merge_upsert, not_deleted
 from olake_spark.typesys.lattice import merge_spark_schemas
 
 __all__ = [
@@ -115,18 +122,24 @@ class CommitConflict(RuntimeError):
     """Another writer committed the same version first."""
 
 
-def _align(df: DataFrame, target: T.StructType, *extra: Column) -> DataFrame:
-    """Project df onto the target schema (then ``extra``): cast matching
-    columns, null-fill missing ones. Pure column expressions — no shuffle,
-    no Python."""
-    have = {f.name for f in df.schema.fields}
-    return df.select(
-        *[
-            (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in target.fields
-        ],
-        *extra,
-    )
+def _align(
+    df: DataFrame, source: T.StructType, target: T.StructType, *extra: Column
+) -> DataFrame:
+    """Project df, whose schema is ``source``, onto the target schema (then
+    ``extra``): keep the columns whose type already matches (nullability
+    aside), cast the others, null-fill missing ones. Pure column
+    expressions — no shuffle, no Python. A frame that already matches is
+    returned as is: on the read path even a no-op projection, or asking
+    the JVM for ``df.schema``, costs the driver measurable CPU per read."""
+    have = {f.name: _loose(f.dataType) for f in source.fields}
+    keep = [have.get(f.name) == _loose(f.dataType) for f in target.fields]
+    if all(keep) and not extra and source.fieldNames() == target.fieldNames():
+        return df
+    cols = []
+    for f, k in zip(target.fields, keep):
+        src = F.col(f.name) if f.name in have else F.lit(None)
+        cols.append(src if k else src.cast(_loose(f.dataType)).alias(f.name))
+    return df.select(*cols, *extra)
 
 
 def _loose(dt: T.DataType) -> T.DataType:
@@ -141,16 +154,25 @@ def _loose(dt: T.DataType) -> T.DataType:
     return dt
 
 
+def _groups(m: dict) -> list[dict]:
+    """A manifest's file groups, oldest first. A manifest without ``groups``
+    is one group of its files and schema."""
+    if m.get("groups"):
+        return m["groups"]
+    return [{"files": m["files"], "schema": m["schema"]}] if m["files"] else []
+
+
 class ManagedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
         self._commits = os.path.join(self.path, "_commits")
+        self._pinned: dict | None = None  # the head a pinned copy builds on
 
     # -- manifest plumbing ---------------------------------------------------
 
     def exists(self) -> bool:
-        return os.path.isdir(self._commits) and bool(self._versions())
+        return bool(self._versions())
 
     def _versions(self) -> list[int]:
         if not os.path.isdir(self._commits):
@@ -161,44 +183,60 @@ class ManagedTable:
                 out.append(int(f[1:-5]))
         return sorted(out)
 
-    def _manifest(self, version: int | None = None) -> dict:
+    def _head(self) -> dict:
+        """The manifest a write builds on: the pinned one, else the newest,
+        read once (``version`` -1 before the first commit)."""
+        if self._pinned is not None:
+            return self._pinned
         vs = self._versions()
-        if not vs:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        v = version if version is not None else vs[-1]
-        with open(os.path.join(self._commits, f"v{v:012d}.json")) as fh:
+        return self._manifest(vs[-1]) if vs else {"version": -1, "files": [], "properties": {}}
+
+    def _pin(self) -> ManagedTable:
+        """This table pinned to its head: reads default to that version and
+        writes commit on it. A write that reads the table before it writes
+        (upsert, upsert_mor, compact) runs on a pinned copy, so what it read
+        is what it commits on."""
+        pinned = copy.copy(self)
+        pinned._pinned = self._head()
+        return pinned
+
+    def _manifest(self, version: int | None = None) -> dict:
+        """The manifest of ``version`` (default: the head)."""
+        if version is None:
+            m = self._head()
+            if m["version"] < 0:
+                raise FileNotFoundError(f"no commits at {self.path}")
+            return m
+        with open(os.path.join(self._commits, f"v{version:012d}.json")) as fh:
             return json.load(fh)
 
     def _commit(
-        self,
-        files: list[str],
-        schema_json: str,
-        properties: dict,
-        groups: list[dict] | None = None,
+        self, head: dict, groups: list[dict], schema: T.StructType, properties: dict
     ) -> int:
-        """Atomically publish the next manifest version (data + state in one op)."""
-        os.makedirs(self._commits, exist_ok=True)
-        vs = self._versions()
-        next_v = (vs[-1] + 1) if vs else 0
+        """Atomically publish ``v{head + 1}`` — ``head``'s properties updated
+        with ``properties``, data + state in one op — or raise
+        ``CommitConflict`` if another writer linked that version first."""
+        version = head["version"] + 1
         manifest = {
-            "version": next_v,
-            "files": files,
-            "schema": schema_json,
-            "properties": properties,
+            "version": version,
+            "files": [f for g in groups for f in g["files"]],
+            "schema": json.dumps(schema.jsonValue()),
+            "properties": {**head["properties"], **properties},
         }
-        if groups is not None:
+        if len(groups) > 1 or any(g.get("delta") for g in groups):
             manifest["groups"] = groups
+        os.makedirs(self._commits, exist_ok=True)
         tmp = os.path.join(self._commits, f".tmp-{uuid.uuid4().hex}.json")
-        final = os.path.join(self._commits, f"v{next_v:012d}.json")
+        final = os.path.join(self._commits, f"v{version:012d}.json")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         try:
             os.link(tmp, final)  # atomic; fails if a racer already committed
         except FileExistsError as e:
-            raise CommitConflict(f"version {next_v} already committed") from e
+            raise CommitConflict(f"version {version} already committed") from e
         finally:
             os.unlink(tmp)
-        return next_v
+        return version
 
     def _write_data(self, df: DataFrame) -> tuple[str, list[str]]:
         d = os.path.join(self.path, "data", uuid.uuid4().hex)
@@ -209,21 +247,27 @@ class ManagedTable:
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         ]
 
-    @staticmethod
-    def _post_write_props(
-        data_dir: str,
+    def _write(
+        self,
+        head: dict,
+        groups: list[dict],
+        df: DataFrame,
+        schema: T.StructType,
         properties: dict | None,
         properties_fn,
-    ) -> dict | None:
-        """Resolve commit properties after the write action has run.
+        delta: bool = False,
+    ) -> int | None:
+        """Write ``df`` as a new file group after ``groups`` and commit on
+        ``head``.
 
-        ``properties_fn`` lets callers derive state from observation metrics
-        collected *during* the write (one data pass instead of a separate
-        aggregation job — the same trick the reference plays by tracking the
-        running max cursor in the scan loop, drivers/abstract/incremental.go:
-        182-192). Returning ``None`` aborts: the freshly-written files are
-        removed and no manifest version is published.
+        ``properties_fn`` runs after the write action, so callers can derive
+        state from observation metrics collected *during* the write (one data
+        pass instead of a separate aggregation job — the same trick the
+        reference plays by tracking the running max cursor in the scan loop,
+        drivers/abstract/incremental.go:182-192). Returning ``None`` aborts:
+        the freshly-written files are removed and no version is published.
         """
+        data_dir, files = self._write_data(df)
         props = dict(properties or {})
         if properties_fn is not None:
             extra = properties_fn()
@@ -231,7 +275,10 @@ class ManagedTable:
                 shutil.rmtree(data_dir, ignore_errors=True)
                 return None
             props.update(extra)
-        return props
+        group = {"files": files, "schema": json.dumps(df.schema.jsonValue())}
+        if delta:
+            group["delta"] = True
+        return self._commit(head, groups + [group], schema, props)
 
     # -- public API ----------------------------------------------------------
 
@@ -250,24 +297,22 @@ class ManagedTable:
         Compaction rewrites files but commits a NEW version, so prior
         snapshots stay readable until a retention sweep removes them.
 
-        A table with file groups is read with one parquet scan per distinct
-        group schema (names and types; nullability ignored), not one per
-        group. A merge-on-read table tags each row with its group's commit
-        seq through a basename→seq map on ``_metadata.file_name``, then
-        keeps the newest row per key with one window.
+        The file groups are read with one parquet scan per distinct group
+        schema (names and types; nullability ignored), not one per group. A
+        merge-on-read table tags each row with its group's commit seq
+        through a basename→seq map on ``_metadata.file_name``, then keeps
+        the newest row per key with one window.
         """
         m = self._manifest(version)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        if not m["files"]:
-            return self.spark.createDataFrame([], schema)
-        groups = m.get("groups")
+        groups = _groups(m)
         if not groups:
-            return self.spark.read.schema(schema).parquet(*m["files"])
-        # evolved or merge-on-read table: each file group was written under
-        # its own schema. The groups that share one are read by a single
-        # scan, aligned once to the table schema with column-level casts
-        # (the Iceberg int→long/float→double read-time promotion,
-        # iceberg.go:42-57); distinct schemas union. No driver-side work.
+            return self.spark.createDataFrame([], schema)
+        # each file group was written under its own schema. The groups that
+        # share one are read by a single scan, aligned once to the table
+        # schema with column-level casts (the Iceberg int→long/float→double
+        # read-time promotion, iceberg.go:42-57); distinct schemas union.
+        # No driver-side work.
         has_delta = any(g.get("delta") for g in groups)
         scans: dict[str, tuple[T.StructType, list[str]]] = {}
         seq_of: dict[str, int] = {}
@@ -286,34 +331,18 @@ class ManagedTable:
                 # metadataColumn: a data column named _metadata cannot shadow it
                 name = gdf.metadataColumn("_metadata").getField("file_name")
                 extra.append(seq_map[name].alias("_mor_seq"))
-            parts.append(_align(gdf, schema, *extra))
+            parts.append(_align(gdf, gschema, schema, *extra))
         out = functools.reduce(DataFrame.unionByName, parts)
         if not has_delta:
             return out
         # MOR resolve: newest (commit seq, change order) per key wins, then
-        # tombstones drop — one window shuffle over base ∪ deltas, the same
-        # plan `merge_upsert` runs, but deferred to read time
-        props = m.get("properties", {})
-        keys = json.loads(props[MOR_KEYS_PROP])
-        order = json.loads(props[MOR_ORDER_PROP])
-        from pyspark.sql import Window as W
-
-        from olake_spark.operators.merge import not_deleted
-
-        w = W.partitionBy(*keys).orderBy(
-            F.col("_mor_seq").desc(), *[F.col(c).desc() for c in order]
-        )
-        return (
-            out.withColumn("_mor_rn", F.row_number().over(w))
-            .filter(F.col("_mor_rn") == 1)
-            .filter(not_deleted())
-            .drop("_mor_rn", "_mor_seq")
-        )
+        # tombstones drop — the plan `merge_upsert` runs, deferred to read time
+        props = m["properties"]
+        order = ["_mor_seq", *json.loads(props[MOR_ORDER_PROP])]
+        return latest_state(out, json.loads(props[MOR_KEYS_PROP]), order).drop("_mor_seq")
 
     def properties(self) -> dict:
-        if not self.exists():
-            return {}
-        return dict(self._manifest().get("properties", {}))
+        return dict(self._head()["properties"])
 
     def append(
         self,
@@ -329,51 +358,19 @@ class ManagedTable:
         irreconcilable type conflicts fall back through the LCA lattice to
         string. Prior file groups keep their written schema; reads align.
         """
-        prev_files: list[str] = []
-        prev_props: dict = {}
-        prev_groups: list[dict] | None = None
+        head = self._head()
         schema = df.schema
-        if self.exists():
-            m = self._manifest()
-            prev_files = m["files"]
-            prev_props = m.get("properties", {})
-            old = T.StructType.fromJson(json.loads(m["schema"]))
-            prev_groups = m.get("groups") or (
-                [{"files": prev_files, "schema": m["schema"]}] if prev_files else []
-            )
-            schema = merge_spark_schemas(old, df.schema)
-            if schema != df.schema:
-                df = _align(df, schema)
-        data_dir, new_files = self._write_data(df)
-        props = self._post_write_props(data_dir, properties, properties_fn)
-        if props is None:
-            return None
-        new_group = {"files": new_files, "schema": json.dumps(df.schema.jsonValue())}
-        if delta:
-            new_group["delta"] = True
-        groups = None
-        if prev_groups is not None:
-            groups = prev_groups + [new_group]
-        elif delta:
-            groups = [new_group]
-        return self._commit(
-            prev_files + new_files,
-            json.dumps(schema.jsonValue()),
-            {**prev_props, **props},
-            groups=groups,
-        )
+        if head["version"] >= 0:
+            # nullability is no conflict: only names and types evolve
+            old = T.StructType.fromJson(json.loads(head["schema"]))
+            schema = merge_spark_schemas(_loose(old), _loose(df.schema))
+            df = _align(df, df.schema, schema)
+        return self._write(head, _groups(head), df, schema, properties, properties_fn, delta)
 
     def overwrite(
         self, df: DataFrame, properties: dict | None = None, properties_fn=None
     ) -> int | None:
-        data_dir, new_files = self._write_data(df)
-        props = self._post_write_props(data_dir, properties, properties_fn)
-        if props is None:
-            return None
-        prev_props = self.properties()
-        return self._commit(
-            new_files, json.dumps(df.schema.jsonValue()), {**prev_props, **props}
-        )
+        return self._write(self._head(), [], df, df.schema, properties, properties_fn)
 
     def upsert(
         self,
@@ -384,17 +381,17 @@ class ManagedTable:
         properties_fn=None,
     ) -> int | None:
         """MERGE the batch into the table (equality-delete semantics) and
-        commit data + state atomically."""
-        if not self.exists():
-            from olake_spark.operators.merge import latest_state
-
-            snap = latest_state(batch, key_cols, order_cols)
-            return self.overwrite(snap, properties, properties_fn=properties_fn)
-        # the merged plan reads the current snapshot's files while writing a
-        # fresh data dir; superseded files stay on disk (no vacuum), so the
-        # lazy plan is safe to execute directly inside the overwrite
-        merged = merge_upsert(self.read(), batch, key_cols, order_cols)
-        return self.overwrite(merged, properties, properties_fn=properties_fn)
+        commit data + state atomically, on the version the merge read."""
+        t = self._pin()
+        if t._head()["version"] < 0:
+            merged = latest_state(batch, key_cols, order_cols)
+        else:
+            # the merged plan reads the pinned snapshot's files while writing
+            # a fresh data dir; superseded files stay on disk until a
+            # retention sweep, so the lazy plan is safe to execute directly
+            # inside the overwrite
+            merged = merge_upsert(t.read(), batch, key_cols, order_cols)
+        return t.overwrite(merged, properties, properties_fn=properties_fn)
 
     def upsert_mor(
         self,
@@ -408,44 +405,37 @@ class ManagedTable:
         KEPT — they are the equality deletes) and append it as a delta file
         group. O(|batch|) write; ``read()`` resolves. The key/order columns
         pin to the table on first use — later calls must match."""
-        from olake_spark.operators.merge import latest_state
-
-        props = dict(properties or {})
-        existing = self.properties()
-        keys_json = json.dumps(key_cols)
-        order_json = json.dumps(order_cols)
-        if self.exists() and MOR_KEYS_PROP in existing:
-            if existing[MOR_KEYS_PROP] != keys_json or existing[MOR_ORDER_PROP] != order_json:
-                raise ValueError(
-                    "MOR key/order columns differ from the table's: "
-                    f"{existing[MOR_KEYS_PROP]}/{existing[MOR_ORDER_PROP]}"
-                )
-        props[MOR_KEYS_PROP] = keys_json
-        props[MOR_ORDER_PROP] = order_json
-        collapsed = latest_state(batch, key_cols, order_cols, keep_tombstones=True)
-        if not self.exists():
-            from olake_spark.operators.merge import not_deleted
-
-            # first batch: still no reason to keep tombstones in the base
-            return self.overwrite(
-                collapsed.filter(not_deleted()),
-                props,
-                properties_fn=properties_fn,
+        t = self._pin()
+        head = t._head()
+        props = {
+            **(properties or {}),
+            MOR_KEYS_PROP: json.dumps(key_cols),
+            MOR_ORDER_PROP: json.dumps(order_cols),
+        }
+        existing = head["properties"]
+        if MOR_KEYS_PROP in existing and any(
+            existing[p] != props[p] for p in (MOR_KEYS_PROP, MOR_ORDER_PROP)
+        ):
+            raise ValueError(
+                "MOR key/order columns differ from the table's: "
+                f"{existing[MOR_KEYS_PROP]}/{existing[MOR_ORDER_PROP]}"
             )
-        return self.append(collapsed, props, delta=True, properties_fn=properties_fn)
+        collapsed = latest_state(batch, key_cols, order_cols, keep_tombstones=True)
+        if head["version"] < 0:
+            # first batch: still no reason to keep tombstones in the base
+            return t.overwrite(
+                collapsed.filter(not_deleted()), props, properties_fn=properties_fn
+            )
+        return t.append(collapsed, props, delta=True, properties_fn=properties_fn)
 
     def compact(self, properties: dict | None = None) -> int:
         """Fold deltas into a fresh base snapshot (the amortized rewrite a
         steady-state MOR table schedules off the ingest path)."""
-        resolved = self.read()
-        return self.overwrite(resolved, properties)
+        t = self._pin()
+        return t.overwrite(t.read(), properties)
 
     def _manifest_files(self, version: int) -> set[str]:
-        m = self._manifest(version)
-        refs = set(m["files"])
-        for g in m.get("groups") or []:
-            refs.update(g["files"])
-        return refs
+        return set(self._manifest(version)["files"])
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Iceberg ``expireSnapshots`` parity: retire all but the newest

@@ -1,31 +1,32 @@
 """Streaming ingestion rollup — foreachBatch DELTA-commit of mergeable
 aggregate state into a persisted rollup table (Druid-style ingestion
-rollup on Structured Streaming, with a MOR-style delta/compact cycle).
+rollup on Structured Streaming, with a delta/compact cycle).
 
 Each micro-batch builds its own tiny per-key state
 (operators/incremental_agg.py: count / exact micro-unit sum / min / max /
-HLL registers) and commits ONLY that partial state as a delta file —
-per-batch write cost is proportional to the keys the BATCH touched, not
-to the total key cardinality. Readers resolve snapshot + deltas through
+HLL registers) and appends ONLY that partial state to a ``ManagedTable``
+(sinks/table.py) as a new file group — per-batch write cost is
+proportional to the keys the BATCH touched, not to the total key
+cardinality. Readers resolve the table's groups through
 ``agg_state_merge`` (the states are associative/commutative, so merge
-order is irrelevant); every ``compact_every`` deltas the fold folds them
-into a fresh full snapshot and prunes the superseded files — the same
-delta/compaction policy as the MOR table sink (sinks/table.py:302,340),
-with the read-amp bound the compaction-curve evidence in
-SCALE_EVIDENCE.json justifies.
+order is irrelevant); every ``compact_every`` deltas the fold overwrites
+the table with one merged snapshot and expires every older version, which
+deletes the superseded files — the read-amp bound the compaction-curve
+evidence in SCALE_EVIDENCE.json justifies.
 
 Exactly-once: the checkpoint makes batch delivery at-least-once with a
-stable ``batch_id`` on replay; the state commit records the latest
-applied batch_id and skips replays (idempotent merge), so a crash
-between the state write and the checkpoint advance cannot double-count.
-The pointer also records the CHECKPOINT IDENTITY (the streaming query id
-persisted in the checkpoint's metadata file): pointing a fresh
-checkpoint (whose batch ids restart at 0) at an existing state_dir is a
-loud error, never a silent skip-every-batch data loss.
+stable ``batch_id`` on replay; each commit records the latest applied
+batch_id as a table property in the same atomic manifest as the state,
+and replays are skipped (idempotent merge), so a crash between the state
+commit and the checkpoint advance cannot double-count. The properties
+also record the CHECKPOINT IDENTITY (the streaming query id persisted in
+the checkpoint's metadata file): pointing a fresh checkpoint (whose batch
+ids restart at 0) at an existing state_dir is a loud error, never a
+silent skip-every-batch data loss.
 
-Commit discipline: write data dirs first, atomically swap the pointer,
-then sweep unreferenced snap-*/delta-* dirs — a crash between swap and
-sweep leaves only orphans, which the next commit's sweep removes.
+Commits follow the table's rule: a write commits on the version it read
+or raises ``CommitConflict``; a crash before the manifest link leaves only
+orphan files, which ``ManagedTable.vacuum_orphans`` removes.
 
 At 100 TB: per-batch delta is |batch keys| rows regardless of batch
 volume; compaction merges ``compact_every`` |keys|-row frames, amortized
@@ -37,24 +38,19 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from olake_spark.operators import incremental_agg as ia
+from olake_spark.sinks.table import ManagedTable
 
 __all__ = ["stream_rollup", "read_rollup"]
 
-_PTR = "_CURRENT"
-
-
-def _read_ptr(state_dir: str) -> dict:
-    ptr = os.path.join(state_dir, _PTR)
-    if not os.path.exists(ptr):
-        return {}
-    with open(ptr) as fh:
-        return json.load(fh)
+BATCH_PROP = "olake.rollup.batch_id"
+CKPT_PROP = "olake.rollup.ckpt_id"
+KEYS_PROP = "olake.rollup.keys"
+PENDING_PROP = "olake.rollup.pending_deltas"
 
 
 def _ckpt_identity(checkpoint_dir: str) -> str:
@@ -70,44 +66,15 @@ def _ckpt_identity(checkpoint_dir: str) -> str:
         return os.path.abspath(checkpoint_dir)
 
 
-def _swap_ptr(state_dir: str, doc: dict) -> None:
-    tmp = os.path.join(state_dir, f".{_PTR}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    os.replace(tmp, os.path.join(state_dir, _PTR))  # atomic pointer swap
-
-
-def _sweep(state_dir: str, doc: dict) -> None:
-    """Remove snap-*/delta-* dirs the current pointer does not reference
-    (superseded snapshots, compacted deltas, crash orphans)."""
-    live = set(doc.get("deltas", []))
-    if doc.get("snapshot"):
-        live.add(doc["snapshot"])
-    for name in os.listdir(state_dir):
-        if (name.startswith("snap-") or name.startswith("delta-")) and (
-            name not in live
-        ):
-            shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-
-
 def read_rollup(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The current committed rollup state: snapshot + pending deltas
-    resolved through ``agg_state_merge`` (None before the first commit)."""
-    doc = _read_ptr(state_dir)
-    parts = ([doc["snapshot"]] if doc.get("snapshot") else []) + doc.get(
-        "deltas", []
-    )
-    if not parts:
+    """The current committed rollup state: every file group of the rollup
+    table resolved through ``agg_state_merge`` (None before the first
+    commit)."""
+    table = ManagedTable(spark, state_dir)
+    props = table.properties()
+    if not props:
         return None
-    frames = [
-        spark.read.parquet(os.path.join(state_dir, p)) for p in parts
-    ]
-    if len(frames) == 1:
-        return frames[0]
-    allp = frames[0]
-    for f in frames[1:]:
-        allp = allp.unionByName(f)
-    return ia.agg_state_merge(allp, doc["keys"])
+    return ia.agg_state_merge(table.read(), props[KEYS_PROP])
 
 
 def _fold_batch(
@@ -120,54 +87,32 @@ def _fold_batch(
     ckpt_id: str,
     compact_every: int,
 ) -> None:
-    """Commit one micro-batch's partial state (delta write, or compaction
+    """Commit one micro-batch's partial state (delta append, or compaction
     every ``compact_every`` deltas). Module-level so crash-replay and
     checkpoint-mismatch semantics are directly testable."""
-    doc = _read_ptr(state_dir)
-    if doc and doc.get("ckpt_id") != ckpt_id:
+    table = ManagedTable(batch.sparkSession, state_dir)
+    props = table.properties()
+    if props and props[CKPT_PROP] != ckpt_id:
         raise ValueError(
             f"stream_rollup: state_dir {state_dir!r} was written by checkpoint "
-            f"{doc.get('ckpt_id')!r} but this stream runs from {ckpt_id!r} — "
+            f"{props[CKPT_PROP]!r} but this stream runs from {ckpt_id!r} — "
             "batch ids are incomparable across checkpoints; refusing to "
             "silently skip batches. Use the original checkpoint or a fresh "
             "state_dir."
         )
-    if batch_id <= doc.get("batch_id", -1):
+    if batch_id <= props.get(BATCH_PROP, -1):
         return  # replay after crash-before-checkpoint: already applied
-    spark = batch.sparkSession
     delta = ia.agg_state(batch, keys, value_col, distinct_col)
-    deltas = list(doc.get("deltas", []))
-    snapshot = doc.get("snapshot")
-    if len(deltas) + 1 >= compact_every:
-        # compact: fold snapshot + deltas + this batch into a fresh snapshot
-        parts = ([snapshot] if snapshot else []) + deltas
-        merged = delta
-        for p in parts:
-            merged = merged.unionByName(
-                spark.read.parquet(os.path.join(state_dir, p))
-            )
-        merged = ia.agg_state_merge(merged, keys)
-        name = f"snap-{batch_id}"
-        merged.write.mode("overwrite").parquet(os.path.join(state_dir, name))
-        new_doc = {
-            "snapshot": name,
-            "deltas": [],
-            "batch_id": batch_id,
-            "keys": list(keys),
-            "ckpt_id": ckpt_id,
-        }
-    else:
-        name = f"delta-{batch_id}"
-        delta.write.mode("overwrite").parquet(os.path.join(state_dir, name))
-        new_doc = {
-            "snapshot": snapshot,
-            "deltas": deltas + [name],
-            "batch_id": batch_id,
-            "keys": list(keys),
-            "ckpt_id": ckpt_id,
-        }
-    _swap_ptr(state_dir, new_doc)
-    _sweep(state_dir, new_doc)
+    pending = props.get(PENDING_PROP, 0) + 1
+    commit = {BATCH_PROP: batch_id, CKPT_PROP: ckpt_id, KEYS_PROP: list(keys)}
+    if pending < compact_every:
+        table.append(delta, {**commit, PENDING_PROP: pending})
+        return
+    # compact: fold the state and this batch into one snapshot, then retire
+    # every older version and the files only they referenced
+    state = table.read().unionByName(delta) if props else delta
+    table.overwrite(ia.agg_state_merge(state, keys), {**commit, PENDING_PROP: 0})
+    table.expire_snapshots(keep_last=1)
 
 
 def stream_rollup(
@@ -190,7 +135,6 @@ def stream_rollup(
     replayed batches are skipped by batch_id (idempotent); a DIFFERENT
     checkpoint against the same state_dir fails loudly. Returns the
     finished StreamingQuery."""
-    os.makedirs(state_dir, exist_ok=True)
 
     def fold(batch: DataFrame, batch_id: int):
         _fold_batch(

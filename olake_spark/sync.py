@@ -26,7 +26,6 @@ from olake_spark.functions.projection import apply_projection
 from olake_spark.plans.state import SyncState, cursor_to_json
 from olake_spark.plans.stream import Catalog, ConfiguredStream, SyncMode
 from olake_spark.sinks.table import ManagedTable
-from olake_spark.stats import SyncStats
 from olake_spark.sources.files import flatten_complex, normalize_ns_timestamps, spread
 from olake_spark.typesys.naming import reformat_all
 
@@ -100,13 +99,10 @@ def sync_stream(
     df: DataFrame,
     dest_dir: str,
     state: SyncState,
-    stats: "SyncStats | None" = None,
 ) -> SyncResult:
     mode = cs.stream.sync_mode
     table = _dest_table(spark, dest_dir, cs)
     name = cs.stream.name
-    if stats is not None:
-        df = stats.observe(df, f"{name}_read")
 
     from pyspark.sql import Observation
 
@@ -122,7 +118,7 @@ def sync_stream(
     # incremental: cursor column = first available cursor field
     cursor_col = cs.stream.available_cursor_fields[0]
     # 2PC reconcile: a committed cursor in the table wins over local state
-    committed = table.properties().get(CURSOR_PROP) if table.exists() else None
+    committed = table.properties().get(CURSOR_PROP)
     state.reconcile(name, cursor_col, committed)
     last = state.get_cursor(name, cursor_col)
 

@@ -108,17 +108,66 @@ def test_managed_table_upsert_exactly_once(spark, tmp_path, changelog):
     assert got == _oracle(changelog + extra)
 
 
-def test_commit_conflict(spark, tmp_path, monkeypatch):
+def test_commit_conflict(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t3"))
     df = spark.createDataFrame([(1, "a")], "id long, s string")
     t.append(df)  # v0
-    m = t._manifest()
-    # freeze this writer's view at [0], then let a "racer" commit v1 first
-    monkeypatch.setattr(t, "_versions", lambda: [0])
+    # two writers commit on the same head: the first link takes v1
+    head = t._head()
     racer = ManagedTable(spark, str(tmp_path / "t3"))
-    racer._commit(m["files"], m["schema"], {})  # v1 taken
+    racer._commit(head, [], df.schema, {})
     with pytest.raises(CommitConflict):
-        t._commit(m["files"], m["schema"], {})
+        t._commit(head, [], df.schema, {})
+    assert t.versions() == [0, 1]
+
+
+def _row(v: str, k: int):
+    return [(1000 + k, "u", k, v)]
+
+
+@pytest.mark.parametrize("write", ["append", "upsert", "upsert_mor", "compact"])
+def test_racing_write_raises_and_keeps_winner(spark, tmp_path, monkeypatch, write):
+    """Writer A reads the head, and writer B commits while A writes its
+    data: A's commit must raise CommitConflict instead of publishing a
+    version built on the head B replaced, and B's rows stay readable."""
+    path = str(tmp_path / write)
+    mor = write in ("upsert_mor", "compact")
+    base = spark.createDataFrame(_row("base", 1), SCHEMA)
+    if mor:
+        ManagedTable(spark, path).upsert_mor(base, ["k"], ["lsn"])
+        ManagedTable(spark, path).upsert_mor(
+            spark.createDataFrame(_row("delta", 2), SCHEMA), ["k"], ["lsn"]
+        )
+    else:
+        ManagedTable(spark, path).append(base)
+
+    def racer_commits():
+        racer = ManagedTable(spark, path)
+        racer_rows = spark.createDataFrame(_row("racer", 3), SCHEMA)
+        if mor:
+            racer.upsert_mor(racer_rows, ["k"], ["lsn"])
+        else:
+            racer.append(racer_rows)
+
+    a = ManagedTable(spark, path)
+    write_data = a._write_data
+
+    def write_then_race(df):
+        out = write_data(df)
+        racer_commits()
+        return out
+
+    monkeypatch.setattr(a, "_write_data", write_then_race)
+    writer = spark.createDataFrame(_row("writer", 4), SCHEMA)
+    with pytest.raises(CommitConflict):
+        if write == "append":
+            a.append(writer)
+        elif write == "compact":
+            a.compact()
+        else:
+            getattr(a, write)(writer, ["k"], ["lsn"])
+    got = {r["v"] for r in ManagedTable(spark, path).read().collect()}
+    assert got == ({"base", "delta", "racer"} if mor else {"base", "racer"})
 
 
 def test_managed_table_mor_matches_cow(spark, tmp_path, changelog):

@@ -8,6 +8,7 @@ IcebergTableOperator.java:112-130 (applyFieldAddition).
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olake_spark.sinks.table import ManagedTable
@@ -62,6 +63,16 @@ def test_same_schema_append_keeps_flat_manifest(spark, tbl):
     tbl.append(df)
     tbl.append(spark.createDataFrame([(2,)], "k int"))
     assert {r["k"] for r in tbl.read().collect()} == {1, 2}
+
+
+def test_nullability_is_no_type_conflict(spark, tbl):
+    """Two appends whose array column differs only in element
+    nullability keep the array type; it is not widened to string."""
+    tbl.append(spark.range(1).select(F.array(F.lit(1)).alias("a")))
+    tbl.append(spark.range(1).select(F.array(F.lit(None).cast("int")).alias("a")))
+    df = tbl.read()
+    assert dict(df.dtypes)["a"] == "array<int>"
+    assert {tuple(r["a"]) for r in df.collect()} == {(1,), (None,)}
 
 
 def test_merge_schemas_is_order_stable(spark):

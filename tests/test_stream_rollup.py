@@ -1,17 +1,20 @@
 """Streaming ingestion rollup: delta-commit path == batch recompute,
 resume picks up only new files, crash-replayed batch ids are idempotent,
-fresh-checkpoint reuse of a state_dir fails loudly, compaction prunes."""
+fresh-checkpoint reuse of a state_dir fails loudly, compaction prunes.
+The state lives in a ManagedTable; assertions read its manifest."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 from pyspark.sql import types as T
 
 from olake_spark.operators import incremental_agg as ia
+from olake_spark.sinks.table import ManagedTable
 from olake_spark.streaming.rollup import (
+    BATCH_PROP,
+    PENDING_PROP,
     _fold_batch,
     read_rollup,
     stream_rollup,
@@ -43,8 +46,11 @@ def _state_rows(state):
     )
 
 
-def _ptr(state):
-    return json.load(open(os.path.join(state, "_CURRENT")))
+def _newest_group_rows(spark, state):
+    """Rows in the file group the rollup table's last commit added."""
+    m = ManagedTable(spark, state)._manifest()
+    files = m["groups"][-1]["files"] if "groups" in m else m["files"]
+    return spark.read.parquet(*files).count()
 
 
 def _case_rollup_matches_batch_and_resumes(spark, tmp_path):
@@ -58,8 +64,9 @@ def _case_rollup_matches_batch_and_resumes(spark, tmp_path):
         max_files_per_trigger=1,
     )
     # two batches, compact_every=16 -> both committed as deltas
-    doc = _ptr(state)
-    assert doc["snapshot"] is None and len(doc["deltas"]) == 2
+    t = ManagedTable(spark, state)
+    assert t.properties()[PENDING_PROP] == 2
+    assert len(t._manifest()["groups"]) == 2
     got = read_rollup(spark, state)
     full = ia.agg_state(
         spark.createDataFrame(_rows(0, 350), SCHEMA), ["g"], "value", "uid"
@@ -86,14 +93,16 @@ def _case_rollup_compaction_prunes_and_matches(spark, tmp_path):
         spark, f"{src}/*", SCHEMA, ["g"], "value", "uid", state, ckpt,
         max_files_per_trigger=1, compact_every=2,
     )
-    # batches 0(delta) 1(compact->snap) 2(delta); superseded dirs swept
-    doc = _ptr(state)
-    assert doc["snapshot"] == "snap-1" and doc["deltas"] == ["delta-2"]
-    on_disk = {
-        n for n in os.listdir(state)
-        if n.startswith("snap-") or n.startswith("delta-")
-    }
-    assert on_disk == {"snap-1", "delta-2"}
+    # batches 0(delta) 1(compact->snapshot) 2(delta); superseded versions
+    # and their files are gone
+    t = ManagedTable(spark, state)
+    assert t.versions() == [1, 2]
+    assert t.properties()[PENDING_PROP] == 1
+    groups = t._manifest()["groups"]
+    assert len(groups) == 2
+    data = os.path.join(state, "data")
+    on_disk = {os.path.join(data, d) for d in os.listdir(data)}
+    assert on_disk == {os.path.dirname(g["files"][0]) for g in groups}
     full = ia.agg_state(
         spark.createDataFrame(_rows(0, 300), SCHEMA), ["g"], "value", "uid"
     )
@@ -110,9 +119,9 @@ def test_stream_rollup_delta_write_cost_tracks_batch_keys(spark, tmp_path):
     )
     narrow = spark.createDataFrame([("k0", 2.0, 7), ("k1", 3.0, 8)], SCHEMA)
     _fold_batch(wide, 0, state, ["g"], "value", "uid", "ck", 16)
+    assert _newest_group_rows(spark, state) == 50
     _fold_batch(narrow, 1, state, ["g"], "value", "uid", "ck", 16)
-    assert spark.read.parquet(os.path.join(state, "delta-0")).count() == 50
-    assert spark.read.parquet(os.path.join(state, "delta-1")).count() == 2
+    assert _newest_group_rows(spark, state) == 2
     merged = read_rollup(spark, state)
     full = ia.agg_state(wide.unionByName(narrow), ["g"], "value", "uid")
     assert _state_rows(merged) == _state_rows(full)
@@ -127,10 +136,12 @@ def test_stream_rollup_replayed_batch_is_skipped(spark, tmp_path):
     b0 = spark.createDataFrame(_rows(0, 100), SCHEMA)
     _fold_batch(b0, 0, state, ["g"], "value", "uid", "ck", 16)
     before = _state_rows(read_rollup(spark, state))
-    applied = _ptr(state)["batch_id"]
+    t = ManagedTable(spark, state)
+    applied = t.properties()[BATCH_PROP]
 
     _fold_batch(b0, 0, state, ["g"], "value", "uid", "ck", 16)  # replay
-    assert _ptr(state)["batch_id"] == applied
+    assert t.versions() == [0]
+    assert t.properties()[BATCH_PROP] == applied
     assert _state_rows(read_rollup(spark, state)) == before
 
 
